@@ -27,6 +27,35 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED closure only, plan byte-identical (optimized plans diffed
+    # for all 276 keys): the seven per-format decoder UDF wrappers are
+    # one multimodal.blob_stats_udf over the BLOB_STATS kernel table,
+    # which media_dispatch_stats also reads; the two checkpoint
+    # lifecycles are one module (ckpt.checkpoint/release/adopt), used by
+    # the CC loop, index_maintenance, the quantile family and the recall
+    # evals; a non-positive spark.tripgogo.stream.statePartitions now
+    # falls back to 8 (the stream keys' shared closure). Same UDF names,
+    # kernels and results; source-closure and index-leaf digests move.
+    # Keys also listed further down keep this, their first, position.
+    "ann_recall_eval", "approx_quantiles", "ccnet_ppl_buckets",
+    "dedup_cluster_examples", "dedup_components", "dedup_keep_best",
+    "index_compact", "ivfpq_recall_eval", "media_decode_dispatch",
+    "media_quality_gate", "media_quality_gate_multiformat",
+    "median_agg", "median_impute", "multimodal_bmp_rle_stats",
+    "multimodal_bmp_stats", "multimodal_features",
+    "multimodal_gif_interlaced_stats", "multimodal_gif_stats",
+    "multimodal_jpeg_411_stats", "multimodal_jpeg_420_stats",
+    "multimodal_jpeg_422_stats", "multimodal_jpeg_color_stats",
+    "multimodal_jpeg_progressive_stats", "multimodal_jpeg_stats",
+    "multimodal_png_interlaced_stats", "multimodal_png_stats",
+    "multimodal_wav_stats", "near_dup_cluster_stats",
+    "near_dup_cross_source", "percentile_cont_exact", "quality_gate",
+    "quartile_agg", "refresh_compact_cycle", "stream_dedup",
+    "stream_embed", "stream_event_alert", "stream_hop_window",
+    "stream_media_decode", "stream_media_dispatch",
+    "stream_quality_filter", "stream_session_window",
+    "stream_sessionize", "stream_static_join", "stream_stream_join",
+    "stream_window_agg", "value_outlier_iqr",
     # ROUND 17. Head = keys whose plan/oracle/source closure changed
     # this round (drift gate: tests/test_plan_manifest.py), then the
     # stale-row rotation (oldest first per tools/rotation.py).

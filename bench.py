@@ -226,7 +226,31 @@ HEADLINE_R15 = {
 }
 
 
+#: every bench key -> its terminal action
+ACTIONS = (HEADLINE | HEADLINE_R2 | HEADLINE_R3 | HEADLINE_R4
+           | HEADLINE_R5 | HEADLINE_R7 | HEADLINE_R8
+           | HEADLINE_R9 | HEADLINE_R10 | HEADLINE_R11
+           | HEADLINE_R12 | HEADLINE_R13 | HEADLINE_R14
+           | HEADLINE_R15)
+
+
+def warmup(spark, sf_dir: str = SF_DIR) -> None:
+    """Touch the fact table + codegen path once, and fork the Python
+    UDF workers on every core (pandas import is ~0.5s per worker; that
+    startup is session overhead, not query cost)."""
+    from pyspark.sql import functions as F
+
+    from tripgogo_vector_search_spark.functions.kernels import simhash_udf
+    from tripgogo_vector_search_spark.plans.registry import QUERIES
+    QUERIES["knn_topk"](spark, sf_dir).collect()
+    (spark.range(256).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+     .select(simhash_udf(F.lit("warm up"))).write
+     .format("noop").mode("overwrite").save())
+
+
 def main() -> None:
+    from pyspark.sql import functions as F
+
     from tripgogo_vector_search_spark.plans.registry import QUERIES
     from tripgogo_vector_search_spark.session import get_spark
 
@@ -235,16 +259,7 @@ def main() -> None:
     # policy-allowed aggregate-scale frames) otherwise flood the
     # captured tail of every bench run
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup: touch the fact table + codegen path once, and fork the
-    # Python UDF workers on every core (pandas import is ~0.5s per
-    # worker; that startup is session overhead, not query cost)
-    QUERIES["knn_topk"](spark, SF_DIR).collect()
-    from pyspark.sql import functions as F
-
-    from tripgogo_vector_search_spark.functions.kernels import simhash_udf
-    (spark.range(256).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-     .select(simhash_udf(F.lit("warm up"))).write
-     .format("noop").mode("overwrite").save())
+    warmup(spark)
 
     def run_once(name: str, action: str) -> float:
         t0 = time.perf_counter()
@@ -284,11 +299,7 @@ def main() -> None:
     # min-of-2 let through; a third sample of EVERYTHING costs ~40 s
     # and makes round-over-round deltas attributable to plans, not
     # co-tenant noise (single-pass numbers on a shared host swing 3-5x)
-    all_queries = (HEADLINE | HEADLINE_R2 | HEADLINE_R3 | HEADLINE_R4
-                   | HEADLINE_R5 | HEADLINE_R7 | HEADLINE_R8
-                   | HEADLINE_R9 | HEADLINE_R10 | HEADLINE_R11
-                   | HEADLINE_R12 | HEADLINE_R13 | HEADLINE_R14
-                   | HEADLINE_R15)
+    all_queries = ACTIONS
     timings: dict[str, float] = {}
     noise = noise_floor_once()
     io_noise = io_floor_once()

@@ -100,6 +100,37 @@ def test_no_unqueued_plan_drift(spark, plans):
     assert set(got) == set(registry.QUERIES)
 
 
+def test_session_width_token_is_host_independent():
+    """widen() writes the host's defaultParallelism into `Repartition
+    N, true`; a shuffle_width pin writes the shuffle conf. Both print as
+    one token, so a 4-core and an 8-core session fingerprint alike (the
+    pin must not change meaning on the host where the two are equal),
+    while every other width stays significant."""
+    from tools.plan_manifest import _normalize
+
+    assert (_normalize("Repartition 4, true", frozenset({4, 8}))
+            == _normalize("Repartition 8, true", frozenset({4, 8}))
+            == _normalize("Repartition 8, true", frozenset({8}))
+            == "Repartition <width>, true")
+    assert _normalize("Repartition 16, true", frozenset({4, 8})) \
+        == "Repartition 16, true"
+    assert _normalize("RepartitionByExpression [k#1], 8",
+                      frozenset({8})) == "RepartitionByExpression [k#], 8"
+
+
+def test_real_width_change_still_counts_as_drift(spark, monkeypatch):
+    """A widen() that stops following the session (here: one wider than
+    both session widths) moves the key's fingerprint."""
+    from tools.plan_manifest import fingerprint_one, session_widths
+    from tripgogo_vector_search_spark import partitioning
+
+    before = fingerprint_one(spark, "corpus_filter")
+    real, other = partitioning.widen, max(session_widths(spark)) + 1
+    monkeypatch.setattr(partitioning, "widen",
+                        lambda df, target=None: real(df, target or other))
+    assert fingerprint_one(spark, "corpus_filter") != before
+
+
 # Source-level markers that define a Python kernel. Distinct from
 # tools.plan_manifest._PLAN_PY_MARKERS, which match the PLAN text.
 _KERNEL_SRC_MARKERS = ("InPandas(", "pandas_udf", "mapInArrow", "@udtf",

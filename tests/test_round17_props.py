@@ -115,6 +115,20 @@ def test_scoped_checkpoints_released_on_superseding_build(spark):
     gc.collect()
 
 
+def test_checkpoint_release_failure_is_logged(spark, caplog):
+    """Release stays best-effort but is never silent: a frame with no
+    checkpoint RDD behind it (a plain Range plan) cannot be released,
+    and the failure surfaces as a warning naming the exception class
+    instead of an exception or nothing."""
+    import logging
+
+    with caplog.at_level(logging.WARNING, logger=CK.__name__):
+        CK.release(spark.range(3))
+    (rec,) = [r for r in caplog.records if r.name == CK.__name__]
+    assert rec.levelno == logging.WARNING
+    assert "checkpoint release failed (Py4J" in rec.getMessage()
+
+
 def test_quality_gate_checkpoint_released_on_rebuild(spark):
     """The registry key end-to-end: two bench-style reps of
     quality_gate leave only the LAST build's checkpoint blocks
@@ -177,7 +191,10 @@ def test_state_partitions_resolve_from_conf(spark):
             self._v = value
 
         def get(self, key, default=None):
-            return self._v if self._v is not None else default
+            if key == "spark.tripgogo.stream.statePartitions" \
+                    and self._v is not None:
+                return self._v
+            return default
 
     class _Spark:
         def __init__(self, value):
@@ -186,20 +203,20 @@ def test_state_partitions_resolve_from_conf(spark):
     assert default_state_partitions(_Spark(None)) == 8
     assert default_state_partitions(_Spark("24")) == 24
     assert default_state_partitions(_Spark("auto")) == 8
+    assert default_state_partitions(_Spark("0")) == 8
+    assert default_state_partitions(_Spark("-4")) == 8
     assert default_state_partitions(spark) == 8  # real session, unset
 
 
-def test_dispatch_audio_fields_equal_wav_kernel(spark):
-    """ADVICE r16 #3: media_dispatch_stats(audio_fields=True) must
-    report the SAME (sample_rate, n_samples) as the dedicated
-    decode_wav_stats kernel over a hostile mixed corpus (every format,
-    a valid-magic/garbage-body member per format, unroutable payloads),
-    and NULL both fields on every non-WAV row — the direct parity the
-    r16 test only covered via the gate's end-to-end oracle."""
+@pytest.fixture(scope="module")
+def hostile_media(spark):
+    """Mixed corpus for the decoder tests: every synthesized format, a
+    valid-magic/garbage-body member per magic, foreign bytes, an empty
+    payload and NULL. Returns (blobs, (media_id, content) frame) with
+    media_id = index into blobs."""
     import random
 
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from tripgogo_vector_search_spark.operators import multimodal as M
     from tripgogo_vector_search_spark.operators.jpeg import (
@@ -214,7 +231,8 @@ def test_dispatch_audio_fields_equal_wav_kernel(spark):
     blobs = []
     for synth in (M.synth_png_corpus, M.synth_gif_corpus,
                   synth_jpeg_corpus, M.synth_bmp_corpus,
-                  M.synth_wav_corpus):
+                  M.synth_wav_corpus, M.synth_bmp_rle_corpus,
+                  M.synth_gif_interlaced_corpus):
         blobs.extend(bytes(r.content) if r.content is not None else None
                      for r in synth(docs).collect())
     blobs += [b"\x89PNG\r\n\x1a\n" + bytes(rng.randrange(256)
@@ -228,6 +246,21 @@ def test_dispatch_audio_fields_equal_wav_kernel(spark):
     media = spark.createDataFrame(
         pd.DataFrame({"media_id": list(range(len(blobs))),
                       "content": blobs}))
+    return blobs, media
+
+
+def test_dispatch_audio_fields_equal_wav_kernel(hostile_media):
+    """ADVICE r16 #3: media_dispatch_stats(audio_fields=True) must
+    report the SAME (sample_rate, n_samples) as the dedicated
+    decode_wav_stats kernel over a hostile mixed corpus (every format,
+    a valid-magic/garbage-body member per format, unroutable payloads),
+    and NULL both fields on every non-WAV row — the direct parity the
+    r16 test only covered via the gate's end-to-end oracle."""
+    from pyspark.sql import functions as F
+
+    from tripgogo_vector_search_spark.operators import multimodal as M
+
+    _blobs, media = hostile_media
     got = {r.media_id: (r.kind, r.sample_rate, r.n_samples)
            for r in M.media_dispatch_stats(
                media, audio_fields=True).collect()}
@@ -248,3 +281,60 @@ def test_dispatch_audio_fields_equal_wav_kernel(spark):
     # the hostile RIFF member must be present and undecoded
     assert any(k == "audio/wav" and r is None
                for (k, r, _) in got.values())
+
+
+_SPECS = {"wav": "parse_wav", "bmp": "parse_bmp",
+          "bmp_rle": "parse_bmp_rle", "png": "parse_png",
+          "gif": "parse_gif", "gif_rowpos": "parse_gif_rowpos",
+          "jpeg": "parse_jpeg"}
+
+
+@pytest.mark.parametrize("fmt", sorted(_SPECS))
+def test_decoder_matches_spec_on_hostile_corpus(hostile_media, fmt):
+    """Every per-format decode_*_stats runs through the one shared
+    blob_stats_udf wrapper: over the hostile mixed corpus it emits one
+    row per input, an all-NULL struct wherever the plain-Python spec
+    parser rejects the payload (foreign formats, garbage bodies, b"",
+    NULL) and exactly the spec's values wherever it accepts."""
+    from tripgogo_vector_search_spark.operators import jpeg as J
+    from tripgogo_vector_search_spark.operators import multimodal as M
+
+    mod = J if fmt == "jpeg" else M
+    decode = getattr(mod, f"decode_{fmt}_stats")
+    parse = getattr(mod, _SPECS[fmt])
+    blobs, media = hostile_media
+    rows = decode(media).collect()
+    assert sorted(r.media_id for r in rows) == list(range(len(blobs)))
+    accepted = 0
+    for r in rows:
+        want = parse(blobs[r.media_id])
+        got = tuple(r)[1:]
+        if want is None:
+            assert got == (None,) * len(got), (fmt, r.media_id)
+        else:
+            accepted += 1
+            assert got == tuple(want), (fmt, r.media_id)
+    assert accepted  # the format's own synthesized members decode
+
+
+def test_bench_floors_without_floor_fields(tmp_path, monkeypatch, capsys):
+    """ADVICE r17: samples that carry no noise/io floor (older or
+    hand-listed files) yield null floors and a warning naming each
+    missing field, not a ValueError from min() of nothing."""
+    import json
+    import sys
+
+    from tools import bench_floors
+
+    sample = tmp_path / "old_sample.json"
+    sample.write_text(json.dumps({"queries": {"a": 2.0}}))
+    (tmp_path / "bench_samples").mkdir()
+    monkeypatch.setattr(bench_floors, "REPO", str(tmp_path))
+    monkeypatch.setattr(sys, "argv", ["bench_floors.py", "rX", str(sample)])
+    bench_floors.main()
+    out = json.loads((tmp_path / "bench_samples" / "rX_floors.json")
+                     .read_text())
+    assert out["noise_floor_sec"] is None and out["io_floor_sec"] is None
+    assert out["floors"] == {"a": 2.0}
+    err = capsys.readouterr().err
+    assert "noise_floor_sec" in err and "io_floor_sec" in err

@@ -20,6 +20,16 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _floor(field: str, values: list) -> float | None:
+    """Min over the samples that carry ``field``; null and a warning
+    when none does (older or hand-listed samples)."""
+    present = [v for v in values if v is not None]
+    if not present:
+        print(f"warning: no sample carries {field}; writing null",
+              file=sys.stderr)
+    return min(present, default=None)
+
+
 def main() -> None:
     rnd = sys.argv[1] if len(sys.argv) > 1 else "r17"
     paths = sys.argv[2:] or sorted(
@@ -41,8 +51,8 @@ def main() -> None:
         "round": rnd,
         "n_samples": len(paths),
         "samples": [os.path.basename(p) for p in paths],
-        "noise_floor_sec": min(n for n in noise if n is not None),
-        "io_floor_sec": min(n for n in io if n is not None),
+        "noise_floor_sec": _floor("noise_floor_sec", noise),
+        "io_floor_sec": _floor("io_floor_sec", io),
         "total_of_floors": round(sum(floors.values()), 3),
         "floors": {k: floors[k] for k in sorted(floors)},
     }

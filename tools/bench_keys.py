@@ -1,11 +1,13 @@
-"""Round-16 measurement harness: time a subset of bench keys (min-of-N,
-same actions as bench.py) and/or capture formatted plans to plans/r16/.
+"""Key measurement harness: time a subset of bench keys (min-of-N,
+same actions as bench.py) and/or capture formatted plans to
+plans/<round>/.
 
-    python tools/r16_bench.py --keys a,b,c [--n 3] [--sf DIR] [--plans before]
-    python tools/r16_bench.py --all [--n 3]            # every bench.py key
+    python tools/bench_keys.py --round r18 --keys a,b,c [--n 3] [--sf DIR]
+                               [--plans before]
+    python tools/bench_keys.py --round r18 --all [--n 3]  # every bench.py key
 
 Prints one JSON line {key: floor_sec} so runs can be diffed. Plans land
-at plans/r16/<key>_<tag>.txt when --plans <tag> is given.
+at plans/<round>/<key>_<tag>.txt when --plans <tag> is given.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--round", required=True,
+                    help="round tag, e.g. r18: plans go to plans/<round>/")
     ap.add_argument("--keys", default="")
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--n", type=int, default=3)
@@ -38,11 +42,7 @@ def main() -> None:
     from tripgogo_vector_search_spark.plans.registry import QUERIES
     from tripgogo_vector_search_spark.session import get_spark
 
-    actions: dict[str, str] = {}
-    for gname in dir(benchmod):
-        if gname.startswith("HEADLINE"):
-            actions.update(getattr(benchmod, gname))
-
+    actions = benchmod.ACTIONS
     if args.all:
         keys = list(actions)
     else:
@@ -51,28 +51,22 @@ def main() -> None:
         if k not in QUERIES:
             raise SystemExit(f"unknown query {k!r}")
 
-    spark = get_spark("r16-bench")
+    spark = get_spark(f"{args.round}-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warmup as bench.py
-    QUERIES["knn_topk"](spark, args.sf).collect()
-    from pyspark.sql import functions as F
-
-    from tripgogo_vector_search_spark.functions.kernels import simhash_udf
-    (spark.range(256)
-     .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-     .select(simhash_udf(F.lit("warm up"))).write
-     .format("noop").mode("overwrite").save())
+    benchmod.warmup(spark, args.sf)
 
     if args.plans:
-        os.makedirs("plans/r16", exist_ok=True)
+        plan_dir = os.path.join("plans", args.round)
+        os.makedirs(plan_dir, exist_ok=True)
         for k in keys:
             df = QUERIES[k](spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(f"plans/r16/{k}_{args.plans}.txt", "w") as fh:
+            dest = os.path.join(plan_dir, f"{k}_{args.plans}.txt")
+            with open(dest, "w") as fh:
                 fh.write(buf.getvalue())
-            print(f"plan -> plans/r16/{k}_{args.plans}.txt", file=sys.stderr)
+            print(f"plan -> {dest}", file=sys.stderr)
 
     if args.no_time:
         return
@@ -81,7 +75,8 @@ def main() -> None:
     for rep in range(args.n):
         for k in keys:
             action = actions.get(k, "noop")
-            spark.sparkContext.setJobDescription(f"r16 {k} rep{rep}")
+            spark.sparkContext.setJobDescription(
+                f"{args.round} {k} rep{rep}")
             t0 = time.perf_counter()
             df = QUERIES[k](spark, args.sf)
             if action == "collect":

@@ -9,8 +9,9 @@ that drift a test failure:
 
 * ``fingerprint_all(spark)`` computes, for every registry key, a sha256
   over the NORMALIZED optimized logical plan at the sf0.001 fixture
-  (expression ids ``#N``, filesystem paths, and cache-generation hashes
-  stripped — everything else, operator tree included, is significant).
+  (expression ids ``#N``, filesystem paths, cache-generation hashes and
+  session-derived round-robin widths stripped — everything else,
+  operator tree included, is significant).
   ``stream_*`` keys would execute a real micro-batch stream just to
   build their plan, so they are fingerprinted at source level instead:
   the transitive module-level source closure reachable from the
@@ -69,9 +70,26 @@ _NORMALIZERS = [
 ]
 
 
-def _normalize(plan: str) -> str:
+# Round-robin widths that follow the session: partitioning.widen and
+# the fuzzy probe side write sparkContext.defaultParallelism (the host's
+# core count), a shuffle_width pin writes spark.sql.shuffle.partitions
+# (8 in the gate's session). Where the two are equal the plan text
+# cannot say which one a repartition used, so both print as one token
+# on every host; any other width stays significant.
+_RR_WIDTH = re.compile(r"\bRepartition (\d+), true")
+
+
+def session_widths(spark) -> frozenset[int]:
+    from tripgogo_vector_search_spark.partitioning import shuffle_width
+    return frozenset({spark.sparkContext.defaultParallelism,
+                      shuffle_width(spark)})
+
+
+def _normalize(plan: str, widths: frozenset[int] = frozenset()) -> str:
     for rx, repl in _NORMALIZERS:
         plan = rx.sub(repl, plan)
+    plan = _RR_WIDTH.sub(lambda m: "Repartition <width>, true"
+                         if int(m.group(1)) in widths else m.group(0), plan)
     out = []
     for ln in plan.splitlines():
         # RewriteDistinctAggregates numbers its gid groups (and orders
@@ -156,7 +174,8 @@ def plan_text(spark, name: str, sf_dir: str = SF_SMOKE) -> str | None:
         return None
     registry._TOUCHED_INDEXES.clear()
     df = registry.QUERIES[name](spark, sf_dir)
-    text = _normalize(df._jdf.queryExecution().optimizedPlan().toString())
+    text = _normalize(df._jdf.queryExecution().optimizedPlan().toString(),
+                      session_widths(spark))
     if registry._TOUCHED_INDEXES:
         text += "\nINDEXES " + " ".join(sorted(registry._TOUCHED_INDEXES))
     return text
@@ -209,9 +228,8 @@ def load_manifest() -> dict[str, str]:
 
 
 def _session():
-    # Pin the exact shape conftest uses: plan fingerprints include
-    # parallelism-derived constants (partitioning.widen), so manifest
-    # generation and the test must agree on the session config.
+    # Pin the exact shape conftest uses: manifest generation and the
+    # test must agree on the session config.
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from tripgogo_vector_search_spark.session import get_spark
     return get_spark("plan-manifest", shuffle_partitions=8)

@@ -27,43 +27,21 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=2)
     args = ap.parse_args()
 
+    # the engine's own session (session.get_spark) plus an uncompressed
+    # event log, passed as launch confs
     evdir = tempfile.mkdtemp(prefix="r16ev_")
-    os.environ["SPARK_GRAFT_EVLOG"] = evdir
-
-    from pyspark.sql import SparkSession
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName("r16-profile")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.dir", evdir)
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEM", "16g"))
-             .getOrCreate())
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        "--conf spark.eventLog.compress=false "
+        f"--conf spark.eventLog.dir={evdir} pyspark-shell")
+    from tripgogo_vector_search_spark.session import get_spark
+    spark = get_spark("r16-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench as benchmod
     from tripgogo_vector_search_spark.plans.registry import QUERIES
-    actions: dict[str, str] = {}
-    for gname in dir(benchmod):
-        if gname.startswith("HEADLINE"):
-            actions.update(getattr(benchmod, gname))
-    action = actions.get(args.key, "noop")
-
-    # warmup (same as bench.py)
-    QUERIES["knn_topk"](spark, args.sf).collect()
-    from pyspark.sql import functions as F
-    from tripgogo_vector_search_spark.functions.kernels import simhash_udf
-    (spark.range(256).repartition(cpus)
-     .select(simhash_udf(F.lit("warm up"))).write
-     .format("noop").mode("overwrite").save())
+    actions = benchmod.ACTIONS
+    benchmod.warmup(spark, args.sf)
 
     marks = []
     for key in args.key.split(","):

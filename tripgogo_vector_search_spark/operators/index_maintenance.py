@@ -56,7 +56,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import _checkpoint, _release_checkpoint
+from ..ckpt import checkpoint, release
 
 
 def compact_partitioned_store(spark: SparkSession, path: str,
@@ -78,7 +78,7 @@ def compact_partitioned_store(spark: SparkSession, path: str,
     instead of restarting the survivor computation. The checkpoint's
     files are deleted through the Hadoop ``FileSystem`` API as soon as
     the write lands (same release discipline as the CC loop,
-    operators/dedup.py:_release_checkpoint)."""
+    ckpt.release)."""
     store = spark.read.parquet(path)
     evict = (store.select(id_col, part_col)
              .join(current_ids.select(id_col), id_col, "left_anti"))
@@ -95,9 +95,10 @@ def compact_partitioned_store(spark: SparkSession, path: str,
         [(k,) for k in sorted(by_range)], f"{part_col} bigint")
     # broadcast the bounded range frame -> dynamic partition pruning
     # keeps the survivor scan off every unaffected partition
-    survivors = _checkpoint(
+    survivors = checkpoint(
         store.join(F.broadcast(affected), part_col)
-        .join(current_ids.select(id_col), id_col, "left_semi"), durable)
+        .join(current_ids.select(id_col), id_col, "left_semi"),
+        durable=durable)
     surviving_ranges = {r[part_col] for r in
                         survivors.select(part_col).distinct().collect()}
     jvm = spark._jvm
@@ -121,7 +122,7 @@ def compact_partitioned_store(spark: SparkSession, path: str,
                    if st.isDirectory()
                    and st.getPath().getName().startswith(part_prefix)}
         if on_disk <= {f"{part_col}={r}" for r in by_range}:
-            _release_checkpoint(survivors, durable)  # (empty, hygienic)
+            release(survivors, durable=durable)  # (empty, hygienic)
             raise ValueError(
                 "compact_partitioned_store: the evict set covers every "
                 f"row of every partition of {path} — refusing to "
@@ -140,7 +141,7 @@ def compact_partitioned_store(spark: SparkSession, path: str,
             spark.conf.unset(mode_key)
         else:
             spark.conf.set(mode_key, prev)
-        _release_checkpoint(survivors, durable)
+        release(survivors, durable=durable)
     removed = 0
     fully_retired = sorted(set(by_range) - surviving_ranges)
     if fully_retired:
@@ -185,7 +186,7 @@ def upsert_partitioned_store(spark: SparkSession, path: str,
     surviving executor loss mid-write — VERDICT r10 "What's wrong
     #4"), released through the Hadoop ``FileSystem`` API after the
     write. Returns the number of partitions written."""
-    surv = _checkpoint(rows, durable)
+    surv = checkpoint(rows, durable=durable)
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(mode_key, None)
     try:
@@ -199,7 +200,7 @@ def upsert_partitioned_store(spark: SparkSession, path: str,
             spark.conf.unset(mode_key)
         else:
             spark.conf.set(mode_key, prev)
-        _release_checkpoint(surv, durable)
+        release(surv, durable=durable)
     return n_parts
 
 

@@ -16,7 +16,7 @@ codec chapter"). The established treatment, in full:
   lossy pipeline is exactly invertible on this corpus and the DuckDB
   oracle can derive the decoded stats straight from the text bytes —
   the multimodal_gif_stats recipe applied to an entropy-coded format.
-* :func:`jpeg_stats_udf` — an Arrow-batched kernel that decodes FULL
+* :func:`_jpeg_blob_stats` — the per-blob Arrow kernel that decodes FULL
   baseline grayscale JPEG, far more than the synthesis emits: marker
   walk (APPn/COM skip, fill bytes), multi-table DQT (8- and 16-bit)
   and DHT (canonical code reconstruction), SOF0 validation, DRI/RSTn
@@ -836,7 +836,7 @@ def parse_jpeg(data: bytes | None) -> tuple | None:
     zigzag coefficients accumulate across scans (DC first/refine, AC
     band first/refine with EOB runs), dequantization and the
     per-pixel Python IDCT over the shared integer basis run once at
-    EOI. The independent twin of :func:`jpeg_stats_udf`."""
+    EOI. The independent twin of :func:`_jpeg_blob_stats`."""
     global _SPEC_BASIS
     if _SPEC_BASIS is None:
         _SPEC_BASIS = _dct_basis_q20()
@@ -1314,11 +1314,10 @@ def _kernel_decode_scan(data, p, dri, n_units, uw, scomps,
 
 
 def _jpeg_blob_stats(data):
-    """Module-level per-blob KERNEL entry point (hoisted verbatim
-    from the jpeg_stats_udf closure in r16 so the single-pass
-    streaming dispatch kernel — operators/multimodal.py:
-    media_dispatch_stats — can route a sniffed blob here without
-    paying a per-format Spark branch): full baseline+progressive
+    """Module-level per-blob KERNEL (the ``jpeg`` entry of
+    operators/multimodal.py:BLOB_STATS, so both decode_jpeg_stats and
+    the single-pass dispatch media_dispatch_stats route a blob here
+    without paying a per-format Spark branch): full baseline+progressive
     decode of one JPEG byte string. Returns ``(w, h, n_px,
     mean_gray, mean_r, mean_g, mean_b)`` (color means None for
     grayscale) or ``None`` for unreadable/out-of-scope payloads;
@@ -1541,56 +1540,10 @@ def _jpeg_blob_stats(data):
             int(g.sum()) / n_px, int(b.sum()) / n_px)
 
 
-
-def jpeg_stats_udf(content_col) -> "F.Column":
-    """Arrow-batched baseline-JPEG decode: binary content -> image
-    dimensions + exact luma mean, plus exact RGB channel means for
-    3-component 4:4:4 color frames (integer YCbCr conversion, module
-    constants; NULL for grayscale). Same contract as
-    :func:`parse_jpeg` but an independent implementation: (len, code)
-    dict Huffman decode over a shift-register bit reader, generated
-    zigzag walk, the IDCT as one int64 numpy tensordot per image and
-    the color convert as vectorized int64 plane math (exact — every
-    constant is an integer, so numpy's evaluation order is
-    immaterial). Unreadable, hostile, or out-of-scope payloads decode
-    to the all-NULL struct, never an error; output buffers are
-    bounded before any allocation (_JPEG_MAX_PIXELS + a data-derived
-    MCU bound). Map-only Arrow pass."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_JPEG_STRUCT)
-    def _jpeg(blobs: pd.Series) -> pd.DataFrame:
-        cols = {k: [] for k in ("width", "height", "n_pixels",
-                                "mean_gray", "mean_r", "mean_g",
-                                "mean_b")}
-
-        def emit(w=None, h=None, n=None, mg=None, mr=None, mgr=None,
-                 mb=None):
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["n_pixels"].append(n)
-            cols["mean_gray"].append(mg)
-            cols["mean_r"].append(mr)
-            cols["mean_g"].append(mgr)
-            cols["mean_b"].append(mb)
-
-        for blob in blobs:
-            data = bytes(blob) if blob is not None else None
-            res = _jpeg_blob_stats(data) if data is not None else None
-            if res is None:
-                emit()
-            else:
-                emit(*res)
-        return pd.DataFrame(cols)
-
-    return _jpeg(content_col if not isinstance(content_col, str)
-                 else F.col(content_col))
-
-
 def decode_jpeg_stats(media: DataFrame) -> DataFrame:
     """Per-object baseline-JPEG decode over a (media_id, content)
-    frame: one map-only Arrow pass, unreadable objects surfaced as
-    NULL stats."""
-    w = media.select("media_id",
-                     jpeg_stats_udf(F.col("content")).alias("w"))
-    return w.select("media_id", "w.*")
+    frame: the ``_jpeg`` Arrow pass over :func:`_jpeg_blob_stats`
+    (operators/multimodal.py:BLOB_STATS), unreadable objects surfaced
+    as NULL stats."""
+    from .multimodal import decode_blob_stats
+    return decode_blob_stats(media, "jpeg")

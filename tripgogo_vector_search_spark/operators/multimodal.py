@@ -4,15 +4,15 @@ typed metadata, processed with Arrow-batched ``mapInPandas``.
 The Spark-side plumbing (schema, batch iteration, partition-preserving
 feature extraction) is real and tested. Decode coverage (r11-r13):
 WAV/PCM, 24-bpp BMP, 8-bit truecolor PNG and palette GIF are REAL
-decodes — :func:`parse_wav` / :func:`wav_stats_udf` walk the RIFF
+decodes — :func:`parse_wav` / :func:`_wav_blob_stats` walk the RIFF
 chunk list and compute sample-level stats, :func:`parse_bmp` /
-:func:`bmp_stats_udf` honor the BMP offset/stride layout (top-down
-heights included), :func:`parse_png` / :func:`png_stats_udf` (r12)
+:func:`_bmp_blob_stats` honor the BMP offset/stride layout (top-down
+heights included), :func:`parse_png` / :func:`_png_blob_stats` (r12)
 decode through a REAL compression layer (CRC-verified chunk walk,
 stdlib ``zlib`` inflate, all five spec scanline filters; r15 adds
 Adam7 interlacing — pass-local unfiltering + positional
 de-interlace), and
-:func:`parse_gif` / :func:`gif_stats_udf` (r13) decode through a
+:func:`parse_gif` / :func:`_gif_blob_stats` (r13) decode through a
 REAL LZW layer implemented from the spec — variable code width,
 clear/EOI, the KwKwK case, table-full freeze — with no codec library
 at all, and baseline JPEG (r14, the first LOSSY format) is a real
@@ -39,6 +39,8 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from .jpeg import _JPEG_STRUCT, _jpeg_blob_stats
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -221,7 +223,7 @@ def parse_wav(data: bytes | None) -> tuple | None:
     all channels' samples, both floats unrounded (callers round
     engine-consistently) — or ``None`` for unreadable/non-16-bit-PCM
     payloads. This is the executable spec the Arrow kernel in
-    :func:`wav_stats_udf` batches (sample loop here is pure Python on
+    :func:`_wav_blob_stats` batches (sample loop here is pure Python on
     purpose — the independent third implementation); stdlib
     ``wave``-written files round-trip through it
     (tests/test_round11_props.py)."""
@@ -245,62 +247,31 @@ _WAV_STRUCT = ("struct<sample_rate:int,n_channels:int,bits_per_sample:int,"
                "n_samples:bigint,duration_ms:double,rms:double>")
 
 
-def wav_stats_udf(content_col) -> "F.Column":
-    """Arrow-batched WAV decode: binary content -> typed audio
-    metadata + RMS struct. Vectorizes :func:`parse_wav` with numpy
-    int64 sample math (exact sum of squares; identical doubles to the
-    plain-Python spec, pinned in tests/test_round11_props.py).
-    Unreadable payloads decode to an all-NULL struct, never an error —
-    a 100 TB media lake always carries corrupt objects. Scale: scalar
-    pandas_udf => per-partition Arrow batches, map-only, no shuffle,
-    payload bytes never leave the executors."""
-    from pyspark.sql.functions import pandas_udf
+def _wav_blob_stats(data: bytes):
+    """Per-blob WAV kernel: :func:`parse_wav` with numpy int64 sample
+    math (exact sum of squares; identical doubles to the plain-Python
+    spec, pinned in tests/test_round11_props.py). ``None`` for
+    unreadable payloads."""
+    import numpy as np
 
-    @pandas_udf(_WAV_STRUCT)
-    def _wav(blobs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        cols = {k: [] for k in ("sample_rate", "n_channels",
-                                "bits_per_sample", "n_samples",
-                                "duration_ms", "rms")}
-
-        def emit(rate=None, n_ch=None, bits=None, n_frames=None,
-                 duration_ms=None, rms=None):
-            cols["sample_rate"].append(rate)
-            cols["n_channels"].append(n_ch)
-            cols["bits_per_sample"].append(bits)
-            cols["n_samples"].append(n_frames)
-            cols["duration_ms"].append(duration_ms)
-            cols["rms"].append(rms)
-
-        for b in blobs:
-            hdr = _wav_pcm16(bytes(b)) if b is not None else None
-            if hdr is None:
-                emit()
-                continue
-            rate, n_ch, pcm = hdr
-            n_frames = len(pcm) // (2 * n_ch)
-            n_vals = n_frames * n_ch
-            if n_vals:
-                s = np.frombuffer(pcm[:2 * n_vals], dtype="<i2")
-                ss = int(np.dot(s.astype(np.int64), s.astype(np.int64)))
-                rms = float(ss / n_vals) ** 0.5
-            else:
-                rms = None
-            emit(rate, n_ch, 16, n_frames, n_frames * 1000.0 / rate,
-                 rms)
-        return pd.DataFrame(cols)
-
-    return _wav(content_col if not isinstance(content_col, str)
-                else F.col(content_col))
+    hdr = _wav_pcm16(data)
+    if hdr is None:
+        return None
+    rate, n_ch, pcm = hdr
+    n_frames = len(pcm) // (2 * n_ch)
+    n_vals = n_frames * n_ch
+    if n_vals:
+        s = np.frombuffer(pcm[:2 * n_vals], dtype="<i2")
+        ss = int(np.dot(s.astype(np.int64), s.astype(np.int64)))
+        rms = float(ss / n_vals) ** 0.5
+    else:
+        rms = None
+    return (rate, n_ch, 16, n_frames, n_frames * 1000.0 / rate, rms)
 
 
 def decode_wav_stats(media: DataFrame) -> DataFrame:
-    """Per-object WAV decode over a (media_id, content) frame: one
-    map-only Arrow pass, unreadable objects surfaced as NULL stats."""
-    w = media.select("media_id",
-                     wav_stats_udf(F.col("content")).alias("w"))
-    return w.select("media_id", "w.*")
+    """Per-object WAV decode (typed audio metadata + RMS)."""
+    return decode_blob_stats(media, "wav")
 
 
 def synth_bmp_corpus(docs: DataFrame, id_col: str = "doc_id",
@@ -427,7 +398,7 @@ def parse_bmp(data: bytes | None) -> tuple | None:
     heights (top-down storage). Returns ``(width, height, n_pixels,
     mean_b, mean_g, mean_r)`` with means unrounded (callers round
     engine-consistently), or ``None`` for unreadable payloads. The
-    executable spec behind :func:`bmp_stats_udf`."""
+    executable spec behind :func:`_bmp_blob_stats`."""
     import struct
 
     if data is None or len(data) < 54 or data[0:2] != b"BM":
@@ -464,9 +435,9 @@ _BMP_STRUCT = ("struct<width:int,height:int,n_pixels:bigint,"
 
 def _bmp_blob_stats(data: "bytes | None"):
     """Module-level per-blob KERNEL path for uncompressed 24-bpp BMP
-    (hoisted verbatim from the bmp_stats_udf closure in r16 so the
-    single-pass streaming dispatch kernel can route a sniffed blob
-    here): numpy stride-sliced channel sums, same NULL contract as
+    (the ``bmp`` entry of :data:`BLOB_STATS`, shared by
+    decode_bmp_stats and the single-pass dispatch): numpy
+    stride-sliced channel sums, same NULL contract as
     :func:`parse_bmp`. Returns ``(w, h, n_px, mean_b, mean_g,
     mean_r)`` or ``None``; never raises on hostile bytes."""
     import struct
@@ -499,48 +470,9 @@ def _bmp_blob_stats(data: "bytes | None"):
             int(s[0]) / n_px, int(s[1]) / n_px, int(s[2]) / n_px)
 
 
-def bmp_stats_udf(content_col) -> "F.Column":
-    """Arrow-batched BMP decode: binary content -> image metadata +
-    per-channel means. Batches :func:`_bmp_blob_stats` (numpy
-    stride-sliced channel sums — exact int64; identical doubles to
-    the plain-Python spec :func:`parse_bmp`). Unreadable / compressed
-    / non-24-bpp payloads decode to an all-NULL struct, never an
-    error. Map-only Arrow pass; pixel bytes never leave the
-    executors."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_BMP_STRUCT)
-    def _bmp(blobs: pd.Series) -> pd.DataFrame:
-        cols = {k: [] for k in ("width", "height", "n_pixels",
-                                "mean_b", "mean_g", "mean_r")}
-
-        def emit(w=None, h=None, n=None, mb=None, mg=None, mr=None):
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["n_pixels"].append(n)
-            cols["mean_b"].append(mb)
-            cols["mean_g"].append(mg)
-            cols["mean_r"].append(mr)
-
-        for b in blobs:
-            data = bytes(b) if b is not None else None
-            res = _bmp_blob_stats(data) if data is not None else None
-            if res is None:
-                emit()
-            else:
-                emit(*res)
-        return pd.DataFrame(cols)
-
-    return _bmp(content_col if not isinstance(content_col, str)
-                else F.col(content_col))
-
-
 def decode_bmp_stats(media: DataFrame) -> DataFrame:
-    """Per-object BMP decode over a (media_id, content) frame: one
-    map-only Arrow pass, unreadable objects surfaced as NULL stats."""
-    w = media.select("media_id",
-                     bmp_stats_udf(F.col("content")).alias("w"))
-    return w.select("media_id", "w.*")
+    """Per-object 24-bpp BMP decode (dimensions + channel means)."""
+    return decode_blob_stats(media, "bmp")
 
 
 #: synthesis cap on w*h for the RLE8 BMP corpus, mirrored by the
@@ -645,7 +577,7 @@ def _bmp_rle_indices(data: bytes | None) -> tuple | None:
 
 def parse_bmp_rle(data: bytes | None) -> tuple | None:
     """RLE8 BMP stats (the executable spec behind
-    :func:`bmp_rle_stats_udf`): :func:`_bmp_rle_indices` for the
+    :func:`_bmp_rle_blob_stats`): :func:`_bmp_rle_indices` for the
     pixel path, then the palette-channel means PLUS the exact
     integer ``sum((row + 1) * index)`` over the top-down image — the
     statistic that makes the bottom-up row FLIP oracle-visible
@@ -741,66 +673,35 @@ _BMP_RLE_STRUCT = ("struct<width:int,height:int,n_pixels:bigint,"
                    "mean_r:double,mean_g:double,mean_b:double>")
 
 
-def bmp_rle_stats_udf(content_col) -> "F.Column":
-    """Arrow-batched RLE8 BMP decode over the INDEPENDENT
+def _bmp_rle_blob_stats(data: bytes):
+    """Per-blob RLE8 BMP kernel over the INDEPENDENT
     :func:`_bmp_rle_indices_np` pixel path (the spec twin is
     :func:`_bmp_rle_indices` — ADVICE r15 low #2 restored the
     dual-implementation discipline here), with exact int64 histogram
     dot products for the palette-channel means and one int64 dot for
-    the row-weighted statistic. Unreadable payloads decode to an
-    all-NULL struct, never an error. Map-only Arrow pass."""
-    from pyspark.sql.functions import pandas_udf
+    the row-weighted statistic. ``None`` for unreadable payloads."""
+    import numpy as np
 
-    @pandas_udf(_BMP_RLE_STRUCT)
-    def _bmp_rle(blobs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        cols = {k: [] for k in ("width", "height", "n_pixels",
-                                "mean_idx", "row_weighted_idx",
-                                "mean_r", "mean_g", "mean_b")}
-
-        def emit(w=None, h=None, n=None, mi=None, rw=None,
-                 mr=None, mg=None, mb=None):
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["n_pixels"].append(n)
-            cols["mean_idx"].append(mi)
-            cols["row_weighted_idx"].append(rw)
-            cols["mean_r"].append(mr)
-            cols["mean_g"].append(mg)
-            cols["mean_b"].append(mb)
-
-        for blob in blobs:
-            data = bytes(blob) if blob is not None else None
-            bi = _bmp_rle_indices_np(data) if data is not None else None
-            if bi is None:
-                emit()
-                continue
-            w, h, pal, top_down = bi
-            arr = top_down.astype(np.int64)
-            parr = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 4)
-            counts = np.bincount(arr.reshape(-1), minlength=256)
-            n_px = w * h
-            si = int(np.dot(counts, np.arange(256, dtype=np.int64)))
-            rw = int(np.dot(np.arange(1, h + 1, dtype=np.int64),
-                            arr.sum(axis=1)))
-            chan = [int(np.dot(counts, parr[:, c].astype(np.int64)))
-                    for c in (2, 1, 0)]            # quads are BGR0
-            emit(w, h, n_px, si / n_px, rw, chan[0] / n_px,
-                 chan[1] / n_px, chan[2] / n_px)
-        return pd.DataFrame(cols)
-
-    return _bmp_rle(content_col if not isinstance(content_col, str)
-                    else F.col(content_col))
+    bi = _bmp_rle_indices_np(data)
+    if bi is None:
+        return None
+    w, h, pal, top_down = bi
+    arr = top_down.astype(np.int64)
+    parr = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 4)
+    counts = np.bincount(arr.reshape(-1), minlength=256)
+    n_px = w * h
+    si = int(np.dot(counts, np.arange(256, dtype=np.int64)))
+    rw = int(np.dot(np.arange(1, h + 1, dtype=np.int64),
+                    arr.sum(axis=1)))
+    chan = [int(np.dot(counts, parr[:, c].astype(np.int64)))
+            for c in (2, 1, 0)]            # quads are BGR0
+    return (w, h, n_px, si / n_px, rw, chan[0] / n_px,
+            chan[1] / n_px, chan[2] / n_px)
 
 
 def decode_bmp_rle_stats(media: DataFrame) -> DataFrame:
-    """Per-object RLE8 BMP decode over a (media_id, content) frame:
-    one map-only Arrow pass, unreadable objects surfaced as NULL
-    stats."""
-    w = media.select("media_id",
-                     bmp_rle_stats_udf(F.col("content")).alias("w"))
-    return w.select("media_id", "w.*")
+    """Per-object RLE8 BMP decode (palette-index and channel stats)."""
+    return decode_blob_stats(media, "bmp_rle")
 
 
 def _be_hex(x, nbytes: int):
@@ -1147,7 +1048,7 @@ def _png_pixels(data: bytes | None) -> tuple | None:
 
 def parse_png(data: bytes | None) -> tuple | None:
     """Plain-Python PNG decode to stats (the executable spec behind
-    :func:`png_stats_udf`): :func:`_png_pixels` for the pixel path
+    :func:`_png_blob_stats`): :func:`_png_pixels` for the pixel path
     (chunk walk, CRC verification, zlib inflate, pass-local
     unfiltering, Adam7 de-interlacing), then exact channel sums.
     Returns ``(width, height, n_pixels, mean_r, mean_g, mean_b)``
@@ -1255,52 +1156,24 @@ def _png_blob_pixels(data: bytes):
     return w, h, img
 
 
-def png_stats_udf(content_col) -> "F.Column":
-    """Arrow-batched PNG decode: binary content -> image metadata +
-    per-channel means, over :func:`_png_blob_pixels` (the numpy twin
-    of the spec pixel path — genuinely independent unfiltering and
-    de-interlacing) with exact int64 channel sums. Unreadable
-    payloads decode to an all-NULL struct, never an error. Map-only
-    Arrow pass."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_PNG_STRUCT)
-    def _png(blobs: pd.Series) -> pd.DataFrame:
-        cols = {k: [] for k in ("width", "height", "n_pixels",
-                                "mean_r", "mean_g", "mean_b")}
-
-        def emit(w=None, h=None, n=None, mr=None, mg=None, mb=None):
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["n_pixels"].append(n)
-            cols["mean_r"].append(mr)
-            cols["mean_g"].append(mg)
-            cols["mean_b"].append(mb)
-
-        for b in blobs:
-            data = bytes(b) if b is not None else None
-            px = _png_blob_pixels(data) if data is not None else None
-            if px is None:
-                emit()
-                continue
-            w, h, img = px
-            s = img.reshape(-1, 3).astype("int64").sum(axis=0)
-            n_px = w * h
-            emit(w, h, n_px, int(s[0]) / n_px, int(s[1]) / n_px,
-                 int(s[2]) / n_px)
-        return pd.DataFrame(cols)
-
-    return _png(content_col if not isinstance(content_col, str)
-                else F.col(content_col))
+def _png_blob_stats(data: bytes):
+    """Per-blob PNG kernel over :func:`_png_blob_pixels` (the numpy
+    twin of the spec pixel path — genuinely independent unfiltering
+    and de-interlacing) with exact int64 channel sums. ``None`` for
+    unreadable payloads."""
+    px = _png_blob_pixels(data)
+    if px is None:
+        return None
+    w, h, img = px
+    s = img.reshape(-1, 3).astype("int64").sum(axis=0)
+    n_px = w * h
+    return (w, h, n_px, int(s[0]) / n_px, int(s[1]) / n_px,
+            int(s[2]) / n_px)
 
 
 def decode_png_stats(media: DataFrame) -> DataFrame:
-    """Per-object PNG decode over a (media_id, content) frame: one
-    map-only Arrow pass, unreadable objects surfaced as NULL stats."""
-    w = media.select("media_id",
-                     png_stats_udf(F.col("content")).alias("w"))
-    return w.select("media_id", "w.*")
-
+    """Per-object PNG decode (dimensions + channel means)."""
+    return decode_blob_stats(media, "png")
 
 
 # -- GIF / LZW (r13): the fourth real decode, through a REAL LZW layer ------
@@ -1625,7 +1498,7 @@ def _gif_indices(data: bytes | None) -> tuple | None:
 
 def parse_gif(data: bytes | None) -> tuple | None:
     """Plain-Python GIF decode to stats (the executable spec behind
-    :func:`gif_stats_udf`): :func:`_gif_indices` for the pixel path,
+    :func:`_gif_blob_stats`): :func:`_gif_indices` for the pixel path,
     then palette-channel means over the decoded indices. Returns
     ``(width, height, n_pixels, mean_idx, mean_r, mean_g, mean_b)``
     with unrounded means, or ``None`` for anything unreadable."""
@@ -1643,7 +1516,7 @@ def parse_gif(data: bytes | None) -> tuple | None:
 
 def parse_gif_rowpos(data: bytes | None) -> tuple | None:
     """Row-POSITION-aware GIF stats (the executable spec behind
-    :func:`gif_rowpos_stats_udf`): mean index plus the exact integer
+    :func:`_gif_rowpos_blob_stats`): mean index plus the exact integer
     ``sum((row + 1) * index)`` over the de-interlaced image — the
     statistic that makes the interlace permutation ORACLE-VISIBLE
     (every mean is invariant under row reordering; this is not).
@@ -1676,53 +1549,26 @@ _GIF_STRUCT = ("struct<width:int,height:int,n_pixels:bigint,"
 _GIF_DECODE_MAX_PIXELS = 1 << 24
 
 
-def gif_stats_udf(content_col) -> "F.Column":
-    """Arrow-batched GIF decode: binary content -> image metadata +
-    palette-index and channel means, over :func:`_gif_blob_indices`
-    (the numpy/shift-register twin of the spec pixel path) with
-    exact int64 histogram dot products (np.bincount over the decoded
-    indices x the palette arrays) instead of per-pixel sums.
-    Unreadable payloads decode to an all-NULL struct, never an error.
-    Map-only Arrow pass."""
-    from pyspark.sql.functions import pandas_udf
+def _gif_blob_stats(data: bytes):
+    """Per-blob GIF kernel over :func:`_gif_blob_indices` (the
+    numpy/shift-register twin of the spec pixel path) with exact int64
+    histogram dot products (np.bincount over the decoded indices x the
+    palette arrays) instead of per-pixel sums. ``None`` for unreadable
+    payloads."""
+    import numpy as np
 
-    @pandas_udf(_GIF_STRUCT)
-    def _gif(blobs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        cols = {k: [] for k in ("width", "height", "n_pixels", "mean_idx",
-                                "mean_r", "mean_g", "mean_b")}
-
-        def emit(w=None, h=None, n=None, mi=None, mr=None, mg=None,
-                 mb=None):
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["n_pixels"].append(n)
-            cols["mean_idx"].append(mi)
-            cols["mean_r"].append(mr)
-            cols["mean_g"].append(mg)
-            cols["mean_b"].append(mb)
-
-        for blob in blobs:
-            data = bytes(blob) if blob is not None else None
-            gi = _gif_blob_indices(data) if data is not None else None
-            if gi is None:
-                emit()
-                continue
-            w, h, pal, idxs = gi
-            parr = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
-            counts = np.bincount(idxs, minlength=parr.shape[0])
-            n_px = w * h
-            si = int(np.dot(counts, np.arange(parr.shape[0],
-                                              dtype=np.int64)))
-            ch = [int(np.dot(counts, parr[:, c].astype(np.int64)))
-                  for c in range(3)]
-            emit(w, h, n_px, si / n_px, ch[0] / n_px,
-                 ch[1] / n_px, ch[2] / n_px)
-        return pd.DataFrame(cols)
-
-    return _gif(content_col if not isinstance(content_col, str)
-                else F.col(content_col))
+    gi = _gif_blob_indices(data)
+    if gi is None:
+        return None
+    w, h, pal, idxs = gi
+    parr = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
+    counts = np.bincount(idxs, minlength=parr.shape[0])
+    n_px = w * h
+    si = int(np.dot(counts, np.arange(parr.shape[0], dtype=np.int64)))
+    ch = [int(np.dot(counts, parr[:, c].astype(np.int64)))
+          for c in range(3)]
+    return (w, h, n_px, si / n_px, ch[0] / n_px, ch[1] / n_px,
+            ch[2] / n_px)
 
 
 def _gif_blob_indices(data: bytes):
@@ -1891,60 +1737,85 @@ _GIF_ROWPOS_STRUCT = ("struct<width:int,height:int,n_pixels:bigint,"
                       "mean_idx:double,row_weighted_idx:bigint>")
 
 
-def gif_rowpos_stats_udf(content_col) -> "F.Column":
-    """Row-POSITION-aware Arrow GIF decode: mean index plus the exact
-    integer ``sum((row + 1) * index)`` over the de-interlaced image —
-    the statistic that makes the interlace permutation ORACLE-VISIBLE
-    (means are invariant under row reordering). Same
-    :func:`_gif_blob_indices` pixel path as :func:`gif_stats_udf`;
+def _gif_rowpos_blob_stats(data: bytes):
+    """Row-POSITION-aware per-blob GIF kernel: mean index plus the
+    exact integer ``sum((row + 1) * index)`` over the de-interlaced
+    image — the statistic that makes the interlace permutation
+    ORACLE-VISIBLE (means are invariant under row reordering). Same
+    :func:`_gif_blob_indices` pixel path as :func:`_gif_blob_stats`;
     the weighted sum is one int64 dot of row sums with 1..h."""
-    from pyspark.sql.functions import pandas_udf
+    import numpy as np
 
-    @pandas_udf(_GIF_ROWPOS_STRUCT)
-    def _gif_rp(blobs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        cols = {k: [] for k in ("width", "height", "n_pixels",
-                                "mean_idx", "row_weighted_idx")}
-
-        def emit(w=None, h=None, n=None, mi=None, rw=None):
-            cols["width"].append(w)
-            cols["height"].append(h)
-            cols["n_pixels"].append(n)
-            cols["mean_idx"].append(mi)
-            cols["row_weighted_idx"].append(rw)
-
-        for blob in blobs:
-            data = bytes(blob) if blob is not None else None
-            gi = _gif_blob_indices(data) if data is not None else None
-            if gi is None:
-                emit()
-                continue
-            w, h, _pal, idxs = gi
-            rows = idxs.reshape(h, w).sum(axis=1)
-            rw = int(np.dot(np.arange(1, h + 1, dtype=np.int64), rows))
-            n_px = w * h
-            emit(w, h, n_px, int(idxs.sum()) / n_px, rw)
-        return pd.DataFrame(cols)
-
-    return _gif_rp(content_col if not isinstance(content_col, str)
-                   else F.col(content_col))
+    gi = _gif_blob_indices(data)
+    if gi is None:
+        return None
+    w, h, _pal, idxs = gi
+    rows = idxs.reshape(h, w).sum(axis=1)
+    rw = int(np.dot(np.arange(1, h + 1, dtype=np.int64), rows))
+    n_px = w * h
+    return (w, h, n_px, int(idxs.sum()) / n_px, rw)
 
 
 def decode_gif_stats(media: DataFrame) -> DataFrame:
-    """Per-object GIF decode over a (media_id, content) frame: one
-    map-only Arrow pass, unreadable objects surfaced as NULL stats."""
-    w = media.select("media_id",
-                     gif_stats_udf(F.col("content")).alias("w"))
-    return w.select("media_id", "w.*")
+    """Per-object GIF decode (palette-index and channel means)."""
+    return decode_blob_stats(media, "gif")
 
 
 def decode_gif_rowpos_stats(media: DataFrame) -> DataFrame:
     """Per-object row-position-aware GIF decode (interlace-sensitive
-    stats) over a (media_id, content) frame: one map-only Arrow
-    pass, unreadable objects surfaced as NULL stats."""
-    w = media.select("media_id",
-                     gif_rowpos_stats_udf(F.col("content")).alias("w"))
+    stats)."""
+    return decode_blob_stats(media, "gif_rowpos")
+
+
+#: Per-format Arrow decode table: format -> (UDF name, return struct,
+#: per-blob stats kernel). The name is what plans print (``_png(...)``);
+#: each kernel takes ``bytes`` and returns one tuple in struct field
+#: order, or ``None`` for an unreadable payload. Serves the per-format
+#: ``decode_*_stats`` passes and :func:`media_dispatch_stats`, whose
+#: sniffed kind's subtype (``image/png`` -> ``png``) is the key.
+BLOB_STATS = {
+    "wav": ("_wav", _WAV_STRUCT, _wav_blob_stats),
+    "bmp": ("_bmp", _BMP_STRUCT, _bmp_blob_stats),
+    "bmp_rle": ("_bmp_rle", _BMP_RLE_STRUCT, _bmp_rle_blob_stats),
+    "png": ("_png", _PNG_STRUCT, _png_blob_stats),
+    "gif": ("_gif", _GIF_STRUCT, _gif_blob_stats),
+    "gif_rowpos": ("_gif_rp", _GIF_ROWPOS_STRUCT, _gif_rowpos_blob_stats),
+    "jpeg": ("_jpeg", _JPEG_STRUCT, _jpeg_blob_stats),
+}
+
+
+def blob_stats_udf(name: str, struct: str, stats_fn):
+    """Arrow-batched decode UDF named ``name``: binary content ->
+    ``struct`` via the per-blob kernel ``stats_fn``. NULL and
+    unreadable payloads decode to an all-NULL struct, never an error —
+    a 100 TB media lake always carries corrupt objects. The output
+    frame is built from per-field lists, so pandas infers the same
+    column dtypes for every format. Scale: scalar pandas_udf =>
+    per-partition Arrow batches, map-only, no shuffle, payload bytes
+    never leave the executors."""
+    from pyspark.sql.functions import pandas_udf
+
+    fields = [f.split(":")[0] for f in struct[len("struct<"):-1].split(",")]
+    empty = (None,) * len(fields)
+
+    def udf(blobs: pd.Series) -> pd.DataFrame:
+        cols = [[] for _ in fields]
+        for b in blobs:
+            res = stats_fn(bytes(b)) if b is not None else None
+            for col, v in zip(cols, empty if res is None else res):
+                col.append(v)
+        return pd.DataFrame(dict(zip(fields, cols)))
+
+    udf.__name__ = udf.__qualname__ = name
+    return pandas_udf(udf, struct)
+
+
+def decode_blob_stats(media: DataFrame, fmt: str) -> DataFrame:
+    """Per-object decode of one ``BLOB_STATS`` format over a
+    (media_id, content) frame: one map-only Arrow pass, unreadable
+    objects surfaced as NULL stats."""
+    udf = blob_stats_udf(*BLOB_STATS[fmt])
+    w = media.select("media_id", udf(F.col("content")).alias("w"))
     return w.select("media_id", "w.*")
 
 
@@ -2026,12 +1897,10 @@ def media_dispatch_stats(media: DataFrame, *,
     decoded=false (kind='unknown' when even the magic is foreign).
     ``audio_fields=True`` appends (sample_rate int, n_samples bigint)
     — NULL except for decodable WAV objects, where they carry the
-    exact ``wav_stats_udf`` values (rate from the fmt chunk, frames =
+    exact ``decode_wav_stats`` values (rate from the fmt chunk, frames =
     data bytes // (2 * channels)) — so quality gates can derive
     duration flags from the same single pass; the default output is
     byte-identical to the pre-flag shape."""
-    from .jpeg import _jpeg_blob_stats
-
     cols = ("media_id", "kind", "width", "height", "n_pixels",
             "decoded") + (("sample_rate", "n_samples")
                           if audio_fields else ())
@@ -2042,44 +1911,22 @@ def media_dispatch_stats(media: DataFrame, *,
             for mid, blob in zip(pdf["media_id"], pdf["content"]):
                 data = bytes(blob) if blob is not None else None
                 kind = sniff_media_kind_py(data)
+                entry = BLOB_STATS.get(kind.rpartition("/")[2])
+                r = entry[2](data) if entry is not None else None
                 w = h = npx = rate = frames = None
-                if kind == "image/png":
-                    r = _png_blob_pixels(data)
-                    if r is not None:
-                        w, h, npx = r[0], r[1], r[0] * r[1]
-                    decoded = r is not None
-                elif kind == "image/jpeg":
-                    r = _jpeg_blob_stats(data)
-                    if r is not None:
-                        w, h, npx = r[0], r[1], r[2]
-                    decoded = r is not None
-                elif kind == "image/gif":
-                    r = _gif_blob_indices(data)
-                    if r is not None:
-                        w, h, npx = r[0], r[1], r[0] * r[1]
-                    decoded = r is not None
-                elif kind == "image/bmp":
-                    r = _bmp_blob_stats(data)
-                    if r is not None:
-                        w, h, npx = r[0], r[1], r[2]
-                    decoded = r is not None
-                elif kind == "audio/wav":
+                if r is not None and kind == "audio/wav":
                     # the batch formula's decoded flag for audio is
                     # sample_rate IS NOT NULL from the WAV kernel;
                     # dims stay NULL (heterogeneous-schema reality)
-                    hdr = _wav_pcm16(data)
-                    decoded = hdr is not None
-                    if hdr is not None and audio_fields:
-                        rate, n_ch, pcm = hdr
-                        frames = len(pcm) // (2 * n_ch)
-                else:
-                    decoded = False
+                    rate, frames = r[0], r[3]
+                elif r is not None:
+                    w, h, npx = r[0], r[1], r[2]
                 out["media_id"].append(mid)
                 out["kind"].append(kind)
                 out["width"].append(w)
                 out["height"].append(h)
                 out["n_pixels"].append(npx)
-                out["decoded"].append(decoded)
+                out["decoded"].append(r is not None)
                 if audio_fields:
                     out["sample_rate"].append(rate)
                     out["n_samples"].append(frames)

@@ -69,7 +69,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..ckpt import checkpoint_tracked
+from ..ckpt import checkpoint
 from ..partitioning import shuffle_width
 from .rank import _GRID_SHIFT, _clamped_width_bucket, _log_key
 
@@ -129,9 +129,10 @@ def grouped_order_statistics(df: DataFrame, group_cols: Sequence[str],
     WORSE at sf0.1 (OPTIMIZATION_r17.md). Values are unchanged by
     materialization, so results are identical. ``ckpt_scope``
     (registry key) opts in to deterministic release of superseded
-    checkpoint blocks (tripgogo_vector_search_spark/ckpt.py); on a long-lived
-    cluster swap localCheckpoint for a reliable checkpoint / persisted
-    table (same caveat and escape as quality_gate and the CC loop);
+    checkpoint blocks (ckpt.checkpoint's ``scope`` + ckpt.adopt); on a
+    long-lived cluster swap localCheckpoint for a durable
+    ckpt.checkpoint / persisted table (same caveat and escape as
+    quality_gate and the CC loop);
     pass ``ckpt_scope=None`` for the fully lazy r10 plan."""
     spark = df.sparkSession
     g = list(group_cols)
@@ -189,7 +190,7 @@ def grouped_order_statistics(df: DataFrame, group_cols: Sequence[str],
     # probe plan then carries a LogicalRDD leaf as its broadcast side
     # instead of embedding the whole stats+window subtree
     if ckpt_scope is not None:
-        t2 = checkpoint_tracked(t2, ckpt_scope)
+        t2 = checkpoint(t2, scope=ckpt_scope)
     # ONE probe pass: rows of owning cells only (inner broadcast join
     # on the cell id — <= 2*|qs| rows per group on the build side);
     # the per-(target, sub-cell, value) histogram is map-side
@@ -207,7 +208,7 @@ def grouped_order_statistics(df: DataFrame, group_cols: Sequence[str],
     # probe subtree (the runtime exchange was ReusedExchange-collapsed,
     # but the analyzer still resolved both copies)
     if ckpt_scope is not None:
-        vh = checkpoint_tracked(vh, ckpt_scope)
+        vh = checkpoint(vh, scope=ckpt_scope)
     # owning SUB-cell per target: totals per (group, target, sub-cell)
     # are a bounded aggregate of the histogram (<= 2*|qs|*(B+1) rows
     # per group); the cumulative window runs over those aggregate rows

@@ -5064,10 +5064,10 @@ def quality_gate(spark, sf_dir):
     from ..operators.quantile import quantiles_disc
     from ..partitioning import widen
     d = widen(_t(spark, sf_dir, "documents"))
-    q = CK.checkpoint_tracked(
+    q = CK.checkpoint(
         d.select("doc_id", "lang",
                  TX.quality_score("text").alias("quality")),
-        "quality_gate")
+        scope="quality_gate")
     med = quantiles_disc(q, ["lang"], "quality", [("median_q", 0.5)],
                          ckpt_scope="quality_gate")
     return CK.adopt("quality_gate", (
@@ -5321,8 +5321,8 @@ def ann_recall_eval(spark, sf_dir):
     # re-embeds that subtree — materialize it once per run so the
     # sampling scan runs exactly once at any scale. 8 rows; results
     # unchanged.
-    queries = CK.checkpoint_tracked(_eval_query_sample(emb),
-                                    "ann_recall_eval")
+    queries = CK.checkpoint(_eval_query_sample(emb),
+                            scope="ann_recall_eval")
     approx = (ANN.ivf_knn_join_materialized(spark, path, queries,
                                             k=3, nprobe=2)
               .select("qid", F.col("vec_id").alias("a_vec")))
@@ -9160,7 +9160,7 @@ def multimodal_wav_stats_q(spark, sf_dir):
     them), and an Arrow-batched kernel walks each file's chunk list
     (any chunk order) to the fmt/data chunks and decodes the samples:
     rate, channels, bit depth, frame count, duration, RMS
-    (wav_stats_udf; plain-Python spec parse_wav pinned equal in
+    (multimodal._wav_blob_stats; plain-Python spec parse_wav pinned equal in
     tests/test_round11_props.py). The DuckDB oracle derives the same
     stats synthesis-side from the text bytes (hex-pair arithmetic over
     the BLOB — no codec on either engine), so header fields AND
@@ -9221,7 +9221,7 @@ def multimodal_bmp_stats_q(spark, sf_dir):
     stride walk (padding bytes never enter the sums — the detail that
     distinguishes a decode from a byte histogram), per-channel means
     over exact int64 sums; top-down (negative-height) images and
-    non-BI_RGB payloads handled (bmp_stats_udf; plain-Python spec
+    non-BI_RGB payloads handled (_bmp_blob_stats; plain-Python spec
     parse_bmp pinned equal + fuzz-total in tests/test_round11_props).
     The DuckDB oracle derives the same stats synthesis-side from the
     text bytes. With WAV + BMP real, the NotImplementedError surface
@@ -9283,7 +9283,7 @@ def multimodal_png_stats_q(spark, sf_dir):
     ``zlib`` inflate, per-row UNFILTERING (numpy cumsum for Sub,
     vector add for Up, spec loop for Average/Paeth — all five spec
     filters, more than the synthesis emits), exact int64 channel
-    sums (png_stats_udf; plain-Python spec parse_png pinned equal +
+    sums (_png_blob_stats; plain-Python spec parse_png pinned equal +
     fuzz-total in tests/test_round12_props.py; a zlib.compress-based
     reference ENCODER round-trips real deflate streams through the
     decoder there too). The DuckDB oracle derives the same stats
@@ -10169,8 +10169,8 @@ def ivfpq_recall_eval_q(spark, sf_dir):
     # corpus scan was re-embedded by FIVE consuming arms (probe
     # selection, LUT build, shortlist re-rank, brute force) —
     # materialize it once per run. 8 rows; results unchanged.
-    queries = CK.checkpoint_tracked(_eval_query_sample(emb),
-                                    "ivfpq_recall_eval")
+    queries = CK.checkpoint(_eval_query_sample(emb),
+                            scope="ivfpq_recall_eval")
     cents = (spark.read.parquet(os.path.join(path, "_centroids"))
              .select(F.col("cid"), F.col("cvec")))
     pw = W.partitionBy("qid").orderBy(F.col("pd").asc(),
@@ -10287,7 +10287,7 @@ def multimodal_gif_stats_q(spark, sf_dir):
     synthesis emits, and a genuinely compressing plain-Python
     reference ENCODER round-trips real streams through it in
     tests/test_round13_props.py), palette-indirected channel means as
-    exact int64 histogram dot products (gif_stats_udf; plain-Python
+    exact int64 histogram dot products (_gif_blob_stats; plain-Python
     spec parse_gif pinned equal + fuzz-total there too). The DuckDB
     oracle derives the same stats synthesis-side from the text bytes
     — LZW is exactly invertible, so pixel means are a pure function
@@ -11437,7 +11437,7 @@ def media_quality_gate_multiformat_q(spark, sf_dir):
     (width, height, n_pixels, sample_rate, n_samples) are
     object-for-object the branch decoders' values —
     tests/test_round16_props.py pins the dispatch fields, and the
-    audio fields are the same _wav_pcm16 parse wav_stats_udf wraps).
+    audio fields are the same _wav_blob_stats decode_wav_stats runs).
     Map-only, no shuffle; embarrassingly parallel at 100 TB. Fires on
     real data at sf0.01: too_small gates
     147 BMP / 146 PNG / 15 GIF objects, extreme_aspect 219 GIF / 22
