@@ -28,6 +28,38 @@ SF0001 = "/root/testdata/sf0.001"
 # registration order.
 _CHECK_FIRST = [
     # CHANGED closure only, plan byte-identical (optimized plans diffed
+    # for all 276 keys; only index-leaf digests moved): tables are read
+    # with their declared schemas (sources/tables.load_table, with
+    # schemas.TABLES' dates now TIMESTAMP_NTZ as the fixtures store
+    # them); the IVF readers take centroids and schemas from the
+    # ann.open_ivf handle; checkpoint release frees blocks through
+    # SparkContext.unpersistRDD; rag.generate_summary logs each failed
+    # attempt. Same plans and results; source-closure, stream-source and
+    # index-leaf digests move.
+    "ann_index_occupancy", "ann_ivf", "ann_knn_join", "ann_lsh",
+    "ann_recall_eval", "approx_quantiles", "ccnet_ppl_buckets",
+    "corpus_refresh_cycle", "dedup_cluster_examples",
+    "dedup_components", "dedup_keep_best", "dup_ngram_fraction",
+    "embed_quantize", "embed_text", "group_zscore", "index_compact",
+    "ivfpq_recall_eval", "ivfpq_topk", "knn_label_accuracy",
+    "llm_generate", "llm_generate_batch", "media_decode_dispatch",
+    "media_quality_gate", "media_quality_gate_multiformat",
+    "median_agg", "median_impute", "multimodal_bmp_rle_stats",
+    "multimodal_bmp_stats", "multimodal_features",
+    "multimodal_gif_interlaced_stats", "multimodal_gif_stats",
+    "multimodal_jpeg_411_stats", "multimodal_jpeg_420_stats",
+    "multimodal_jpeg_422_stats", "multimodal_jpeg_color_stats",
+    "multimodal_jpeg_progressive_stats", "multimodal_jpeg_stats",
+    "multimodal_png_interlaced_stats", "multimodal_png_stats",
+    "multimodal_wav_stats", "near_dup_cluster_stats",
+    "near_dup_cross_source", "observed_ingest",
+    "percentile_cont_exact", "pq_adc_topk", "pq_encode_error",
+    "quality_gate", "quantization_error", "quartile_agg",
+    "refresh_compact_cycle", "result_fetch", "semdedup", "sim_join",
+    "sim_join_gemm", "stream_media_decode", "stream_media_dispatch",
+    "stream_minhash_probe", "stream_paragraph_probe",
+    "subword_tokenize", "udtf_ngrams", "value_outlier_iqr",
+    # CHANGED closure only, plan byte-identical (optimized plans diffed
     # for all 276 keys): the seven per-format decoder UDF wrappers are
     # one multimodal.blob_stats_udf over the BLOB_STATS kernel table,
     # which media_dispatch_stats also reads; the two checkpoint

@@ -88,17 +88,18 @@ def checkpoint(df: DataFrame, *, durable: bool = False,
 
 def _free(spark, rid: int, path: str | None = None) -> None:
     """Delete a durable checkpoint's files at ``path``, else unpersist
-    RDD ``rid``'s blocks if still persistent (an id whose blocks the
-    ContextCleaner already freed simply isn't in the map)."""
+    RDD ``rid``'s blocks (repeating a release the ContextCleaner
+    already made is harmless)."""
     try:
         if path is not None:
             p = spark._jvm.org.apache.hadoop.fs.Path(path)
             p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
                 p, True)
             return
-        jrdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
+        # SparkContext.unpersistRDD frees the blocks and the
+        # persistent-RDD entry without RDD.unpersist's WARN that a
+        # locally checkpointed RDD cannot be recomputed afterwards
+        spark.sparkContext._jsc.sc().unpersistRDD(rid, False)
     except Exception as exc:  # noqa: BLE001 - release is best-effort
         _warn("release", exc)
 

@@ -24,9 +24,15 @@ rounded to 6 dp, so the exact same literals are embeddable in oracle SQL.
 from __future__ import annotations
 
 import math
+import os
+import re
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.vector import cosine_distance, dot, vector_lit
 
@@ -44,6 +50,13 @@ def lsh_planes(n_planes: int = DEFAULT_PLANES, dim: int = 64) -> list[list[float
 
 def py_dot(a: Sequence[float], b: Sequence[float]) -> float:
     return sum(x * y for x, y in zip(a, b))
+
+
+def _cos_dist(a: Sequence[float], b: Sequence[float]) -> float:
+    """Driver-side cosine distance in the SQL expression's float-op order."""
+    na = math.sqrt(py_dot(a, a)) or 1.0
+    nb = math.sqrt(py_dot(b, b)) or 1.0
+    return 1.0 - py_dot(a, b) / (na * nb)
 
 
 def lsh_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
@@ -121,35 +134,91 @@ def materialize_ivf_index(corpus: DataFrame, path: str,
     dir — underscore-prefixed, so index scans skip it. At query time
     `nprobe` cells are chosen driver-side from the centroids, so the
     candidate read is a statically partition-pruned scan of
-    nprobe/n_cells of the data, with no dependence on the corpus."""
-    import os
+    nprobe/n_cells of the data, with no dependence on the corpus. The
+    build ends by opening the index's :func:`open_ivf` handle, so its
+    first search or join starts no Spark job before the action."""
     (build_ivf_index(corpus, vec_col, id_col, n_cells)
      .write.mode("overwrite").partitionBy("cid").parquet(path))
     (corpus.filter(F.col(id_col) < n_cells)
      .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
      .coalesce(1)
      .write.mode("overwrite").parquet(os.path.join(path, "_centroids")))
+    open_ivf(corpus.sparkSession, path)
+
+
+class IvfHandle(NamedTuple):
+    """A materialized IVF index as its readers see it before their
+    action: read once per index version by :func:`open_ivf`."""
+    token: str                                # `_centroids` listing
+    centroids: list[tuple[int, list[float]]]  # (cid, cvec)
+    schema: StructType                        # the index, cid inferred int
+    centroid_schema: StructType
+    centroid_files: tuple[str, ...]
+
+
+_IVF_MEMO_SIZE = 8
+_IVF_HANDLES: OrderedDict[str, IvfHandle] = OrderedDict()
+_IVF_LOCK = threading.Lock()
+# reading a file may bump its access time (relatime), so it is not part
+# of the token
+_ATIME = re.compile(r"; access_time=\d+")
+
+
+def open_ivf(spark, path: str) -> IvfHandle:
+    """The handle of the IVF index at ``path``: its centroids, the
+    index schema and the `_centroids` schema. Opening one starts three
+    Spark jobs (two schema inferences and the centroid collect); the
+    handle is then kept in a small LRU memo keyed by the qualified path.
+
+    Every lookup checks the memoized handle against the `_centroids`
+    listing (file names, lengths and mtimes), fetched in a fixed number
+    of py4j calls whatever the file count. Every overwrite writes part
+    files with a fresh UUID in their names, so rewriting an index at
+    the same path always changes the token and reopens the handle. The
+    token is read before the centroids, so a rewrite racing an open
+    leaves a handle newer than its token, which the next lookup reopens.
+    """
+    jvm = spark._jvm
+    wrap = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
+    hp = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+    qual = fs.makeQualified(hp)
+    listing = fs.listStatus(jvm.org.apache.hadoop.fs.Path(qual, "_centroids"))
+    token = _ATIME.sub("", wrap(listing).mkString("\n"))
+    key = qual.toString()
+    with _IVF_LOCK:
+        h = _IVF_HANDLES.get(key)
+        if h is not None and h.token == token:
+            _IVF_HANDLES.move_to_end(key)
+            return h
+    paths = wrap(jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(listing)).mkString("\n")
+    files = tuple(f for f in paths.split("\n")
+                  if not os.path.basename(f).startswith(("_", ".")))
+    cents = spark.read.parquet(*files)
+    h = IvfHandle(token, [(r.cid, list(r.cvec)) for r in cents.collect()],
+                  spark.read.parquet(path).schema, cents.schema, files)
+    with _IVF_LOCK:
+        _IVF_HANDLES[key] = h
+        _IVF_HANDLES.move_to_end(key)
+        while len(_IVF_HANDLES) > _IVF_MEMO_SIZE:
+            _IVF_HANDLES.popitem(last=False)
+    return h
 
 
 def ivf_search_materialized(spark, path: str,
                             query_vec: Sequence[float], k: int = 3,
                             vec_col: str = "embedding", id_col: str = "vec_id",
                             n_cells: int = 16, nprobe: int = 2) -> DataFrame:
-    """Probe selection runs driver-side over the n_cells centroids (same
-    float-op order as the SQL expression, so ordering ties break
-    identically), then the cid `isin` filter prunes the partitioned index
-    statically — no job touches the unprobed cells."""
-    import os
-    cents = spark.read.parquet(os.path.join(path, "_centroids")).collect()
-
-    def cos_dist(a: Sequence[float], b: Sequence[float]) -> float:
-        na = math.sqrt(py_dot(a, a)) or 1.0
-        nb = math.sqrt(py_dot(b, b)) or 1.0
-        return 1.0 - py_dot(a, b) / (na * nb)
-
-    order = sorted(cents, key=lambda r: (cos_dist(r.cvec, query_vec), r.cid))
-    probes = [r.cid for r in order[:nprobe]]
-    cand = spark.read.parquet(path).filter(F.col("cid").isin(probes))
+    """Probe selection runs driver-side over the centroids of the
+    :func:`open_ivf` handle (same float-op order as the SQL expression,
+    so ordering ties break identically), then the cid `isin` filter
+    prunes the partitioned index statically — no job touches the
+    unprobed cells. The index is read with the handle's schema, so no
+    Spark job starts before the action once the handle is open."""
+    h = open_ivf(spark, path)
+    order = sorted(h.centroids, key=lambda c: (_cos_dist(c[1], query_vec), c[0]))
+    probes = [cid for cid, _ in order[:nprobe]]
+    cand = spark.read.schema(h.schema).parquet(path).filter(F.col("cid").isin(probes))
     scored = cand.withColumn(
         "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
     return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
@@ -176,17 +245,19 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     cid — with the index partitioned by cid, only probed cells are read.
     Final per-query top-k is one window over candidate rows. No
     driver-side collect: probe selection is part of the distributed plan,
-    unlike the single-query `ivf_search_materialized`.
+    unlike the single-query `ivf_search_materialized`. The centroid
+    files and the index are read with the :func:`open_ivf` handle's
+    schemas, so building the plan starts no schema-inference job.
     """
-    import os
-    cents = spark.read.parquet(os.path.join(path, "_centroids"))
+    h = open_ivf(spark, path)
+    cents = spark.read.schema(h.centroid_schema).parquet(*h.centroid_files)
     qc = (queries.crossJoin(F.broadcast(cents))
           .withColumn("cdist", cosine_distance(F.col(q_vec), F.col("cvec"))))
     wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc(), F.col("cid").asc())
     probes = (qc.withColumn("prn", F.row_number().over(wq))
               .filter(F.col("prn") <= nprobe)
               .select(q_id, q_vec, "cid"))
-    cand = spark.read.parquet(path).join(F.broadcast(probes), "cid")
+    cand = spark.read.schema(h.schema).parquet(path).join(F.broadcast(probes), "cid")
     scored = cand.withColumn(
         "distance_score", cosine_distance(F.col(vec_col), F.col(q_vec)))
     wk = W.partitionBy(q_id).orderBy(F.col("distance_score").asc(),
@@ -264,13 +335,8 @@ def ivf_search_kmeans(index: DataFrame, centroids: list[list[float]],
     """Probe the `nprobe` nearest KMeans cells (driver-side argsort over
     n_cells centroids — tiny), exact-search inside them. Reads
     nprobe/n_cells of a cid-partitioned index."""
-    def cos_dist(a: Sequence[float], b: Sequence[float]) -> float:
-        na = math.sqrt(py_dot(a, a)) or 1.0
-        nb = math.sqrt(py_dot(b, b)) or 1.0
-        return 1.0 - py_dot(a, b) / (na * nb)
-
     order = sorted(range(len(centroids)),
-                   key=lambda c: (cos_dist(query_vec, centroids[c]), c))
+                   key=lambda c: (_cos_dist(query_vec, centroids[c]), c))
     probes = order[:nprobe]
     cand = index.filter(F.col("cid").isin(probes))
     scored = cand.withColumn(

@@ -17,10 +17,13 @@ run the same ``generate_summary`` per group via ``applyInPandas``.
 from __future__ import annotations
 
 import hashlib
+import logging
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+_LOG = logging.getLogger(__name__)
 
 MAX_RETRIES = 4       # streamlit_app.py:145
 BACKOFF_BASE = 2      # seconds; 2^n at :168,180
@@ -126,15 +129,18 @@ def generate_summary(rows: list[dict], query: str,
                      max_retries: int = MAX_RETRIES) -> str:
     """Retry loop with the reference's exact semantics: up to
     ``max_retries`` attempts, exponential ``2^attempt`` backoff between
-    them, fixed fallback string on exhaustion or unextractable response."""
+    them, fixed fallback string on exhaustion or unextractable response.
+    Each attempt that raises is logged as a warning naming the
+    exception class, so a fallback summary has a recorded cause."""
     payload = build_payload(rows, query)
     for attempt in range(max_retries):
         try:
             text = extract_text(transport(payload))
             if text is not None:
                 return text
-        except Exception:
-            pass
+        except Exception as exc:  # noqa: BLE001 - any failure is retried
+            _LOG.warning("summary attempt %d/%d failed (%s: %s)",
+                         attempt + 1, max_retries, type(exc).__name__, exc)
         if attempt < max_retries - 1:
             sleeper(BACKOFF_BASE ** attempt)
     return FALLBACK_MSG

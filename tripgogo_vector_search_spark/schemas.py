@@ -3,7 +3,13 @@
 The reference shares its schema between writer and reader only via a
 comment ("Must match ingest_hotels.py", streamlit_app.py:13) and infers
 result schemas at runtime from cursor metadata (streamlit_app.py:78).
-Here every source is schema-declared (SURVEY.md §1.3).
+Here every source is schema-declared (SURVEY.md §1.3), and
+`sources.tables.load_table` reads with these schemas, so each must equal
+what Spark infers from the fixture files. The fixtures hold dates as
+parquet `timestamp[us]` without a time zone, which Spark reads as
+TIMESTAMP_NTZ. `EVENTS` describes `load_table`'s output instead: its
+`ts` ships in two physical forms, both normalized to the session
+TIMESTAMP type there.
 """
 
 from __future__ import annotations
@@ -52,7 +58,7 @@ ORDERS = T.StructType([
     T.StructField("o_custkey", T.LongType()),
     T.StructField("o_orderstatus", T.StringType()),
     T.StructField("o_totalprice", T.DoubleType()),
-    T.StructField("o_orderdate", T.TimestampType()),
+    T.StructField("o_orderdate", T.TimestampNTZType()),
     T.StructField("o_orderpriority", T.StringType()),
 ])
 
@@ -67,7 +73,7 @@ LINEITEM = T.StructType([
     T.StructField("l_tax", T.DoubleType()),
     T.StructField("l_returnflag", T.StringType()),
     T.StructField("l_linestatus", T.StringType()),
-    T.StructField("l_shipdate", T.TimestampType()),
+    T.StructField("l_shipdate", T.TimestampNTZType()),
 ])
 
 EVENTS = T.StructType([

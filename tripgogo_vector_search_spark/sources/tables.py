@@ -12,18 +12,24 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import TABLES
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Schema comes from parquet footers (already
-    written with explicit types); no inference cost.
+    """Scan one synthetic table with its declared schema
+    (``schemas.TABLES``), so building the scan reads no parquet footer
+    and starts no Spark job. A column the declared schema names but the
+    file lacks reads as NULL.
 
-    `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which Spark
-    only reads as a long via `nanosAsLong`, floor-converted to microseconds
-    here — the same truncation DuckDB applies) and TIMESTAMP(MICROS)
-    (which Spark reads as TIMESTAMP_NTZ). Both normalize to the session
-    TIMESTAMP type (session TZ is pinned UTC, so NTZ->LTZ is wall-clock
-    preserving) so downstream plans and the UTC-naive DuckDB oracle agree
-    regardless of which physical type the fixture carries.
+    `events` is the one table whose schema is still read from the
+    footer: `events.ts` has shipped as both parquet TIMESTAMP(NANOS)
+    (which Spark only reads as a long via `nanosAsLong`, floor-converted
+    to microseconds here — the same truncation DuckDB applies) and
+    TIMESTAMP(MICROS) (which Spark reads as TIMESTAMP_NTZ). Both
+    normalize to the session TIMESTAMP type (session TZ is pinned UTC,
+    so NTZ->LTZ is wall-clock preserving) so downstream plans and the
+    UTC-naive DuckDB oracle agree regardless of which physical type the
+    fixture carries.
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -33,10 +39,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(df.schema["ts"].dataType, T.LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.schema(TABLES[name]).parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    from ..schemas import TABLES
     for name in names or TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
