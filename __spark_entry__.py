@@ -27,6 +27,22 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED plan, results identical (optimized plans diffed for all
+    # 276 keys): each vector expression is compiled from one SQL text
+    # (functions/vector.py). Where a cosine operand is a constant
+    # vector, its norm is now a double literal folded in Python in the
+    # SQL fold's order (bit-identical), so every scanned row folds one
+    # 64-element norm fewer: ann_ivf, ann_lsh, filtered_knn,
+    # hybrid_search_rrf, ivfpq_topk, corpus_refresh_cycle,
+    # refresh_compact_cycle. to_vector's computed string operand is
+    # bound once as a lambda variable instead of being built twice per
+    # row. Every other fingerprint that moved (source-closure and
+    # index-leaf digests only: vector.py, and the rank/quantile bucket
+    # grid now sized by the shuffle width alone) belongs to a key
+    # already queued below.
+    "ann_ivf", "ann_lsh", "filtered_knn", "hybrid_search_rrf",
+    "ivfpq_topk", "corpus_refresh_cycle", "refresh_compact_cycle",
+    "to_vector",
     # CHANGED closure only, plan byte-identical (optimized plans diffed
     # for all 276 keys; only index-leaf digests moved): tables are read
     # with their declared schemas (sources/tables.load_table, with

@@ -17,7 +17,11 @@ from tripgogo_vector_search_spark.sources.tables import load_table
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return load_table(spark, SF_SMOKE, "documents").cache()
+    # released at teardown: a cached frame left behind fails later
+    # cache-leak checks (test_round17_props) depending on file order
+    df = load_table(spark, SF_SMOKE, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 def test_chunk_docs_reconstruction(spark, docs):

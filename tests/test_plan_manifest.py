@@ -131,6 +131,42 @@ def test_real_width_change_still_counts_as_drift(spark, monkeypatch):
     assert fingerprint_one(spark, "corpus_filter") != before
 
 
+@pytest.mark.parametrize("build", ["bucket_id", "global_rank", "order_stats"])
+def test_bucket_grid_follows_shuffle_width_not_host(spark, build):
+    """The rank/quantile bucket grid's B is a plan literal, so it must
+    come from the shuffle width alone: with the width below the host's
+    defaultParallelism the plan equals the one built with
+    num_buckets=width and differs from num_buckets=defaultParallelism."""
+    from tools.plan_manifest import _normalize
+    from tripgogo_vector_search_spark.operators.quantile import (
+        grouped_order_statistics)
+    from tripgogo_vector_search_spark.operators.rank import (
+        with_bucket_id, with_global_rank)
+
+    host = spark.sparkContext.defaultParallelism
+    if host < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    width = host // 2
+    df = spark.range(64).selectExpr("id % 4 AS g", "CAST(id AS DOUBLE) AS v")
+    make = {"bucket_id": lambda **kw: with_bucket_id(df, "v", **kw)[0],
+            "global_rank": lambda **kw: with_global_rank(df, "v", **kw),
+            "order_stats": lambda **kw: grouped_order_statistics(
+                df, ["g"], "v", [("p50", 0.5)], **kw)}[build]
+
+    def plan(**kw):
+        return _normalize(make(**kw)._jdf.queryExecution()
+                          .optimizedPlan().toString())
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        got = plan()
+        assert got == plan(num_buckets=width)
+        assert got != plan(num_buckets=host)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 # Source-level markers that define a Python kernel. Distinct from
 # tools.plan_manifest._PLAN_PY_MARKERS, which match the PLAN text.
 _KERNEL_SRC_MARKERS = ("InPandas(", "pandas_udf", "mapInArrow", "@udtf",

@@ -14,6 +14,7 @@
 
 from __future__ import annotations
 
+import inspect
 import logging
 import shutil
 import sys
@@ -100,6 +101,45 @@ def test_ivf_search_starts_no_job_before_action(spark, ivf):
     assert jobs == 0
     got = [(r.vec_id, r.distance_score, r.cid) for r in df.collect()]
     assert got == _probed_topk(vecs, q, 5, 2)
+
+
+def _functions_called(build) -> list[str]:
+    """The ``pyspark.sql.functions`` entry points ``build()`` calls."""
+    from pyspark.sql import functions as F
+    called: list[str] = []
+
+    def counting(name, fn):
+        def wrapper(*args, **kwargs):
+            called.append(name)
+            return fn(*args, **kwargs)
+        return wrapper
+
+    with pytest.MonkeyPatch.context() as mp:
+        for name in dir(F):
+            fn = getattr(F, name)
+            if not name.startswith("_") and inspect.isfunction(fn):
+                mp.setattr(F, name, counting(name, fn))
+        build()
+    return called
+
+
+@pytest.mark.parametrize("request_path", ["exact", "ivf"])
+def test_request_build_calls_do_not_grow_with_dimension(spark, ivf,
+                                                        request_path):
+    """Each vector expression is one SQL text, so building a request
+    makes the same PySpark function calls for a 384-dim query (the
+    reference's size) as for an 8-dim one — no ``lit`` per element."""
+    _, path = ivf
+    src = load_table(spark, SF, "embeddings")
+
+    def build(q):
+        if request_path == "exact":
+            return with_match_score(knn_topk(src, q, k=10, tiebreak="vec_id"))
+        return ANN.ivf_search_materialized(spark, path, q, k=5, nprobe=2)
+
+    small, large = (_functions_called(lambda: build([0.5] * dim))
+                    for dim in (8, 384))
+    assert small == large, (small, large)
 
 
 def test_ivf_knn_join_builds_without_schema_jobs(spark, ivf):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import math
 import random
+import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from tripgogo_vector_search_spark.functions import vector as V
@@ -68,7 +70,7 @@ def test_knn_k_equals_n_is_full_sort(spark):
     n = emb.count()
     q = [math.sin(0.1 * (i + 1)) for i in range(64)]
     full = knn_topk(emb, q, k=n, tiebreak="vec_id").select("vec_id").collect()
-    srt = (emb.withColumn("d", V.cosine_distance("embedding", V.vector_lit(q)))
+    srt = (emb.withColumn("d", V.cosine_distance("embedding", q))
            .orderBy(F.col("d").asc(), F.col("vec_id").asc())
            .select("vec_id").collect())
     assert [r.vec_id for r in full] == [r.vec_id for r in srt]
@@ -214,3 +216,216 @@ def test_approx_count_distinct_within_tolerance(spark):
     exact = o.select(F.countDistinct("o_custkey")).first()[0]
     approx = o.select(F.approx_count_distinct("o_custkey", rsd=0.02)).first()[0]
     assert abs(approx - exact) / exact < 0.05, (exact, approx)
+
+
+# ---- renderer parity: every builder against a Python sequential fold ----
+#
+# The builders compile one SQL text each (functions/vector.py). These
+# models restate Spark's semantics in plain Python: zip_with pads the
+# shorter array with NULL, NULL poisons the fold, array_max skips NULLs
+# and ranks NaN highest (so ``NaN > 0`` holds), floor casts like Java's
+# (long). Results must match bit for bit (any NaN matches any NaN).
+
+_EDGE = [
+    [-0.0, 0.5, -0.25, 1.0],
+    [5e-324, 1.0, -1.0, 0.5],
+    [1e308, 1e308, -1.0, 2.0],          # the fold overflows to inf
+    [float("nan"), 1.0, 2.0, 3.0],
+    [float("inf"), 1.0, 2.0, 3.0],
+    [float("-inf"), 1.0, 2.0, 3.0],
+    [1.0, None, 2.0, 3.0],              # a NULL element
+    None,                               # a NULL array
+    [1.0, 2.0, 3.0],                    # length mismatch
+    [0.0, 0.0, 0.0, 0.0],               # a zero vector
+]
+_Q = [0.5, -0.0, 1e-300, 5e-324]
+
+
+def _fold(a, b, term):
+    if a is None or b is None:
+        return None
+    acc = 0.0
+    for i in range(max(len(a), len(b))):
+        x = a[i] if i < len(a) else None
+        y = b[i] if i < len(b) else None
+        if x is None or y is None:
+            return None
+        acc = acc + term(x, y)
+    return acc
+
+
+def _dot(a, b):
+    return _fold(a, b, lambda x, y: x * y)
+
+
+def _l2_sq(a, b):
+    return _fold(a, b, lambda x, y: (x - y) * (x - y))
+
+
+def _sqrt(x):
+    return None if x is None else math.sqrt(x)
+
+
+def _cos_sim(a, b):
+    d, na, nb = _dot(a, b), _sqrt(_dot(a, a)), _sqrt(_dot(b, b))
+    if None in (d, na, nb):
+        return None
+    return d / (na * nb)
+
+
+def _gt0(x):
+    return x is not None and (x > 0 or math.isnan(x))
+
+
+def _jfloor(x):
+    if math.isnan(x):
+        return 0
+    return max(-2 ** 63, min(2 ** 63 - 1, math.floor(x))) if math.isfinite(x) \
+        else (2 ** 63 - 1 if x > 0 else -2 ** 63)
+
+
+def _arr_max(xs):
+    xs = [x for x in xs if x is not None]
+    if not xs:
+        return None
+    return math.nan if any(math.isnan(x) for x in xs) else max(xs)
+
+
+def _normalize(v):
+    if v is None:
+        return None
+    n = _sqrt(_dot(v, v))
+    return [x / n if x is not None and _gt0(n) else None for x in v]
+
+
+def _scale(v):
+    mx = None if v is None else _arr_max([abs(x) if x is not None else None
+                                          for x in v])
+    return mx / 127.0 if _gt0(mx) else None
+
+
+def _quantize(v, s):
+    if v is None:
+        return None
+    return [None if x is None else 0 if s is None else _jfloor(x / s + 0.5)
+            for x in v]
+
+
+def _deq_err(v, s):
+    if v is None:
+        return None
+    return _arr_max([None if x is None else 0.0 if s is None
+                     else abs(x - float(_jfloor(x / s + 0.5)) * s) for x in v])
+
+
+def _same(got, want):
+    if isinstance(want, list) or isinstance(got, list):
+        return (got is None) == (want is None) and (
+            want is None or (len(got) == len(want)
+                             and all(map(_same, got, want))))
+    if got is None or want is None:
+        return got is None and want is None
+    if isinstance(want, float) and math.isnan(want):
+        return isinstance(got, float) and math.isnan(got)
+    return struct.pack("<d", got) == struct.pack("<d", want)
+
+
+def _parity_rows():
+    rng = random.Random(7)
+    rand = [[rng.uniform(-1, 1) for _ in range(4)] for _ in range(16)]
+    b = [rng.uniform(-1, 1) for _ in range(4)]
+    return [(i, a, b) for i, a in enumerate(rand + _EDGE)]
+
+
+def test_renderer_matches_python_fold_bit_for_bit(spark):
+    rows = _parity_rows()
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
+    sc = V.quantize_scale("a")
+    cases = {
+        "dot": (V.dot("a", "b"), lambda a, b: _dot(a, b)),
+        "dot_q": (V.dot("a", _Q), lambda a, b: _dot(a, _Q)),
+        "dot_cols": (V.dot(F.col("a"), F.col("b")), lambda a, b: _dot(a, b)),
+        "l2_sq": (V.l2_sq("a", "b"), lambda a, b: _l2_sq(a, b)),
+        "l2_sq_q": (V.l2_sq(_Q, "a"), lambda a, b: _l2_sq(_Q, a)),
+        "euclid": (V.euclidean_distance("a", "b"),
+                   lambda a, b: _sqrt(_l2_sq(a, b))),
+        "euclid_q": (V.euclidean_distance("a", _Q),
+                     lambda a, b: _sqrt(_l2_sq(a, _Q))),
+        "l2_norm": (V.l2_norm("a"), lambda a, b: _sqrt(_dot(a, a))),
+        "l2_normalize": (V.l2_normalize("a"), lambda a, b: _normalize(a)),
+        "norm_of_unit": (V.l2_norm(V.l2_normalize("a")),
+                         lambda a, b: _sqrt(_dot(_normalize(a), _normalize(a)))),
+        "scale": (sc, lambda a, b: _scale(a)),
+        "quantize": (V.quantize("a", sc), lambda a, b: _quantize(a, _scale(a))),
+        "deq_err": (V.dequantize_error("a", sc),
+                    lambda a, b: _deq_err(a, _scale(a))),
+    }
+    got = df.orderBy("id").select(
+        *[c.alias(k) for k, (c, _) in cases.items()]).collect()
+    for (i, a, b), r in zip(rows, got):
+        for k, (_, model) in cases.items():
+            assert _same(r[k], model(a, b)), (k, i, a, r[k], model(a, b))
+
+
+def test_renderer_cosine_matches_python_fold(spark):
+    """Cosine on every row whose norm product is nonzero; with ANSI on,
+    a zero norm product raises DIVIDE_BY_ZERO on the column and on the
+    constant (hoisted-norm) path alike, as it did before the renderer."""
+    from pyspark.errors import ArithmeticException
+
+    def den(a, b):
+        na, nb = _sqrt(_dot(a, a)), _sqrt(_dot(b, b))
+        return None if None in (na, nb) else na * nb
+
+    rows = _parity_rows()
+    ok = [r for r in rows if all(den(r[1], o) != 0 for o in (r[2], _Q))]
+    assert len(rows) - len(ok) == 1  # the zero vector
+    df = spark.createDataFrame(ok, "id int, a array<double>, b array<double>")
+    got = df.orderBy("id").select(
+        V.cosine_similarity("a", "b").alias("s"),
+        V.cosine_distance("a", "b").alias("d"),
+        V.cosine_distance("a", _Q).alias("dq"),
+        V.cosine_distance(_Q, "a").alias("qd")).collect()
+    for (i, a, b), r in zip(ok, got):
+        s, sq = _cos_sim(a, b), _cos_sim(a, _Q)
+        assert _same(r["s"], s), (i, a)
+        assert _same(r["d"], None if s is None else 1.0 - s), (i, a)
+        assert _same(r["dq"], None if sq is None else 1.0 - sq), (i, a)
+        assert _same(r["qd"], r["dq"]), (i, a)
+    zero = spark.createDataFrame([([1.0, 2.0],)], "a array<double>")
+    for c in (V.cosine_distance("a", [0.0, 0.0]),
+              V.cosine_distance("a", F.array(F.lit(0.0), F.lit(0.0)))):
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            zero.select(c).collect()
+    assert zero.select(V.dot("a", [0.0, 0.0])).first()[0] == 0.0
+
+
+def test_renderer_quotes_names_and_keeps_schemas(spark):
+    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
+                                   LongType)
+    df = spark.createDataFrame(
+        [([3.0, 4.0], [1.0, 0.0], "[1.5, -0.0, nan, -inf]", 0.25)],
+        "`my vec` array<double>, `v.1` array<double>, s string, d double")
+    out = df.select(
+        V.dot("my vec", "`v.1`").alias("dot"),
+        V.cosine_distance("my vec", [1.0, 0.0]).alias("cos"),
+        V.l2_normalize("my vec").alias("unit"),
+        V.quantize("my vec", V.quantize_scale("my vec")).alias("q"),
+        V.quantize_scale("my vec").alias("scale"),
+        V.dequantize_error("my vec", "d").alias("err"),
+        V.to_vector("s").alias("tv"), V.to_vector("s", dim=3).alias("tv3"),
+        V.match_score("d").alias("m"))
+    types = {f.name: f.dataType for f in out.schema.fields}
+    dbl = DoubleType()
+    assert types == {"dot": dbl, "cos": dbl, "unit": ArrayType(dbl),
+                     "q": ArrayType(LongType()), "scale": dbl, "err": dbl,
+                     "tv": ArrayType(FloatType()),
+                     "tv3": ArrayType(FloatType()), "m": dbl}
+    r = out.first()
+    assert r["dot"] == 3.0 and r["cos"] == 1.0 - 3.0 / 5.0
+    assert r["unit"] == [0.6, 0.8] and r["q"] == [95, 127]
+    assert r["tv"][:2] == [1.5, -0.0] and math.copysign(1, r["tv"][1]) < 0
+    assert math.isnan(r["tv"][2]) and r["tv"][3] == -math.inf
+    assert r["tv3"] is None and r["m"] == 75.0
+    with pytest.raises(ValueError, match="not a column name"):
+        V.dot("a..b", "b")

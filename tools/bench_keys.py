@@ -6,7 +6,9 @@ plans/<round>/.
                                [--plans before]
     python tools/bench_keys.py --round r18 --all [--n 3]  # every bench.py key
 
-Prints one JSON line {key: floor_sec} so runs can be diffed. Plans land
+Prints one JSON line {key: floor_sec} so runs can be diffed, then one
+{"build": {key: floor_sec}} line: the builder call alone (the build
+layer, before any action) of the same reps. Plans land
 at plans/<round>/<key>_<tag>.txt when --plans <tag> is given.
 """
 
@@ -72,6 +74,7 @@ def main() -> None:
         return
 
     floors: dict[str, float] = {}
+    builds: dict[str, float] = {}
     for rep in range(args.n):
         for k in keys:
             action = actions.get(k, "noop")
@@ -79,14 +82,18 @@ def main() -> None:
                 f"{args.round} {k} rep{rep}")
             t0 = time.perf_counter()
             df = QUERIES[k](spark, args.sf)
+            built = time.perf_counter() - t0
             if action == "collect":
                 df.collect()
             else:
                 df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             floors[k] = round(min(floors.get(k, 1e9), dt), 3)
-            print(f"rep{rep} {k} {dt:.3f}", file=sys.stderr, flush=True)
+            builds[k] = round(min(builds.get(k, 1e9), built), 3)
+            print(f"rep{rep} {k} {dt:.3f} build {built:.3f}",
+                  file=sys.stderr, flush=True)
     print(json.dumps(floors))
+    print(json.dumps({"build": builds}))
 
 
 if __name__ == "__main__":

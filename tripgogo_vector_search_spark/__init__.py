@@ -6,7 +6,8 @@ top-k -> RAG; see SURVEY.md), re-expressed Spark-first:
 
 * vectors are ``array<float>`` columns; distance math is built from
   Catalyst higher-order functions (``zip_with`` / ``aggregate``) so the hot
-  path stays JVM-side and whole-stage-codegen'd — no Python per row;
+  path stays JVM-side (interpreted per row, ``CodegenFallback``) — no
+  Python per row;
 * KNN is ``orderBy(distance).limit(k)`` -> ``TakeOrderedAndProject``
   (per-partition heap + driver merge; no global sort, no full shuffle);
 * embedding is an Arrow-batched pandas UDF (the reference's per-row

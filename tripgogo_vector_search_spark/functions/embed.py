@@ -69,7 +69,9 @@ def hash_embed_py(text: str, dim: int = DEFAULT_DIM, normalized: bool = True) ->
 def hash_embed_expr(col: ColumnOrName, dim: int = DEFAULT_DIM,
                     normalized: bool = True) -> Column:
     """The embedder as a Catalyst expression: md5 per token, signed
-    histogram over ``dim`` buckets. Whole-stage-codegen'd; zero Python."""
+    histogram over ``dim`` buckets. JVM-side higher-order functions,
+    interpreted per row (``CodegenFallback``); zero Python. The normalized
+    form binds the histogram once (functions/vector.l2_normalize)."""
     assert dim == 1 << BUCKET_BITS, "expression form is fixed at 64 buckets"
     hashes = F.transform(words(col), lambda t: F.md5(t))
 

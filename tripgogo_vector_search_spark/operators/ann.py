@@ -34,7 +34,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.vector import cosine_distance, dot, vector_lit
+from ..functions.vector import cosine_distance, dot, l2_norm
 
 DEFAULT_PLANES = 8
 
@@ -65,7 +65,7 @@ def lsh_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
     get type-inferred to integers (leading zeros dropped) when the index
     is written partitionBy(bucket)."""
     bits = [
-        F.when(dot(F.col(vec_col), vector_lit(p)) >= 0, "1").otherwise("0")
+        F.when(dot(vec_col, p) >= 0, "1").otherwise("0")
         for p in planes
     ]
     return F.concat(F.lit("b"), *bits)
@@ -92,8 +92,8 @@ def lsh_search(index: DataFrame, query_vec: Sequence[float], k: int = 3,
     qbucket = py_lsh_bucket(query_vec, planes)
     cand = index.filter(F.col("bucket") == qbucket)
     scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
+        "distance_score", cosine_distance(vec_col, query_vec))
+    return (scored.orderBy("distance_score", id_col)
             .limit(k)
             .select(id_col, F.round("distance_score", 6).alias("distance_score")))
 
@@ -120,8 +120,8 @@ def lsh_search_materialized(spark, path: str, query_vec: Sequence[float],
     qbucket = py_lsh_bucket(query_vec, planes)
     cand = spark.read.parquet(path).filter(F.col("bucket") == qbucket)
     scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
+        "distance_score", cosine_distance(vec_col, query_vec))
+    return (scored.orderBy("distance_score", id_col)
             .limit(k)
             .select(id_col, F.round("distance_score", 6).alias("distance_score")))
 
@@ -220,13 +220,13 @@ def ivf_search_materialized(spark, path: str,
     probes = [cid for cid, _ in order[:nprobe]]
     cand = spark.read.schema(h.schema).parquet(path).filter(F.col("cid").isin(probes))
     scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
+        "distance_score", cosine_distance(vec_col, query_vec))
+    return (scored.orderBy("distance_score", id_col)
             .limit(k)
             # partition-column type inference reads cid back as int;
             # restore the builder's bigint so the result schema is stable
-            .select(id_col, F.col("cid").cast("bigint").alias("cid"),
-                    F.round("distance_score", 6).alias("distance_score")))
+            .selectExpr(f"`{id_col}`", "CAST(cid AS BIGINT) AS cid",
+                        "round(distance_score, 6) AS distance_score"))
 
 
 def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
@@ -252,14 +252,14 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     h = open_ivf(spark, path)
     cents = spark.read.schema(h.centroid_schema).parquet(*h.centroid_files)
     qc = (queries.crossJoin(F.broadcast(cents))
-          .withColumn("cdist", cosine_distance(F.col(q_vec), F.col("cvec"))))
+          .withColumn("cdist", cosine_distance(q_vec, "cvec")))
     wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc(), F.col("cid").asc())
     probes = (qc.withColumn("prn", F.row_number().over(wq))
               .filter(F.col("prn") <= nprobe)
               .select(q_id, q_vec, "cid"))
     cand = spark.read.schema(h.schema).parquet(path).join(F.broadcast(probes), "cid")
     scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), F.col(q_vec)))
+        "distance_score", cosine_distance(vec_col, q_vec))
     wk = W.partitionBy(q_id).orderBy(F.col("distance_score").asc(),
                                      F.col(id_col).asc())
     return (scored.withColumn("rn", F.row_number().over(wk))
@@ -273,14 +273,13 @@ def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
     """Assign every vector to its nearest centroid (deterministic argmin:
     distance then centroid id). Centroids = the `n_cells` smallest-id
     vectors — swap in k-means centroids for production quality."""
-    from ..functions.vector import dot, l2_norm
     cents = (corpus.filter(F.col(id_col) < n_cells)
              .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"),
                      l2_norm(vec_col).alias("cnorm")))
     scored = (corpus.withColumn("vnorm", l2_norm(vec_col))
               .crossJoin(F.broadcast(cents))
               .withColumn("cdist",
-                          F.lit(1.0) - dot(F.col(vec_col), F.col("cvec"))
+                          F.lit(1.0) - dot(vec_col, "cvec")
                           / (F.col("vnorm") * F.col("cnorm"))))
     w = W.partitionBy(id_col).orderBy(F.col("cdist").asc(), F.col("cid").asc())
     return (scored.withColumn("rn", F.row_number().over(w))
@@ -297,14 +296,13 @@ def ivf_search(corpus: DataFrame, query_vec: Sequence[float], k: int = 3,
     index = build_ivf_index(corpus, vec_col, id_col, n_cells)
     cents = (corpus.filter(F.col(id_col) < n_cells)
              .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")))
-    probes = (cents.withColumn("qdist", cosine_distance(F.col("cvec"),
-                                                        vector_lit(query_vec)))
+    probes = (cents.withColumn("qdist", cosine_distance("cvec", query_vec))
               .orderBy(F.col("qdist").asc(), F.col("cid").asc())
               .limit(nprobe).select("cid"))
     cand = index.join(F.broadcast(probes), "cid")
     scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
+        "distance_score", cosine_distance(vec_col, query_vec))
+    return (scored.orderBy("distance_score", id_col)
             .limit(k)
             .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))
 
@@ -340,7 +338,7 @@ def ivf_search_kmeans(index: DataFrame, centroids: list[list[float]],
     probes = order[:nprobe]
     cand = index.filter(F.col("cid").isin(probes))
     scored = cand.withColumn(
-        "distance_score", cosine_distance(F.col(vec_col), vector_lit(query_vec)))
-    return (scored.orderBy(F.col("distance_score").asc(), F.col(id_col).asc())
+        "distance_score", cosine_distance(vec_col, query_vec))
+    return (scored.orderBy("distance_score", id_col)
             .limit(k)
             .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))

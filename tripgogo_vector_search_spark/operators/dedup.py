@@ -1013,8 +1013,7 @@ def semdedup_keep(idx: DataFrame, cents: DataFrame, eps: float = 0.60,
         on_hot="raise" if on_hot == "raise" else "report")
     a = (idx.join(F.broadcast(cents), cell_col)
          .select(id_col, vec_col, cell_col,
-                 F.round(cosine_distance(F.col(vec_col),
-                                         F.col("cvec")), 6)
+                 F.round(cosine_distance(vec_col, "cvec"), 6)
                  .alias("cdist"),
                  l2_norm(vec_col).alias("nrm")))
     join_keys = [cell_col]
@@ -1048,7 +1047,7 @@ def semdedup_keep(idx: DataFrame, cents: DataFrame, eps: float = 0.60,
                      F.col("cdist").alias("r_cd"),
                      F.col("nrm").alias("r_n")).repartition(width, *join_keys)
     pair_d = F.round(F.lit(1.0)
-                     - dot(F.col("l_emb"), F.col("r_emb"))
+                     - dot("l_emb", "r_emb")
                      / (F.col("l_n") * F.col("r_n")), 6)
     rm = (left.join(right, join_keys)
           .filter((F.col("l_id") != F.col("r_id"))

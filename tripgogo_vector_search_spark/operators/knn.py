@@ -14,26 +14,17 @@ is one scan + k rows per partition over the wire.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame
 
-from ..functions.vector import cosine_distance, match_score, vector_lit
+from ..functions.vector import cosine_distance, match_score
 
 
 def with_distance(df: DataFrame, query_vec: Sequence[float] | Column,
                   vec_col: str = "embedding",
                   dist_col: str = "distance_score") -> DataFrame:
-    if isinstance(query_vec, Column):
-        return df.withColumn(dist_col, cosine_distance(F.col(vec_col), query_vec))
-    # Constant query: hoist its norm to a Python-computed literal (same
-    # sequential double fold, bit-identical) — one fewer 64-dim fold/row.
-    from ..functions.vector import dot, l2_norm
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    dist = (F.lit(1.0) - dot(F.col(vec_col), vector_lit(query_vec))
-            / (l2_norm(F.col(vec_col)) * F.lit(qnorm)))
-    return df.withColumn(dist_col, dist)
+    return df.withColumn(dist_col, cosine_distance(vec_col, query_vec))
 
 
 def knn_topk(df: DataFrame, query_vec: Sequence[float] | Column, k: int = 3,
@@ -45,15 +36,12 @@ def knn_topk(df: DataFrame, query_vec: Sequence[float] | Column, k: int = 3,
     streamlit_app.py:70-71); pass ``tiebreak=<id col>`` for deterministic
     results (required for oracle comparison).
     """
-    scored = with_distance(df, query_vec, vec_col, dist_col)
-    order = [F.col(dist_col).asc()]
-    if tiebreak is not None:
-        order.append(F.col(tiebreak).asc())
-    return scored.orderBy(*order).limit(k)
+    order = [dist_col] if tiebreak is None else [dist_col, tiebreak]
+    return with_distance(df, query_vec, vec_col, dist_col).orderBy(*order).limit(k)
 
 
 def with_match_score(df: DataFrame, dist_col: str = "distance_score",
                      score_col: str = "match_score") -> DataFrame:
     """Append the reference's client-side derived column
     (streamlit_app.py:221)."""
-    return df.withColumn(score_col, match_score(F.col(dist_col)))
+    return df.withColumn(score_col, match_score(dist_col))

@@ -136,8 +136,7 @@ def grouped_order_statistics(df: DataFrame, group_cols: Sequence[str],
     pass ``ckpt_scope=None`` for the fully lazy r10 plan."""
     spark = df.sparkSession
     g = list(group_cols)
-    B = num_buckets or max(shuffle_width(spark),
-                           spark.sparkContext.defaultParallelism)
+    B = num_buckets or shuffle_width(spark)  # host-independent grid literal
     K = fine_cells
     t = _log_key(value_col, False)
     c1 = (F.floor(t) + _GRID_SHIFT).cast("int")

@@ -161,8 +161,7 @@ def with_bucket_id(df: DataFrame, value_col: str, *, descending: bool = False,
     ``bucket_col``."""
     spark = df.sparkSession
     g = list(partition_cols)
-    B = num_buckets or max(shuffle_width(spark),
-                           spark.sparkContext.defaultParallelism)
+    B = num_buckets or shuffle_width(spark)  # host-independent grid literal
     K = fine_cells
     t = _log_key(value_col, descending)
     # both grid levels are pure per-row expressions — no data pass, so
@@ -295,8 +294,7 @@ def with_global_rank(df: DataFrame, value_col: str,
     on the probe unless a cell actually split."""
     spark = df.sparkSession
     g = list(partition_cols)
-    B = num_buckets or max(shuffle_width(spark),
-                           spark.sparkContext.defaultParallelism)
+    B = num_buckets or shuffle_width(spark)  # host-independent grid literal
     K = fine_cells
     t = _log_key(value_col, descending)
     d = (df.withColumn("_c1", (F.floor(t) + _GRID_SHIFT).cast("int"))

@@ -2,7 +2,7 @@
 neighbors (SURVEY.md §2.E `sim_join`).
 
 Strategy: broadcast the (small) query side, join against the corpus with
-a codegen'd cosine expression, then per-query top-k via a row_number
+a JVM-side cosine expression, then per-query top-k via a row_number
 window partitioned by query id. The corpus is never shuffled — only the
 k-row-per-query window output moves. At 100 TB the corpus scan dominates
 and parallelizes linearly; the window's partition count equals the query
@@ -69,9 +69,9 @@ def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
     the global top-k reduces the tiny candidate set with a window.
 
     Per corpus row the expression path folds a 64-element loop per query
-    inside codegen; the GEMM path amortizes it into one vectorized
-    multiply per batch — the right trade when |queries| is large enough
-    that the per-pair loop dominates. Candidate traffic is
+    (interpreted, ``CodegenFallback``); the GEMM path amortizes it into
+    one vectorized multiply per batch — the right trade when |queries| is
+    large enough that the per-pair loop dominates. Candidate traffic is
     |queries| x k per partition, independent of corpus size. Distances
     use float64 BLAS accumulation, which can differ from the sequential
     fold by ~1 ulp — so distances are rounded to 6 dp BEFORE the

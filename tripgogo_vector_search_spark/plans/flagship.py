@@ -3,8 +3,9 @@
 Reference lifecycle (SURVEY.md §3.1, streamlit_app.py:45-101): embed query
 text -> one SQL statement computing cosine distance vs every stored vector
 -> ORDER BY ASC FETCH FIRST k -> derived match-score column. Here the same
-semantics compile to: Parquet scan (column-pruned) -> codegen'd
-higher-order-function distance -> TakeOrderedAndProject(k).
+semantics compile to: Parquet scan (column-pruned) -> higher-order-function
+distance (interpreted per row, ``CodegenFallback``; the query's norm is a
+literal) -> TakeOrderedAndProject(k).
 """
 
 from __future__ import annotations

@@ -5435,7 +5435,7 @@ def kmeans_assign(spark, sf_dir):
     cents = (emb.filter(F.col("vec_id") < 4)
              .select(F.col("vec_id").alias("cid"),
                      F.col("embedding").alias("cvec")))
-    d = V.cosine_distance(F.col("embedding"), F.col("cvec"))
+    d = V.cosine_distance("embedding", "cvec")
     crossed = (emb.crossJoin(F.broadcast(cents))
                .select("vec_id", "cid", d.alias("d")))
     w = W.partitionBy("vec_id").orderBy(F.col("d").asc(), F.col("cid").asc())
@@ -5933,8 +5933,7 @@ def filtered_knn(spark, sf_dir):
     from ..functions.vector import cosine_distance
     emb = (_t(spark, sf_dir, "embeddings")
            .filter(F.col("label").isin(2, 5)))
-    d = cosine_distance(F.col("embedding"),
-                        F.array(*[F.lit(v) for v in QUERY_VEC]))
+    d = cosine_distance("embedding", QUERY_VEC)
     return (emb.select("vec_id", "label", d.alias("dist"))
             .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
             .limit(5)
@@ -6023,17 +6022,17 @@ def hybrid_search_rrf(spark, sf_dir):
         "doc_id", F.row_number().over(
             W.orderBy(F.col("bm25").desc(), F.col("doc_id")))
         .alias("r_lex"))
-    qv = F.array(*[F.lit(v) for v in _hybrid_qvec()])
+    qv = _hybrid_qvec()
     # r5: the vector arm reads the MATERIALIZED per-corpus embedding
     # frame (built once by the Arrow hash-embed kernel — the embedding
     # pass a pipeline persists beside the corpus, like the reference's
     # ingest); no UDF runs at query time at all. Zero vectors keep the
     # NULL-dist-sorted-last contract (same oracle); with v a parquet
-    # column the projection is pure codegen either way.
+    # column the projection is map-only either way.
     dv_df = spark.read.parquet(_doc_embed_path(spark, sf_dir))
     vs = dv_df.select("doc_id",
                       F.when(dot("v", "v") > 0,
-                             F.round(cosine_distance(F.col("v"), qv), 6))
+                             F.round(cosine_distance("v", qv), 6))
                       .alias("dist"))
     vec20 = (vs.orderBy(F.col("dist").asc_nulls_last(), F.col("doc_id"))
              .limit(20)
@@ -6205,7 +6204,7 @@ def kmeans_lloyd(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
 
     def assign(cents):
-        d = cosine_distance(F.col("embedding"), F.col("cvec"))
+        d = cosine_distance("embedding", "cvec")
         w = W.partitionBy("vec_id").orderBy(F.col("dist").asc(),
                                             F.col("cid").asc())
         return (emb.crossJoin(F.broadcast(cents))
@@ -6325,7 +6324,7 @@ def _pq_assign(x, cb):
     """Nearest codebook entry per (vector, subspace): broadcast the
     bounded (m*k rows) codebook, argmin window partitioned by the
     (vec_id, m) slicing key."""
-    d = V.l2_sq(F.col("xs"), F.col("cvec"))
+    d = V.l2_sq("xs", "cvec")
     w = W.partitionBy("vec_id", "m").orderBy(F.col("d").asc(),
                                              F.col("cid").asc())
     return (x.join(F.broadcast(cb), "m")
@@ -6372,7 +6371,7 @@ def pq_encode_error_q(spark, sf_dir):
           .select("vec_id", "m", "cid",
                   F.slice("embedding", F.col("m") * _PQ_SUB + 1,
                           _PQ_SUB).alias("xs")))
-    d = V.l2_sq(F.col("xs"), F.col("cvec"))
+    d = V.l2_sq("xs", "cvec")
     per = (ex.join(F.broadcast(cb), ["m", "cid"])
            .select("vec_id", "m", "cid", d.alias("d"))
            .groupBy("vec_id")
@@ -6447,10 +6446,9 @@ def pq_adc_topk_q(spark, sf_dir):
            .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
            .limit(10))
     emb = _t(spark, sf_dir, "embeddings")
-    qv = F.array(*[F.lit(v) for v in QUERY_VEC])
     return (top.join(emb, "vec_id")
             .select("vec_id", "approx_dist",
-                    F.round(V.l2_sq(F.col("embedding"), qv), 6)
+                    F.round(V.l2_sq("embedding", QUERY_VEC), 6)
                     .alias("exact_dist")))
 
 
@@ -6587,8 +6585,7 @@ def ivfpq_topk_q(spark, sf_dir):
              .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
              .limit(30))
     emb = _t(spark, sf_dir, "embeddings")
-    qv = F.array(*[F.lit(v) for v in QUERY_VEC])
-    d = V.cosine_distance(F.col("embedding"), qv)
+    d = V.cosine_distance("embedding", QUERY_VEC)
     return (short.join(emb, "vec_id")
             .select("vec_id", d.alias("_d"), "approx_dist")
             .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
@@ -6697,7 +6694,7 @@ def embedding_drift(spark, sf_dir):
     return (e.join(o, "label")
             .select("label", F.col("n_even").cast("bigint").alias("n_even"),
                     F.col("n_odd").cast("bigint").alias("n_odd"),
-                    F.round(cosine_distance(F.col("ce"), F.col("co")), 6)
+                    F.round(cosine_distance("ce", "co"), 6)
                     .alias("drift")))
 
 
@@ -8675,8 +8672,7 @@ def corpus_refresh_cycle_q(spark, sf_dir):
                .select("doc_id", F.col("s_v").alias("v"),
                        F.lit("carried").alias("state")))
     refreshed = carried.unionByName(fresh)
-    qv = F.array(*[F.lit(float(x)) for x in _hybrid_qvec()])
-    dist = cosine_distance(F.col("v"), qv)
+    dist = cosine_distance("v", _hybrid_qvec())
     return (refreshed.select("doc_id", "state", dist.alias("dist"))
             .orderBy(F.col("dist").asc(), F.col("doc_id").asc())
             .limit(10)
@@ -8771,11 +8767,10 @@ def refresh_compact_cycle_q(spark, sf_dir):
             spark, path, cur, hash_embed_udf(normalized=False),
             range_width=_STORE_RANGE_W)
         open(marker, "w").close()
-    qv = F.array(*[F.lit(float(x)) for x in _hybrid_qvec()])
     return (spark.read.parquet(path)
             .select("doc_id", "fp",
                     F.col("id_range").cast("bigint").alias("id_range"),
-                    F.round(cosine_distance(F.col("v"), qv), 6)
+                    F.round(cosine_distance("v", _hybrid_qvec()), 6)
                     .alias("probe_distance")))
 
 
@@ -10177,7 +10172,7 @@ def ivfpq_recall_eval_q(spark, sf_dir):
                                       F.col("cid").asc())
     probes = (queries.crossJoin(F.broadcast(cents))
               .select("qid", "cid",
-                      V.cosine_distance(F.col("qvec"), F.col("cvec"))
+                      V.cosine_distance("qvec", "cvec")
                       .alias("pd"))
               .withColumn("rn", F.row_number().over(pw))
               .filter(F.col("rn") <= 4).select("qid", "cid"))
@@ -10191,7 +10186,7 @@ def ivfpq_recall_eval_q(spark, sf_dir):
                         _PQ_SUB).alias("qs")))
     lut = (qsub.join(F.broadcast(cb), "m")
            .select("qid", "m", F.col("cid").alias("code"),
-                   V.l2_sq(F.col("qs"), F.col("cvec")).alias("ld")))
+                   V.l2_sq("qs", "cvec").alias("ld")))
     idx = spark.read.parquet(path).select("vec_id", "codes", "cid")
     ex = (idx.join(F.broadcast(probes), "cid")
           .select("qid", "vec_id",
@@ -10214,8 +10209,7 @@ def ivfpq_recall_eval_q(spark, sf_dir):
     approx = (short.join(emb, "vec_id")
               .join(F.broadcast(queries), "qid")
               .select("qid", "vec_id",
-                      V.cosine_distance(F.col("embedding"),
-                                        F.col("qvec")).alias("d"))
+                      V.cosine_distance("embedding", "qvec").alias("d"))
               .withColumn("rn", F.row_number().over(rw))
               .filter(F.col("rn") <= 3)
               .select("qid", F.col("vec_id").alias("a_vec")))
