@@ -27,6 +27,35 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED plan, results identical on the fixtures (optimized plans
+    # diffed for all 276 keys): a zero-norm vector's cosine distance is
+    # NULL through try_divide instead of an ANSI DIVIDE_BY_ZERO, and
+    # every top-k and window order over a cosine distance in knn.py and
+    # ann.py puts NULL last. The plans differ by NULLS LAST tokens
+    # (ann_ivf, ann_knn_join, ann_lsh, ann_recall_eval, knn_topk) and
+    # by rebuilt IVF/PQ index leaves; try_divide prints as `/`.
+    "ann_ivf", "ann_knn_join", "ann_lsh", "ann_recall_eval", "knn_topk",
+    "ivfpq_recall_eval", "ivfpq_topk", "pq_adc_topk", "pq_encode_error",
+    "semdedup",
+    # CHANGED closure only, plan byte-identical: the 18 media-decoder
+    # keys render their oracles from one geometry table and one
+    # template per family (plans/registry.py _MEDIA_GEOM), and their
+    # corpora through _media_corpus / _jpeg_stats. Every media oracle
+    # returns the same DuckDB rows at sf0.001 and sf0.01, every corpus
+    # leaf is unchanged, and only PYSRC/stream-source digests move.
+    # extract_features lost its unused decode_backend option
+    # (multimodal_features); corpus_refresh_cycle and llm_generate
+    # reach the changed vector/ANN code through their closures.
+    "media_decode_dispatch", "media_quality_gate",
+    "media_quality_gate_multiformat", "multimodal_bmp_rle_stats",
+    "multimodal_bmp_stats", "multimodal_gif_interlaced_stats",
+    "multimodal_gif_stats", "multimodal_jpeg_411_stats",
+    "multimodal_jpeg_420_stats", "multimodal_jpeg_422_stats",
+    "multimodal_jpeg_color_stats", "multimodal_jpeg_progressive_stats",
+    "multimodal_jpeg_stats", "multimodal_png_interlaced_stats",
+    "multimodal_png_stats", "multimodal_wav_stats", "stream_media_decode",
+    "stream_media_dispatch", "multimodal_features",
+    "corpus_refresh_cycle", "llm_generate",
     # CHANGED plan, results identical (optimized plans diffed for all
     # 276 keys): each vector expression is compiled from one SQL text
     # (functions/vector.py). Where a cosine operand is a constant

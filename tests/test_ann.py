@@ -54,3 +54,49 @@ def test_ivf_kmeans_recall_beats_probe_budget(spark):
     idx2, cents2 = ANN.build_ivf_index_kmeans(emb, n_cells=16, seed=7)
     got2 = ANN.ivf_search_kmeans(idx2, cents2, QUERY_VEC, k=10, nprobe=8).collect()
     assert [r.vec_id for r in got] == [r.vec_id for r in got2]
+
+
+# A zero-norm vector has no cosine distance: every search gives it NULL
+# and ranks it after every real distance, under ANSI as well.
+_ZERO_ID = 3
+_ROWS = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.6, 0.8, 0.0, 0.0]),
+         (2, [0.0, 1.0, 0.0, 0.0]), (_ZERO_ID, [0.0, 0.0, 0.0, 0.0]),
+         (4, [-1.0, 0.5, 0.0, 0.0])]
+_Q = [1.0, 0.2, 0.0, 0.0]
+_NONZERO_ORDER = [0, 1, 2, 4]  # ascending cosine distance to _Q
+
+
+def _zero_corpus(spark):
+    return spark.createDataFrame(_ROWS, "vec_id bigint, embedding array<double>")
+
+
+def _check_zero_norm(search):
+    """search(query, k) -> rows of (vec_id, distance_score)."""
+    full = search(_Q, len(_ROWS))
+    assert [r.vec_id for r in full] == _NONZERO_ORDER + [_ZERO_ID]
+    assert full[-1].distance_score is None
+    assert all(r.distance_score is not None for r in full[:-1])
+    short = search(_Q, len(_ROWS) - 1)
+    assert [r.vec_id for r in short] == _NONZERO_ORDER
+    zero_q = search([0.0] * 4, len(_ROWS))
+    assert [r.distance_score for r in zero_q] == [None] * len(_ROWS)
+
+
+def test_zero_norm_ranks_last_in_knn_topk(spark):
+    emb = _zero_corpus(spark)
+    _check_zero_norm(lambda q, k: knn_topk(emb, q, k=k, tiebreak="vec_id")
+                     .select("vec_id", "distance_score").collect())
+
+
+def test_zero_norm_ranks_last_in_ivf_search(spark, tmp_path):
+    path = str(tmp_path / "ivf")
+    ANN.materialize_ivf_index(_zero_corpus(spark), path, n_cells=2)
+    _check_zero_norm(lambda q, k: ANN.ivf_search_materialized(
+        spark, path, q, k=k, n_cells=2, nprobe=2).collect())
+
+
+def test_zero_norm_ranks_last_in_lsh_search(spark):
+    planes = [[0.0, 0.0, 0.0, 1.0]]  # every row and query hash to "b1"
+    idx = ANN.build_lsh_index(_zero_corpus(spark), planes=planes)
+    _check_zero_norm(lambda q, k: ANN.lsh_search(idx, q, k=k,
+                                                 planes=planes).collect())

@@ -187,16 +187,13 @@ def test_rag_http_transport_requires_endpoint(monkeypatch):
 
 def test_multimodal_frame_sample(spark):
     from tripgogo_vector_search_spark.operators.multimodal import (
-        MEDIA_SCHEMA, frame_sample, resize_images)
+        MEDIA_SCHEMA, frame_sample)
     rows = [(1, b"\x00\x01", "video/mp4", (None, None, 3500, None)),
             (2, b"\x00", "image/png", (8, 8, None, None))]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     frames = frame_sample(media, every_ms=1000).collect()
     assert [(r["media_id"], r["frame_ms"]) for r in frames] == \
         [(1, 0), (1, 1000), (1, 2000), (1, 3000)]
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        resize_images(media, 32, 32)
 
 
 def test_stream_parquet_sink_checkpointed(spark, tmp_path):

@@ -4,15 +4,19 @@
     python tools/run_query.py tpch_q1 [--sf /root/testdata/sf0.01]
     python tools/run_query.py knn_topk --explain
     python tools/run_query.py vocab_topk --oracle   # print the DuckDB SQL
+    python tools/run_query.py --oracle > oracles.json  # every {key: sql}
 
 Runs one registry query on a local session and prints the result (first
 --rows rows, default 20). `--explain` prints the formatted physical plan
-instead of executing; `--oracle` prints the ANSI-SQL oracle string.
+instead of executing; `--oracle` prints the ANSI-SQL oracle string, or
+with no query the whole {key: sql} map as sorted JSON, the text to diff
+before and after a registry change.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
@@ -35,6 +39,9 @@ def main() -> None:
 
     from tripgogo_vector_search_spark.plans.registry import ORACLES, QUERIES
 
+    if args.oracle and not args.query:
+        print(json.dumps(ORACLES, indent=1, sort_keys=True))
+        return
     if args.list or not args.query:
         for name in QUERIES:
             print(name)

@@ -83,7 +83,8 @@ def _norm(v: str, d: int) -> str:
 
 
 def _cos_sim(a: str, b: str, d: int) -> str:
-    return f"({_dot(a, b, d)}) / (({_norm(a, d)}) * ({_norm(b, d)}))"
+    """NULL, not an ANSI DIVIDE_BY_ZERO, when the norm product is 0."""
+    return f"try_divide({_dot(a, b, d)}, ({_norm(a, d)}) * ({_norm(b, d)}))"
 
 
 def to_vector(col: Operand, dim: int | None = None) -> Column:
@@ -125,7 +126,8 @@ def cosine_similarity(a: Operand, b: Operand) -> Column:
 
 def cosine_distance(a: Operand, b: Operand) -> Column:
     """Oracle ``COSINE_DISTANCE`` semantics: 1 - cosine similarity
-    (streamlit_app.py:64-67). With unit vectors this equals ``1 - dot``."""
+    (streamlit_app.py:64-67). With unit vectors this equals ``1 - dot``;
+    a zero vector's distance is NULL, which searches rank last."""
     return _compile(lambda a, b, d: f"1.0D - ({_cos_sim(a, b, d)})", a, b)
 
 

@@ -53,10 +53,10 @@ def py_dot(a: Sequence[float], b: Sequence[float]) -> float:
 
 
 def _cos_dist(a: Sequence[float], b: Sequence[float]) -> float:
-    """Driver-side cosine distance in the SQL expression's float-op order."""
-    na = math.sqrt(py_dot(a, a)) or 1.0
-    nb = math.sqrt(py_dot(b, b)) or 1.0
-    return 1.0 - py_dot(a, b) / (na * nb)
+    """Driver-side cosine distance in the SQL expression's float-op order;
+    inf where the SQL gives NULL (a zero norm), so it also sorts last."""
+    den = math.sqrt(py_dot(a, a)) * math.sqrt(py_dot(b, b))
+    return 1.0 - py_dot(a, b) / den if den else math.inf
 
 
 def lsh_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
@@ -93,7 +93,7 @@ def lsh_search(index: DataFrame, query_vec: Sequence[float], k: int = 3,
     cand = index.filter(F.col("bucket") == qbucket)
     scored = cand.withColumn(
         "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy("distance_score", id_col)
+    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
             .limit(k)
             .select(id_col, F.round("distance_score", 6).alias("distance_score")))
 
@@ -121,7 +121,7 @@ def lsh_search_materialized(spark, path: str, query_vec: Sequence[float],
     cand = spark.read.parquet(path).filter(F.col("bucket") == qbucket)
     scored = cand.withColumn(
         "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy("distance_score", id_col)
+    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
             .limit(k)
             .select(id_col, F.round("distance_score", 6).alias("distance_score")))
 
@@ -221,7 +221,7 @@ def ivf_search_materialized(spark, path: str,
     cand = spark.read.schema(h.schema).parquet(path).filter(F.col("cid").isin(probes))
     scored = cand.withColumn(
         "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy("distance_score", id_col)
+    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
             .limit(k)
             # partition-column type inference reads cid back as int;
             # restore the builder's bigint so the result schema is stable
@@ -253,15 +253,15 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     cents = spark.read.schema(h.centroid_schema).parquet(*h.centroid_files)
     qc = (queries.crossJoin(F.broadcast(cents))
           .withColumn("cdist", cosine_distance(q_vec, "cvec")))
-    wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc(), F.col("cid").asc())
+    wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc_nulls_last(), "cid")
     probes = (qc.withColumn("prn", F.row_number().over(wq))
               .filter(F.col("prn") <= nprobe)
               .select(q_id, q_vec, "cid"))
     cand = spark.read.schema(h.schema).parquet(path).join(F.broadcast(probes), "cid")
     scored = cand.withColumn(
         "distance_score", cosine_distance(vec_col, q_vec))
-    wk = W.partitionBy(q_id).orderBy(F.col("distance_score").asc(),
-                                     F.col(id_col).asc())
+    wk = W.partitionBy(q_id).orderBy(F.col("distance_score").asc_nulls_last(),
+                                     id_col)
     return (scored.withColumn("rn", F.row_number().over(wk))
             .filter(F.col("rn") <= k)
             .select(q_id, id_col, F.col("cid").cast("bigint").alias("cid"),
@@ -279,9 +279,9 @@ def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
     scored = (corpus.withColumn("vnorm", l2_norm(vec_col))
               .crossJoin(F.broadcast(cents))
               .withColumn("cdist",
-                          F.lit(1.0) - dot(vec_col, "cvec")
-                          / (F.col("vnorm") * F.col("cnorm"))))
-    w = W.partitionBy(id_col).orderBy(F.col("cdist").asc(), F.col("cid").asc())
+                          F.lit(1.0) - F.try_divide(dot(vec_col, "cvec"),
+                                                    F.col("vnorm") * F.col("cnorm"))))
+    w = W.partitionBy(id_col).orderBy(F.col("cdist").asc_nulls_last(), "cid")
     return (scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(id_col, vec_col, "cid"))
@@ -297,12 +297,12 @@ def ivf_search(corpus: DataFrame, query_vec: Sequence[float], k: int = 3,
     cents = (corpus.filter(F.col(id_col) < n_cells)
              .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")))
     probes = (cents.withColumn("qdist", cosine_distance("cvec", query_vec))
-              .orderBy(F.col("qdist").asc(), F.col("cid").asc())
+              .orderBy(F.col("qdist").asc_nulls_last(), "cid")
               .limit(nprobe).select("cid"))
     cand = index.join(F.broadcast(probes), "cid")
     scored = cand.withColumn(
         "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy("distance_score", id_col)
+    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
             .limit(k)
             .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))
 
@@ -339,6 +339,6 @@ def ivf_search_kmeans(index: DataFrame, centroids: list[list[float]],
     cand = index.filter(F.col("cid").isin(probes))
     scored = cand.withColumn(
         "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy("distance_score", id_col)
+    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
             .limit(k)
             .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))

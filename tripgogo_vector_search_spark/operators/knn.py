@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.vector import cosine_distance, match_score
 
@@ -30,13 +30,13 @@ def with_distance(df: DataFrame, query_vec: Sequence[float] | Column,
 def knn_topk(df: DataFrame, query_vec: Sequence[float] | Column, k: int = 3,
              vec_col: str = "embedding", dist_col: str = "distance_score",
              tiebreak: str | None = None) -> DataFrame:
-    """Exact top-k by ascending cosine distance.
+    """Exact top-k by ascending cosine distance, NULL (a zero vector) last.
 
     The reference breaks distance ties arbitrarily (no secondary sort key,
     streamlit_app.py:70-71); pass ``tiebreak=<id col>`` for deterministic
     results (required for oracle comparison).
     """
-    order = [dist_col] if tiebreak is None else [dist_col, tiebreak]
+    order = [F.col(dist_col).asc_nulls_last()] + ([tiebreak] if tiebreak else [])
     return with_distance(df, query_vec, vec_col, dist_col).orderBy(*order).limit(k)
 
 

@@ -19,17 +19,9 @@ at all, and baseline JPEG (r14, the first LOSSY format) is a real
 decode too: ``operators/jpeg.py`` runs the full marker/DQT/DHT/
 DRI/entropy/dezigzag/dequant/IDCT pipeline from the spec. Pure byte
 arithmetic (plus stdlib zlib for PNG), byte-exact against DuckDB
-BLOB oracles, fuzz-total on hostile bytes. What remains stubbed is
-the generic pluggable-codec boundary below (PIL/opencv-class
-libraries for resize and formats beyond the five real decoders —
-video codecs; within JPEG, off-whitelist sampling layouts,
-interpolating upsamplers, and arithmetic coding):
-
-* ``decode_backend="fake"`` (default) — deterministic byte-level features
-  (content-addressed; no codec), so pipelines and tests run offline;
-* ``decode_backend="pil"`` etc. — raises ``NotImplementedError`` with the
-  library boundary clearly marked; a real decoder drops into
-  ``_decode_batch`` without touching the Spark plumbing.
+BLOB oracles, fuzz-total on hostile bytes. All seven decoders in
+:data:`BLOB_STATS` are real; :func:`extract_features` is the one
+codec-free path, a deterministic byte histogram per object.
 
 At scale: binary payloads stay columnar in parquet, flow executor-side in
 Arrow record batches, and never pass through the driver.
@@ -89,13 +81,7 @@ def byte_feature_mapper(dim: int = FEATURE_DIM):
     return mapper
 
 
-def extract_features(media: DataFrame, dim: int = FEATURE_DIM,
-                     decode_backend: str = "fake") -> DataFrame:
-    if decode_backend != "fake":
-        raise NotImplementedError(
-            f"decode backend {decode_backend!r}: codec libraries are not "
-            "available in this environment; plug a real decoder into "
-            "byte_feature_mapper/_decode_batch")
+def extract_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     return media.mapInPandas(byte_feature_mapper(dim),
                              schema="media_id bigint, feat array<bigint>")
 
@@ -108,13 +94,6 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             .select("media_id",
                     F.explode(F.sequence(F.lit(0), F.col("meta.duration_ms"),
                                          F.lit(every_ms))).alias("frame_ms")))
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Real image resize needs a codec — clearly-marked stub."""
-    raise NotImplementedError(
-        "image resize requires a codec library (PIL/opencv), not available "
-        "in this environment; the mapInPandas plumbing is extract_features")
 
 
 # -- container sniffing (r10): typed binary ops, no codec ------------------

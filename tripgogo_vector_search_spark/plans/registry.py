@@ -9092,9 +9092,8 @@ def multimodal_magic_audit_q(spark, sf_dir):
     kind sniffed from leading magic bytes (PNG/JPEG/RIFF) as a pure
     Catalyst expression over the hex prefix — byte-level binary-column
     semantics proven engine-exact vs the DuckDB BLOB oracle, with no
-    codec anywhere (the decode stage stays the documented env-bound
-    stub; this is the classification pass that routes each object to
-    its decoder). Projection + bounded-key aggregate with map-side
+    codec anywhere (this is the classification pass that routes each
+    object to its decoder). Projection + bounded-key aggregate with map-side
     partials; payload bytes never leave the executors
     (operators/multimodal.py:synth_media_corpus, sniff_magic)."""
     from ..operators.multimodal import sniff_magic, synth_media_corpus
@@ -9107,29 +9106,183 @@ def multimodal_magic_audit_q(spark, sf_dir):
                  F.round(F.avg("n"), 6).alias("avg_bytes")))
 
 
-@query("multimodal_wav_stats",
-       """WITH b AS (SELECT doc_id,
-                  CASE WHEN doc_id % 3 = 0 THEN 8000
-                       WHEN doc_id % 3 = 1 THEN 16000
-                       ELSE 44100 END AS rate,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, rate, hx, dlen,
-                        (dlen + (dlen % 2)) // 2 AS n_samples
-                 FROM b),
-           s AS (SELECT doc_id, hx, dlen,
-                        unnest(CASE WHEN n_samples > 0 THEN
-                               generate_series(0, n_samples - 1)
-                               ELSE []::BIGINT[] END) AS k
-                 FROM p),
-           v AS (SELECT doc_id,
-                        ('0x' || substr(hx, 4*k + 1, 2))::BIGINT
-                        + 256 * (CASE WHEN 2*k + 2 <= dlen
-                                 THEN ('0x' || substr(hx, 4*k + 3,
-                                                      2))::BIGINT
-                                 ELSE 0 END) AS u
-                 FROM s),
+# --------------------------------------------------------------------------
+# Media decoders. Each synthesized format's geometry has one home,
+# _MEDIA_GEOM, and every media oracle renders from it through one
+# template per family. The oracle is the reference implementation: it
+# restates the synthesis geometry of operators/ instead of importing
+# it (only the two pixel caps are shared constants), so a synthesis
+# change is made in the operator and here.
+# --------------------------------------------------------------------------
+
+_PNG_W, _GIF_W, _BMP_W = "doc_id % 7 + 3", "doc_id % 6 + 2", "doc_id % 5 + 4"
+
+#: format -> (width, height) as DuckDB SQL over a documents row's doc_id
+#: and dlen, the UTF-8 byte length of its text; ``{w}`` in a height is
+#: the width. A JPEG is a strip of one {mcu_w} x {mcu_h} MCU per text
+#: byte, at most 48; a WAV is (sample rate, frames) of 16-bit mono PCM.
+_MEDIA_GEOM = {
+    "png": (_PNG_W, "least(dlen // (3 * {w}), 65535 // (3 * {w} + 1))"),
+    "png_interlaced": (_PNG_W,
+                       "least(dlen // (3 * {w}), 65528 // (3 * {w} + 2))"),
+    "gif": (_GIF_W, f"least(dlen // {{w}}, {_GIF_SYNTH_MAX_PIXELS} // {{w}})"),
+    "bmp": (_BMP_W, "dlen // (3 * {w})"),
+    "bmp_rle": (_BMP_W,
+                f"least(dlen // {{w}}, {_BMP_RLE_SYNTH_MAX_PIXELS} // {{w}})"),
+    "jpeg": ("{mcu_w} * least(dlen, 48)",
+             "CASE WHEN dlen >= 1 THEN {mcu_h} END"),
+    "wav": ("CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END",
+            "(dlen + dlen % 2) // 2"),
+}
+
+_HEX_BYTE = "('0x' || substr(hx, {}, 2))::BIGINT"
+
+
+def _media_dims(fmt: str, w: str | None = "w",
+                mcu: tuple[int, int] = (8, 8)) -> tuple[str, str]:
+    """(width, height) SQL of ``fmt``. The height reads the width as the
+    column ``w``, or inline when ``w`` is None, and is NULL for a NULL
+    text (DuckDB's least skips NULLs)."""
+    wid = _MEDIA_GEOM[fmt][0].format(mcu_w=mcu[0])
+    hgt = _MEDIA_GEOM[fmt][1].format(w=w or f"({wid})", mcu_h=mcu[1])
+    return wid, f"CASE WHEN dlen IS NULL THEN NULL ELSE {hgt} END"
+
+
+def _media_prologue(fmt: str, n: str | None, cols: str = "", where: str = "",
+                    u: str = _HEX_BYTE.format("2*i + 1"),
+                    mcu: tuple[int, int] = (8, 8)) -> str:
+    """The CTEs a single-format oracle opens with: b reads each document's
+    text as hex, p sizes it by ``fmt``'s geometry as (w, h), s unnests
+    the offsets i in [0, n) of each object with h >= 1, and v reads
+    ``cols`` and ``u``, by default the text's byte i. Ends after p when
+    ``n`` is None."""
+    w, h = _media_dims(fmt, mcu=mcu)
+    sql = f"""WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
+                            octet_length(encode(text)) AS dlen
+                     FROM documents{where}),
+          p AS (SELECT doc_id, hx, dlen, {w} AS w, {h} AS h FROM b)"""
+    if n is None:
+        return sql
+    return sql + f""",
+          s AS (SELECT doc_id, hx, dlen, w,
+                       unnest(CASE WHEN h >= 1 THEN generate_series(0, {n} - 1)
+                              ELSE []::BIGINT[] END) AS i
+                FROM p),
+          v AS (SELECT doc_id{cols}, {u} AS u FROM s)"""
+
+
+def _image_tail(stats: dict[str, str], n: str = "count(*)",
+                src: str = "v") -> str:
+    """The rest of an image oracle: q sums each stat's per-unit SQL over
+    ``src`` per object and counts its ``n`` units; the result is the
+    object's dimensions where it decodes, then each stat: a mean_* as
+    its sum over n, any other as the exact sum."""
+    sums = ", ".join(f"sum({e}) AS {s}" for s, e in stats.items())
+    outs = ",\n                 ".join(
+        f"round(q.{s}::DOUBLE / q.n, 6) AS {s}" if s.startswith("mean_")
+        else f"CAST(q.{s} AS BIGINT) AS {s}" for s in stats)
+    return f""",
+          q AS (SELECT doc_id, {n} AS n, {sums}
+                FROM {src} GROUP BY doc_id)
+          SELECT p.doc_id AS media_id,
+                 CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
+                 CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT) AS height,
+                 CAST(CASE WHEN p.h >= 1 THEN p.w * p.h END AS BIGINT)
+                   AS n_pixels,
+                 {outs}
+          FROM p LEFT JOIN q ON p.doc_id = q.doc_id"""
+
+
+def _rgb_oracle(fmt: str, order: str) -> str:
+    """Oracle of a 24-bit image whose pixels are the text bytes in channel
+    ``order`` ("rgb" for PNG, "bgr" for BMP): the channel means."""
+    return (_media_prologue(fmt, "3 * w * h", ", i % 3 AS ch")
+            + _image_tail({f"mean_{c}": f"CASE WHEN ch = {k} THEN u ELSE 0 END"
+                           for k, c in enumerate(order)}, n="count(*) // 3"))
+
+
+def _palette_oracle(fmt: str, rgb: bool = True, row_weighted: bool = False,
+                    where: str = "") -> str:
+    """Oracle of an 8-bit palette image whose indices are the text bytes:
+    the mean index; with ``row_weighted``, row_weighted_idx = sum((row +
+    1) * index), the one statistic that sees row order; with ``rgb``, the
+    channel means of the affine palette (3i+7, 7i+1, 13i+5) mod 256."""
+    stats = {"mean_idx": "u"}
+    if row_weighted:
+        stats["row_weighted_idx"] = "(r + 1) * u"
+    if rgb:
+        stats |= {"mean_r": "(3*u + 7) % 256", "mean_g": "(7*u + 1) % 256",
+                  "mean_b": "(13*u + 5) % 256"}
+    return (_media_prologue(fmt, "w * h", ", i // w AS r", where)
+            + _image_tail(stats))
+
+
+def _jpeg_oracle(mcu_w: int, mcu_h: int, color: bool) -> str:
+    """Oracle of a JPEG strip of one mcu_w x mcu_h MCU per text byte. With
+    DC quantization step 8 a uniform block decodes exactly, so each MCU
+    is its byte: grayscale gives mean_gray; color gives mean_y and the
+    means of the full-range 16-bit fixed-point YCbCr->RGB conversion
+    over the affine chroma planes Cb = (3u+7) % 256, Cr = (7u+1) % 256."""
+    head = _media_prologue("jpeg", f"w // {mcu_w}", mcu=(mcu_w, mcu_h))
+    if not color:
+        return head + _image_tail({"mean_gray": "u"})
+    return head + """,
+          c AS (SELECT doc_id, u,
+                       (3*u + 7) % 256 - 128 AS cb,
+                       (7*u + 1) % 256 - 128 AS cr
+                FROM v),
+          d AS (SELECT doc_id, u,
+                       u + CAST(floor((91881*cr + 32768) / 65536.0)
+                                AS BIGINT) AS r0,
+                       u - CAST(floor((22554*cb + 46802*cr + 32768)
+                                      / 65536.0) AS BIGINT) AS g0,
+                       u + CAST(floor((116130*cb + 32768) / 65536.0)
+                                AS BIGINT) AS b0
+                FROM c)""" + _image_tail(
+        {"mean_y": "u", **{f"mean_{c}": f"least(greatest({c}0, 0), 255)"
+                           for c in "rgb"}}, src="d")
+
+
+def _media_corpus(spark, sf_dir, synth) -> str:
+    """Path of the corpus ``synth`` renders from the documents table,
+    materialized once under the synth's name without ``synth_``. The
+    table is widened first: the fixture is one file, and the per-byte
+    synthesis would otherwise run as one task."""
+    from ..partitioning import widen
+    return _materialized_index(
+        spark, sf_dir, synth.__name__.removeprefix("synth_"),
+        lambda p: synth(widen(_t(spark, sf_dir, "documents")))
+        .write.mode("overwrite").parquet(p),
+        src=(synth, widen))
+
+
+def _image_stats(df: DataFrame, *stats: str) -> DataFrame:
+    """An image decoder's dimensions, then ``stats`` in order, each mean_*
+    rounded to 6 dp."""
+    return df.select("media_id", "width", "height", "n_pixels",
+                     *(F.round(s, 6).alias(s) if s.startswith("mean_") else s
+                       for s in stats))
+
+
+def _jpeg_stats(spark, sf_dir, synth, color: bool) -> DataFrame:
+    """The decoded stats of the JPEG corpus ``synth`` renders: mean_gray,
+    or for color the Y mean as mean_y and the RGB means."""
+    from ..operators.jpeg import decode_jpeg_stats
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth))
+    w = decode_jpeg_stats(corpus)
+    if not color:
+        return _image_stats(w, "mean_gray")
+    return w.select("media_id", "width", "height", "n_pixels",
+                    F.round("mean_gray", 6).alias("mean_y"),
+                    *(F.round(c, 6).alias(c)
+                      for c in ("mean_r", "mean_g", "mean_b")))
+
+
+@query("multimodal_wav_stats", _media_prologue(
+    "wav", "h", u=f"""{_HEX_BYTE.format("4*i + 1")}
+                        + 256 * (CASE WHEN 2*i + 2 <= dlen
+                                 THEN {_HEX_BYTE.format("4*i + 3")}
+                                 ELSE 0 END)""") + """,
            q AS (SELECT doc_id,
                         sum(CASE WHEN u >= 32768
                                  THEN (u - 65536) * (u - 65536)
@@ -9137,14 +9290,14 @@ def multimodal_magic_audit_q(spark, sf_dir):
                         count(*) AS n
                  FROM v GROUP BY doc_id)
            SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.hx IS NULL THEN NULL
-                            ELSE p.rate END AS INT) AS sample_rate,
-                  CAST(CASE WHEN p.hx IS NULL THEN NULL
-                            ELSE 1 END AS INT) AS n_channels,
-                  CAST(CASE WHEN p.hx IS NULL THEN NULL
-                            ELSE 16 END AS INT) AS bits_per_sample,
-                  CAST(p.n_samples AS BIGINT) AS n_samples,
-                  round(p.n_samples * 1000.0 / p.rate, 6) AS duration_ms,
+                  CAST(CASE WHEN p.h IS NOT NULL THEN p.w END AS INT)
+                    AS sample_rate,
+                  CAST(CASE WHEN p.h IS NOT NULL THEN 1 END AS INT)
+                    AS n_channels,
+                  CAST(CASE WHEN p.h IS NOT NULL THEN 16 END AS INT)
+                    AS bits_per_sample,
+                  CAST(p.h AS BIGINT) AS n_samples,
+                  round(p.h * 1000.0 / p.w, 6) AS duration_ms,
                   round(sqrt(q.ss::DOUBLE / q.n), 6) AS rms
            FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
 def multimodal_wav_stats_q(spark, sf_dir):
@@ -9160,8 +9313,8 @@ def multimodal_wav_stats_q(spark, sf_dir):
     stats synthesis-side from the text bytes (hex-pair arithmetic over
     the BLOB — no codec on either engine), so header fields AND
     sample-level math are value-exact across engines. This upgrades
-    multimodal_magic_audit's container IDs into content metadata; only
-    pixel codecs (JPEG/PNG) remain env-bound stubs. Scale: map-only
+    multimodal_magic_audit's container IDs into content metadata.
+    Scale: map-only
     Arrow pass, no shuffle, payload bytes never leave the executors.
     Reference parity: media metadata extraction the reference delegates
     to client-side libraries (streamlit_app.py display layer)."""
@@ -9175,37 +9328,7 @@ def multimodal_wav_stats_q(spark, sf_dir):
         F.round("rms", 6).alias("rms"))
 
 
-@query("multimodal_bmp_stats",
-       """WITH b AS (SELECT doc_id, doc_id % 5 + 4 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, w, hx,
-                        dlen // (3 * w) AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, 3 * w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id, i % 3 AS ch,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id,
-                        sum(CASE WHEN ch = 0 THEN u ELSE 0 END) AS sb,
-                        sum(CASE WHEN ch = 1 THEN u ELSE 0 END) AS sg,
-                        sum(CASE WHEN ch = 2 THEN u ELSE 0 END) AS sr,
-                        count(*) // 3 AS npx
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.sb::DOUBLE / q.npx, 6) AS mean_b,
-                  round(q.sg::DOUBLE / q.npx, 6) AS mean_g,
-                  round(q.sr::DOUBLE / q.npx, 6) AS mean_r
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_bmp_stats", _rgb_oracle("bmp", "bgr"))
 def multimodal_bmp_stats_q(spark, sf_dir):
     """The SECOND real decode (after multimodal_wav_stats): the
     documents table becomes genuine 24-bpp uncompressed BMP images via
@@ -9219,54 +9342,15 @@ def multimodal_bmp_stats_q(spark, sf_dir):
     non-BI_RGB payloads handled (_bmp_blob_stats; plain-Python spec
     parse_bmp pinned equal + fuzz-total in tests/test_round11_props).
     The DuckDB oracle derives the same stats synthesis-side from the
-    text bytes. With WAV + BMP real, the NotImplementedError surface
-    is exactly the genuinely env-bound compressed codecs (JPEG/PNG).
-    Scale: map-only Arrow pass, no shuffle. Reference parity: media
+    text bytes. Scale: map-only Arrow pass, no shuffle. Reference parity: media
     metadata extraction the reference delegates to client-side
     libraries (streamlit_app.py display layer)."""
     from ..operators.multimodal import decode_bmp_stats, synth_bmp_corpus
     m = synth_bmp_corpus(_t(spark, sf_dir, "documents"))
-    w = decode_bmp_stats(m)
-    return w.select(
-        "media_id", "width", "height", "n_pixels",
-        F.round("mean_b", 6).alias("mean_b"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_r", 6).alias("mean_r"))
+    return _image_stats(decode_bmp_stats(m), "mean_b", "mean_g", "mean_r")
 
 
-@query("multimodal_png_stats",
-       """WITH b AS (SELECT doc_id, doc_id % 7 + 3 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, w, hx,
-                        CASE WHEN hx IS NULL THEN NULL
-                             ELSE least(dlen // (3 * w),
-                                        65535 // (3 * w + 1)) END AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, 3 * w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id, i % 3 AS ch,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id,
-                        sum(CASE WHEN ch = 0 THEN u ELSE 0 END) AS sr,
-                        sum(CASE WHEN ch = 1 THEN u ELSE 0 END) AS sg,
-                        sum(CASE WHEN ch = 2 THEN u ELSE 0 END) AS sb,
-                        count(*) // 3 AS npx
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.sr::DOUBLE / q.npx, 6) AS mean_r,
-                  round(q.sg::DOUBLE / q.npx, 6) AS mean_g,
-                  round(q.sb::DOUBLE / q.npx, 6) AS mean_b
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_png_stats", _rgb_oracle("png", "rgb"))
 def multimodal_png_stats_q(spark, sf_dir):
     """The THIRD real decode — and the first through a REAL
     COMPRESSION LAYER: the documents table becomes genuine PNG files
@@ -9284,68 +9368,17 @@ def multimodal_png_stats_q(spark, sf_dir):
     decoder there too). The DuckDB oracle derives the same stats
     synthesis-side from the text bytes — filters and compression are
     exactly invertible, so pixel means are a pure function of the
-    generating formula. JPEG remains the one env-bound codec stub.
-    Scale: map-only Arrow pass, no shuffle, payload bytes never leave
+    generating formula. Scale: map-only Arrow pass, no shuffle, payload bytes never leave
     the executors. Reference parity: media metadata extraction the
     reference delegates to client-side libraries (streamlit_app.py
     display layer)."""
     from ..operators.multimodal import decode_png_stats, synth_png_corpus
-    # The corpus of PNG FILES is a materialized artifact (media bytes
-    # are stored, not synthesized per query — the WAV/BMP syntheses
-    # are cheap string copies and stay inline; the PNG one pays a
-    # per-byte zlib/filter construction, which belongs at build time):
-    from ..partitioning import widen
-    # widen() before synthesis: the fixture table is one file, and an
-    # unwidened build runs the whole per-byte construction as ONE task
-    # (measured: the 2x-replicated corpus built FASTER than 1x because
-    # it arrived as two partitions); widen is in src= so existing
-    # caches rebuild under the parallel layout
-    path = _materialized_index(
-        spark, sf_dir, "png_corpus",
-        lambda p: synth_png_corpus(widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_png_corpus, widen))
-    w = decode_png_stats(spark.read.parquet(path))
-    return w.select(
-        "media_id", "width", "height", "n_pixels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"))
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth_png_corpus))
+    return _image_stats(decode_png_stats(corpus), "mean_r", "mean_g", "mean_b")
 
 
 @query("multimodal_png_interlaced_stats",
-       """WITH b AS (SELECT doc_id, doc_id % 7 + 3 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, w, hx,
-                        CASE WHEN hx IS NULL THEN NULL
-                             ELSE least(dlen // (3 * w),
-                                        65528 // (3 * w + 2)) END AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, 3 * w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id, i % 3 AS ch,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id,
-                        sum(CASE WHEN ch = 0 THEN u ELSE 0 END) AS sr,
-                        sum(CASE WHEN ch = 1 THEN u ELSE 0 END) AS sg,
-                        sum(CASE WHEN ch = 2 THEN u ELSE 0 END) AS sb,
-                        count(*) // 3 AS npx
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.sr::DOUBLE / q.npx, 6) AS mean_r,
-                  round(q.sg::DOUBLE / q.npx, 6) AS mean_g,
-                  round(q.sb::DOUBLE / q.npx, 6) AS mean_b
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+       _rgb_oracle("png_interlaced", "rgb"))
 def multimodal_png_interlaced_stats_q(spark, sf_dir):
     """ADAM7-INTERLACED PNG (r15): the same pixel source as
     multimodal_png_stats, serialized in the spec's seven-pass
@@ -9367,21 +9400,9 @@ def multimodal_png_interlaced_stats_q(spark, sf_dir):
     h <= 65528 // (3w + 2) keeps one stored block sufficient).
     Scale: map-only Arrow pass over the materialized sidecar, no
     shuffle. Reference parity: streamlit_app.py display layer."""
-    from ..operators.multimodal import (decode_png_stats,
-                                        synth_png_interlaced_corpus)
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "png_interlaced_corpus",
-        lambda p: synth_png_interlaced_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_png_interlaced_corpus, widen))
-    w = decode_png_stats(spark.read.parquet(path))
-    return w.select(
-        "media_id", "width", "height", "n_pixels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"))
+    from ..operators.multimodal import decode_png_stats, synth_png_interlaced_corpus
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth_png_interlaced_corpus))
+    return _image_stats(decode_png_stats(corpus), "mean_r", "mean_g", "mean_b")
 
 
 @query("dsir_importance_weights",
@@ -10234,43 +10255,10 @@ def ivfpq_recall_eval_q(spark, sf_dir):
 # (VERDICT r12 list #5)
 # --------------------------------------------------------------------------
 
-@query("multimodal_gif_stats",
-       f"""WITH b AS (SELECT doc_id, doc_id % 6 + 2 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, w, hx,
-                        CASE WHEN hx IS NULL THEN NULL
-                             ELSE least(dlen // w, {_GIF_SYNTH_MAX_PIXELS} // w) END AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id, count(*) AS npx,
-                        sum(u) AS si,
-                        sum((3*u + 7) % 256) AS sr,
-                        sum((7*u + 1) % 256) AS sg,
-                        sum((13*u + 5) % 256) AS sb
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.si::DOUBLE / q.npx, 6) AS mean_idx,
-                  round(q.sr::DOUBLE / q.npx, 6) AS mean_r,
-                  round(q.sg::DOUBLE / q.npx, 6) AS mean_g,
-                  round(q.sb::DOUBLE / q.npx, 6) AS mean_b
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_gif_stats", _palette_oracle("gif"))
 def multimodal_gif_stats_q(spark, sf_dir):
     """The FOURTH real decode — through a REAL LZW layer (VERDICT r12
-    list #5, the last lossless format behind the decoder module's
-    stub surface): the documents table becomes genuine GIF89a files
+    list #5): the documents table becomes genuine GIF89a files
     via pure Catalyst byte arithmetic INCLUDING the LZW code stream
     (operators/multimodal.py:synth_gif_corpus — clear-interleaved
     9-bit codes bit-packed LSB-first with exact integer div/mul,
@@ -10286,30 +10274,14 @@ def multimodal_gif_stats_q(spark, sf_dir):
     oracle derives the same stats synthesis-side from the text bytes
     — LZW is exactly invertible, so pixel means are a pure function
     of the generating formula, and the palette channels are affine
-    maps of the index. The decoder stub surface is now JPEG-class
-    lossy codecs only. Scale: map-only Arrow pass over the
+    maps of the index. Scale: map-only Arrow pass over the
     materialized corpus sidecar, no shuffle, payload bytes never
     leave the executors. Reference parity: media metadata extraction
     the reference delegates to client-side libraries
     (streamlit_app.py display layer)."""
     from ..operators.multimodal import decode_gif_stats, synth_gif_corpus
-    from ..partitioning import widen
-    # corpus of GIF FILES is a materialized artifact (the PNG-corpus
-    # convention: per-byte synthesis is an index-build cost, media
-    # bytes are stored in any real pipeline); widen() so the build
-    # parallelizes over the single-file fixture
-    path = _materialized_index(
-        spark, sf_dir, "gif_corpus",
-        lambda p: synth_gif_corpus(widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_gif_corpus, widen))
-    w = decode_gif_stats(spark.read.parquet(path))
-    return w.select(
-        "media_id", "width", "height", "n_pixels",
-        F.round("mean_idx", 6).alias("mean_idx"),
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"))
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth_gif_corpus))
+    return _image_stats(decode_gif_stats(corpus), "mean_idx", "mean_r", "mean_g", "mean_b")
 
 
 # --------------------------------------------------------------------------
@@ -10317,41 +10289,7 @@ def multimodal_gif_stats_q(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 @query("multimodal_bmp_rle_stats",
-       f"""WITH b AS (SELECT doc_id, doc_id % 5 + 4 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, w, hx,
-                        CASE WHEN hx IS NULL THEN NULL
-                             ELSE least(dlen // w,
-                                        {_BMP_RLE_SYNTH_MAX_PIXELS}
-                                        // w) END AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id, i // w AS r,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id, count(*) AS npx, sum(u) AS si,
-                        sum((r + 1) * u) AS srw,
-                        sum((3*u + 7) % 256) AS sr,
-                        sum((7*u + 1) % 256) AS sg,
-                        sum((13*u + 5) % 256) AS sb
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.si::DOUBLE / q.npx, 6) AS mean_idx,
-                  CAST(q.srw AS BIGINT) AS row_weighted_idx,
-                  round(q.sr::DOUBLE / q.npx, 6) AS mean_r,
-                  round(q.sg::DOUBLE / q.npx, 6) AS mean_g,
-                  round(q.sb::DOUBLE / q.npx, 6) AS mean_b
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+       _palette_oracle("bmp_rle", row_weighted=True))
 def multimodal_bmp_rle_stats_q(spark, sf_dir):
     """RLE8-COMPRESSED BMP (r15) — the second real COMPRESSION layer
     in the BMP family (the uncompressed key's decoder rejects
@@ -10376,54 +10314,13 @@ def multimodal_bmp_rle_stats_q(spark, sf_dir):
     BGR0 palette (the GIF convention). Scale: map-only Arrow pass
     over the materialized sidecar, no shuffle. Reference parity:
     streamlit_app.py display layer."""
-    from ..operators.multimodal import (decode_bmp_rle_stats,
-                                        synth_bmp_rle_corpus)
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "bmp_rle_corpus",
-        lambda p: synth_bmp_rle_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_bmp_rle_corpus, widen))
-    w = decode_bmp_rle_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_idx", 6).alias("mean_idx"),
-                    "row_weighted_idx",
-                    F.round("mean_r", 6).alias("mean_r"),
-                    F.round("mean_g", 6).alias("mean_g"),
-                    F.round("mean_b", 6).alias("mean_b"))
+    from ..operators.multimodal import decode_bmp_rle_stats, synth_bmp_rle_corpus
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth_bmp_rle_corpus))
+    return _image_stats(decode_bmp_rle_stats(corpus), "mean_idx", "row_weighted_idx", "mean_r", "mean_g", "mean_b")
 
 
 @query("multimodal_gif_interlaced_stats",
-       f"""WITH b AS (SELECT doc_id, doc_id % 6 + 2 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents),
-           p AS (SELECT doc_id, w, hx,
-                        CASE WHEN hx IS NULL THEN NULL
-                             ELSE least(dlen // w,
-                                        {_GIF_SYNTH_MAX_PIXELS} // w)
-                             END AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id, i // w AS r,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id, count(*) AS npx, sum(u) AS si,
-                        sum((r + 1) * u) AS srw
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.si::DOUBLE / q.npx, 6) AS mean_idx,
-                  CAST(q.srw AS BIGINT) AS row_weighted_idx
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+       _palette_oracle("gif", rgb=False, row_weighted=True))
 def multimodal_gif_interlaced_stats_q(spark, sf_dir):
     """INTERLACED GIF (r15): the same pixel source as
     multimodal_gif_stats, but the LZW stream carries the rows in the
@@ -10442,19 +10339,9 @@ def multimodal_gif_interlaced_stats_q(spark, sf_dir):
     (tests/test_round15_props.py). Scale: map-only Arrow pass over
     the materialized sidecar, no shuffle. Reference parity:
     streamlit_app.py display layer."""
-    from ..operators.multimodal import (decode_gif_rowpos_stats,
-                                        synth_gif_interlaced_corpus)
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "gif_interlaced_corpus",
-        lambda p: synth_gif_interlaced_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_gif_interlaced_corpus, widen))
-    w = decode_gif_rowpos_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_idx", 6).alias("mean_idx"),
-                    "row_weighted_idx")
+    from ..operators.multimodal import decode_gif_rowpos_stats, synth_gif_interlaced_corpus
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth_gif_interlaced_corpus))
+    return _image_stats(decode_gif_rowpos_stats(corpus), "mean_idx", "row_weighted_idx")
 
 
 def _gif_arrival_path(spark, sf_dir) -> str:
@@ -10483,38 +10370,7 @@ def _gif_arrival_path(spark, sf_dir) -> str:
 
 
 @query("stream_media_decode",
-       f"""WITH b AS (SELECT doc_id, doc_id % 6 + 2 AS w,
-                  upper(hex(encode(text))) AS hx,
-                  octet_length(encode(text)) AS dlen
-           FROM documents WHERE doc_id % 10 = 3),
-           p AS (SELECT doc_id, w, hx,
-                        CASE WHEN hx IS NULL THEN NULL
-                             ELSE least(dlen // w, {_GIF_SYNTH_MAX_PIXELS} // w) END AS h
-                 FROM b),
-           s AS (SELECT doc_id, w, h, hx,
-                        unnest(CASE WHEN h >= 1 THEN
-                               generate_series(0, w * h - 1)
-                               ELSE []::BIGINT[] END) AS i
-                 FROM p),
-           v AS (SELECT doc_id,
-                        ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                 FROM s),
-           q AS (SELECT doc_id, count(*) AS npx,
-                        sum(u) AS si,
-                        sum((3*u + 7) % 256) AS sr,
-                        sum((7*u + 1) % 256) AS sg,
-                        sum((13*u + 5) % 256) AS sb
-                 FROM v GROUP BY doc_id)
-           SELECT p.doc_id AS media_id,
-                  CAST(CASE WHEN p.h >= 1 THEN p.w END AS INT) AS width,
-                  CAST(CASE WHEN p.h >= 1 THEN p.h END AS INT)
-                    AS height,
-                  CAST(q.npx AS BIGINT) AS n_pixels,
-                  round(q.si::DOUBLE / q.npx, 6) AS mean_idx,
-                  round(q.sr::DOUBLE / q.npx, 6) AS mean_r,
-                  round(q.sg::DOUBLE / q.npx, 6) AS mean_g,
-                  round(q.sb::DOUBLE / q.npx, 6) AS mean_b
-           FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+       _palette_oracle("gif", where=" WHERE doc_id % 10 = 3"))
 def stream_media_decode_q(spark, sf_dir):
     """Streaming decode-on-arrival: media objects arriving on the
     stream (the doc_id%10==3 cohort as real GIF bytes, rendered ONCE
@@ -10533,27 +10389,14 @@ def stream_media_decode_q(spark, sf_dir):
     from ..streaming.ingest import stream_media_decode
     out = stream_media_decode(spark, _gif_arrival_path(spark, sf_dir),
                               _cache_dir(sf_dir, "stream_media_decode"))
-    return out.select(
-        "media_id", "width", "height", "n_pixels",
-        F.round("mean_idx", 6).alias("mean_idx"),
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"))
+    return _image_stats(out, "mean_idx", "mean_r", "mean_g", "mean_b")
 
 
 # --------------------------------------------------------------------------
 # Round-13: media curation gate over DECODED stats
 # --------------------------------------------------------------------------
 
-@query("media_quality_gate",
-       f"""WITH b AS (SELECT doc_id, doc_id % 6 + 2 AS w,
-                  octet_length(encode(text)) AS dlen,
-                  text IS NULL AS tnull
-           FROM documents),
-           p AS (SELECT doc_id, w,
-                        CASE WHEN tnull THEN NULL
-                             ELSE least(dlen // w, {_GIF_SYNTH_MAX_PIXELS} // w) END AS h
-                 FROM b)
+@query("media_quality_gate", _media_prologue("gif", None) + """
            SELECT doc_id AS media_id,
                   (h IS NULL OR h < 1) AS undecodable,
                   CASE WHEN h >= 1 THEN w * h < 64 END AS too_small,
@@ -10584,13 +10427,8 @@ def media_quality_gate_q(spark, sf_dir):
     gates 15 too-small and 219 extreme-aspect objects, keeping 266 of
     500."""
     from ..operators.multimodal import decode_gif_stats, synth_gif_corpus
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "gif_corpus",
-        lambda p: synth_gif_corpus(widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_gif_corpus, widen))
-    s = decode_gif_stats(spark.read.parquet(path))
+    corpus = spark.read.parquet(_media_corpus(spark, sf_dir, synth_gif_corpus))
+    s = decode_gif_stats(corpus)
     dec = F.col("width").isNotNull()
     too_small = F.when(dec, F.col("n_pixels") < 64)
     aspect = F.when(dec, F.col("height") > 16 * F.col("width"))
@@ -10693,32 +10531,7 @@ def llm_generate_batch_q(spark, sf_dir):
 # format; VERDICT r13 list #2)
 # --------------------------------------------------------------------------
 
-@query("multimodal_jpeg_stats",
-       """WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
-                            octet_length(encode(text)) AS dlen
-                     FROM documents),
-          p AS (SELECT doc_id, hx,
-                       CASE WHEN hx IS NULL OR dlen < 1 THEN NULL
-                            ELSE least(dlen, 48) END AS nb
-                FROM b),
-          s AS (SELECT doc_id,
-                       unnest(CASE WHEN nb >= 1 THEN
-                              generate_series(0, nb - 1)
-                              ELSE []::BIGINT[] END) AS i,
-                       hx
-                FROM p),
-          v AS (SELECT doc_id,
-                       ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                FROM s),
-          q AS (SELECT doc_id, count(*) AS nb2, sum(u) AS su
-                FROM v GROUP BY doc_id)
-          SELECT p.doc_id AS media_id,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 * p.nb END AS INT)
-                   AS width,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 END AS INT) AS height,
-                 CAST(64 * q.nb2 AS BIGINT) AS n_pixels,
-                 round(q.su::DOUBLE / q.nb2, 6) AS mean_gray
-          FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_jpeg_stats", _jpeg_oracle(8, 8, color=False))
 def multimodal_jpeg_stats_q(spark, sf_dir):
     """The FIFTH real decode, and the first LOSSY format (VERDICT r13
     list #2 — closing the decoder module's last stub): the documents
@@ -10744,62 +10557,11 @@ def multimodal_jpeg_stats_q(spark, sf_dir):
     bytes never leave the executors. Reference parity: media handling
     the reference delegates to client-side libraries
     (streamlit_app.py display layer)."""
-    from ..operators.jpeg import decode_jpeg_stats, synth_jpeg_corpus
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "jpeg_corpus",
-        lambda p: synth_jpeg_corpus(widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_jpeg_corpus, widen))
-    w = decode_jpeg_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_gray", 6).alias("mean_gray"))
+    from ..operators.jpeg import synth_jpeg_corpus
+    return _jpeg_stats(spark, sf_dir, synth_jpeg_corpus, color=False)
 
 
-@query("multimodal_jpeg_420_stats",
-       """WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
-                            octet_length(encode(text)) AS dlen
-                     FROM documents),
-          p AS (SELECT doc_id, hx,
-                       CASE WHEN hx IS NULL OR dlen < 1 THEN NULL
-                            ELSE least(dlen, 48) END AS nb
-                FROM b),
-          s AS (SELECT doc_id,
-                       unnest(CASE WHEN nb >= 1 THEN
-                              generate_series(0, nb - 1)
-                              ELSE []::BIGINT[] END) AS i,
-                       hx
-                FROM p),
-          v AS (SELECT doc_id,
-                       ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                FROM s),
-          c AS (SELECT doc_id, u,
-                       (3*u + 7) % 256 - 128 AS cb,
-                       (7*u + 1) % 256 - 128 AS cr
-                FROM v),
-          d AS (SELECT doc_id, u,
-                       u + CAST(floor((91881*cr + 32768) / 65536.0)
-                                AS BIGINT) AS r0,
-                       u - CAST(floor((22554*cb + 46802*cr + 32768)
-                                      / 65536.0) AS BIGINT) AS g0,
-                       u + CAST(floor((116130*cb + 32768) / 65536.0)
-                                AS BIGINT) AS b0
-                FROM c),
-          q AS (SELECT doc_id, count(*) AS nb2, sum(u) AS sy,
-                       sum(least(greatest(r0, 0), 255)) AS sr,
-                       sum(least(greatest(g0, 0), 255)) AS sg,
-                       sum(least(greatest(b0, 0), 255)) AS sb
-                FROM d GROUP BY doc_id)
-          SELECT p.doc_id AS media_id,
-                 CAST(CASE WHEN p.nb >= 1 THEN 16 * p.nb END AS INT)
-                   AS width,
-                 CAST(CASE WHEN p.nb >= 1 THEN 16 END AS INT) AS height,
-                 CAST(256 * q.nb2 AS BIGINT) AS n_pixels,
-                 round(q.sy::DOUBLE / q.nb2, 6) AS mean_y,
-                 round(q.sr::DOUBLE / q.nb2, 6) AS mean_r,
-                 round(q.sg::DOUBLE / q.nb2, 6) AS mean_g,
-                 round(q.sb::DOUBLE / q.nb2, 6) AS mean_b
-          FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_jpeg_420_stats", _jpeg_oracle(16, 16, color=True))
 def multimodal_jpeg_420_stats_q(spark, sf_dir):
     """4:2:0 SUBSAMPLED color JPEG — the classic consumer-camera
     layout, previously the documented NULL boundary, now a real
@@ -10820,66 +10582,11 @@ def multimodal_jpeg_420_stats_q(spark, sf_dir):
     (tests/test_jpeg.py 4:2:0 battery, hypothesis). Scale: map-only
     Arrow pass over the materialized sidecar. Reference parity:
     streamlit_app.py display layer."""
-    from ..operators.jpeg import decode_jpeg_stats, synth_jpeg_420_corpus
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "jpeg_420_corpus",
-        lambda p: synth_jpeg_420_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_jpeg_420_corpus, widen))
-    w = decode_jpeg_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_gray", 6).alias("mean_y"),
-                    F.round("mean_r", 6).alias("mean_r"),
-                    F.round("mean_g", 6).alias("mean_g"),
-                    F.round("mean_b", 6).alias("mean_b"))
+    from ..operators.jpeg import synth_jpeg_420_corpus
+    return _jpeg_stats(spark, sf_dir, synth_jpeg_420_corpus, color=True)
 
 
-@query("multimodal_jpeg_422_stats",
-       """WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
-                            octet_length(encode(text)) AS dlen
-                     FROM documents),
-          p AS (SELECT doc_id, hx,
-                       CASE WHEN hx IS NULL OR dlen < 1 THEN NULL
-                            ELSE least(dlen, 48) END AS nb
-                FROM b),
-          s AS (SELECT doc_id,
-                       unnest(CASE WHEN nb >= 1 THEN
-                              generate_series(0, nb - 1)
-                              ELSE []::BIGINT[] END) AS i,
-                       hx
-                FROM p),
-          v AS (SELECT doc_id,
-                       ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                FROM s),
-          c AS (SELECT doc_id, u,
-                       (3*u + 7) % 256 - 128 AS cb,
-                       (7*u + 1) % 256 - 128 AS cr
-                FROM v),
-          d AS (SELECT doc_id, u,
-                       u + CAST(floor((91881*cr + 32768) / 65536.0)
-                                AS BIGINT) AS r0,
-                       u - CAST(floor((22554*cb + 46802*cr + 32768)
-                                      / 65536.0) AS BIGINT) AS g0,
-                       u + CAST(floor((116130*cb + 32768) / 65536.0)
-                                AS BIGINT) AS b0
-                FROM c),
-          q AS (SELECT doc_id, count(*) AS nb2, sum(u) AS sy,
-                       sum(least(greatest(r0, 0), 255)) AS sr,
-                       sum(least(greatest(g0, 0), 255)) AS sg,
-                       sum(least(greatest(b0, 0), 255)) AS sb
-                FROM d GROUP BY doc_id)
-          SELECT p.doc_id AS media_id,
-                 CAST(CASE WHEN p.nb >= 1 THEN 16 * p.nb END AS INT)
-                   AS width,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 END AS INT) AS height,
-                 CAST(128 * q.nb2 AS BIGINT) AS n_pixels,
-                 round(q.sy::DOUBLE / q.nb2, 6) AS mean_y,
-                 round(q.sr::DOUBLE / q.nb2, 6) AS mean_r,
-                 round(q.sg::DOUBLE / q.nb2, 6) AS mean_g,
-                 round(q.sb::DOUBLE / q.nb2, 6) AS mean_b
-          FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_jpeg_422_stats", _jpeg_oracle(16, 8, color=True))
 def multimodal_jpeg_422_stats_q(spark, sf_dir):
     """4:2:2 SUBSAMPLED color JPEG (Y 2x1 — the broadcast/video-frame
     layout): the decode geometry landed in r14 as kernel+spec
@@ -10897,66 +10604,11 @@ def multimodal_jpeg_422_stats_q(spark, sf_dir):
     (tests/test_jpeg.py). Scale: map-only Arrow pass over the
     materialized sidecar. Reference parity: streamlit_app.py display
     layer."""
-    from ..operators.jpeg import decode_jpeg_stats, synth_jpeg_422_corpus
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "jpeg_422_corpus",
-        lambda p: synth_jpeg_422_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_jpeg_422_corpus, widen))
-    w = decode_jpeg_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_gray", 6).alias("mean_y"),
-                    F.round("mean_r", 6).alias("mean_r"),
-                    F.round("mean_g", 6).alias("mean_g"),
-                    F.round("mean_b", 6).alias("mean_b"))
+    from ..operators.jpeg import synth_jpeg_422_corpus
+    return _jpeg_stats(spark, sf_dir, synth_jpeg_422_corpus, color=True)
 
 
-@query("multimodal_jpeg_411_stats",
-       """WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
-                            octet_length(encode(text)) AS dlen
-                     FROM documents),
-          p AS (SELECT doc_id, hx,
-                       CASE WHEN hx IS NULL OR dlen < 1 THEN NULL
-                            ELSE least(dlen, 48) END AS nb
-                FROM b),
-          s AS (SELECT doc_id,
-                       unnest(CASE WHEN nb >= 1 THEN
-                              generate_series(0, nb - 1)
-                              ELSE []::BIGINT[] END) AS i,
-                       hx
-                FROM p),
-          v AS (SELECT doc_id,
-                       ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                FROM s),
-          c AS (SELECT doc_id, u,
-                       (3*u + 7) % 256 - 128 AS cb,
-                       (7*u + 1) % 256 - 128 AS cr
-                FROM v),
-          d AS (SELECT doc_id, u,
-                       u + CAST(floor((91881*cr + 32768) / 65536.0)
-                                AS BIGINT) AS r0,
-                       u - CAST(floor((22554*cb + 46802*cr + 32768)
-                                      / 65536.0) AS BIGINT) AS g0,
-                       u + CAST(floor((116130*cb + 32768) / 65536.0)
-                                AS BIGINT) AS b0
-                FROM c),
-          q AS (SELECT doc_id, count(*) AS nb2, sum(u) AS sy,
-                       sum(least(greatest(r0, 0), 255)) AS sr,
-                       sum(least(greatest(g0, 0), 255)) AS sg,
-                       sum(least(greatest(b0, 0), 255)) AS sb
-                FROM d GROUP BY doc_id)
-          SELECT p.doc_id AS media_id,
-                 CAST(CASE WHEN p.nb >= 1 THEN 32 * p.nb END AS INT)
-                   AS width,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 END AS INT) AS height,
-                 CAST(256 * q.nb2 AS BIGINT) AS n_pixels,
-                 round(q.sy::DOUBLE / q.nb2, 6) AS mean_y,
-                 round(q.sr::DOUBLE / q.nb2, 6) AS mean_r,
-                 round(q.sg::DOUBLE / q.nb2, 6) AS mean_g,
-                 round(q.sb::DOUBLE / q.nb2, 6) AS mean_b
-          FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_jpeg_411_stats", _jpeg_oracle(32, 8, color=True))
 def multimodal_jpeg_411_stats_q(spark, sf_dir):
     """4:1:1 SUBSAMPLED color JPEG (Y 4x1 — the DV/camcorder layout,
     r15: previously on the NULL-boundary list, now whitelisted
@@ -10973,48 +10625,12 @@ def multimodal_jpeg_411_stats_q(spark, sf_dir):
     remain NULL and are pinned so (tests/test_jpeg.py). Scale:
     map-only Arrow pass over the materialized sidecar. Reference
     parity: streamlit_app.py display layer."""
-    from ..operators.jpeg import decode_jpeg_stats, synth_jpeg_411_corpus
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "jpeg_411_corpus",
-        lambda p: synth_jpeg_411_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_jpeg_411_corpus, widen))
-    w = decode_jpeg_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_gray", 6).alias("mean_y"),
-                    F.round("mean_r", 6).alias("mean_r"),
-                    F.round("mean_g", 6).alias("mean_g"),
-                    F.round("mean_b", 6).alias("mean_b"))
+    from ..operators.jpeg import synth_jpeg_411_corpus
+    return _jpeg_stats(spark, sf_dir, synth_jpeg_411_corpus, color=True)
 
 
 @query("multimodal_jpeg_progressive_stats",
-       """WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
-                            octet_length(encode(text)) AS dlen
-                     FROM documents),
-          p AS (SELECT doc_id, hx,
-                       CASE WHEN hx IS NULL OR dlen < 1 THEN NULL
-                            ELSE least(dlen, 48) END AS nb
-                FROM b),
-          s AS (SELECT doc_id,
-                       unnest(CASE WHEN nb >= 1 THEN
-                              generate_series(0, nb - 1)
-                              ELSE []::BIGINT[] END) AS i,
-                       hx
-                FROM p),
-          v AS (SELECT doc_id,
-                       ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                FROM s),
-          q AS (SELECT doc_id, count(*) AS nb2, sum(u) AS su
-                FROM v GROUP BY doc_id)
-          SELECT p.doc_id AS media_id,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 * p.nb END AS INT)
-                   AS width,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 END AS INT) AS height,
-                 CAST(64 * q.nb2 AS BIGINT) AS n_pixels,
-                 round(q.su::DOUBLE / q.nb2, 6) AS mean_gray
-          FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+       _jpeg_oracle(8, 8, color=False))
 def multimodal_jpeg_progressive_stats_q(spark, sf_dir):
     """PROGRESSIVE JPEG (ITU-T T.81 Annex G) — the decoder module's
     hardest remaining format, now a real decode: the corpus is a
@@ -11040,64 +10656,11 @@ def multimodal_jpeg_progressive_stats_q(spark, sf_dir):
     partial-precision image, not a result). Scale: map-only Arrow
     pass over the materialized sidecar, no shuffle. Reference parity:
     streamlit_app.py display layer."""
-    from ..operators.jpeg import (decode_jpeg_stats,
-                                  synth_jpeg_progressive_corpus)
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "jpeg_progressive_corpus",
-        lambda p: synth_jpeg_progressive_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_jpeg_progressive_corpus, widen))
-    w = decode_jpeg_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_gray", 6).alias("mean_gray"))
+    from ..operators.jpeg import synth_jpeg_progressive_corpus
+    return _jpeg_stats(spark, sf_dir, synth_jpeg_progressive_corpus, color=False)
 
 
-@query("multimodal_jpeg_color_stats",
-       """WITH b AS (SELECT doc_id, upper(hex(encode(text))) AS hx,
-                            octet_length(encode(text)) AS dlen
-                     FROM documents),
-          p AS (SELECT doc_id, hx,
-                       CASE WHEN hx IS NULL OR dlen < 1 THEN NULL
-                            ELSE least(dlen, 48) END AS nb
-                FROM b),
-          s AS (SELECT doc_id,
-                       unnest(CASE WHEN nb >= 1 THEN
-                              generate_series(0, nb - 1)
-                              ELSE []::BIGINT[] END) AS i,
-                       hx
-                FROM p),
-          v AS (SELECT doc_id,
-                       ('0x' || substr(hx, 2*i + 1, 2))::BIGINT AS u
-                FROM s),
-          c AS (SELECT doc_id, u,
-                       (3*u + 7) % 256 - 128 AS cb,
-                       (7*u + 1) % 256 - 128 AS cr
-                FROM v),
-          d AS (SELECT doc_id, u,
-                       u + CAST(floor((91881*cr + 32768) / 65536.0)
-                                AS BIGINT) AS r0,
-                       u - CAST(floor((22554*cb + 46802*cr + 32768)
-                                      / 65536.0) AS BIGINT) AS g0,
-                       u + CAST(floor((116130*cb + 32768) / 65536.0)
-                                AS BIGINT) AS b0
-                FROM c),
-          q AS (SELECT doc_id, count(*) AS nb2, sum(u) AS sy,
-                       sum(least(greatest(r0, 0), 255)) AS sr,
-                       sum(least(greatest(g0, 0), 255)) AS sg,
-                       sum(least(greatest(b0, 0), 255)) AS sb
-                FROM d GROUP BY doc_id)
-          SELECT p.doc_id AS media_id,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 * p.nb END AS INT)
-                   AS width,
-                 CAST(CASE WHEN p.nb >= 1 THEN 8 END AS INT) AS height,
-                 CAST(64 * q.nb2 AS BIGINT) AS n_pixels,
-                 round(q.sy::DOUBLE / q.nb2, 6) AS mean_y,
-                 round(q.sr::DOUBLE / q.nb2, 6) AS mean_r,
-                 round(q.sg::DOUBLE / q.nb2, 6) AS mean_g,
-                 round(q.sb::DOUBLE / q.nb2, 6) AS mean_b
-          FROM p LEFT JOIN q ON p.doc_id = q.doc_id""")
+@query("multimodal_jpeg_color_stats", _jpeg_oracle(8, 8, color=True))
 def multimodal_jpeg_color_stats_q(spark, sf_dir):
     """Color JPEG — the 3-component 4:4:4 sibling of
     multimodal_jpeg_stats: each text byte becomes one interleaved
@@ -11118,20 +10681,8 @@ def multimodal_jpeg_color_stats_q(spark, sf_dir):
     is off-whitelist sampling layouts, interpolating upsamplers, and
     arithmetic coding. Reference parity: streamlit_app.py display
     layer."""
-    from ..operators.jpeg import decode_jpeg_stats, synth_jpeg_color_corpus
-    from ..partitioning import widen
-    path = _materialized_index(
-        spark, sf_dir, "jpeg_color_corpus",
-        lambda p: synth_jpeg_color_corpus(
-            widen(_t(spark, sf_dir, "documents")))
-        .write.mode("overwrite").parquet(p),
-        src=(synth_jpeg_color_corpus, widen))
-    w = decode_jpeg_stats(spark.read.parquet(path))
-    return w.select("media_id", "width", "height", "n_pixels",
-                    F.round("mean_gray", 6).alias("mean_y"),
-                    F.round("mean_r", 6).alias("mean_r"),
-                    F.round("mean_g", 6).alias("mean_g"),
-                    F.round("mean_b", 6).alias("mean_b"))
+    from ..operators.jpeg import synth_jpeg_color_corpus
+    return _jpeg_stats(spark, sf_dir, synth_jpeg_color_corpus, color=True)
 
 
 #: media_id stride between the five unioned corpora in
@@ -11177,17 +10728,9 @@ def _media_sniffed_path(spark, sf_dir) -> str:
                                         synth_png_corpus,
                                         synth_wav_corpus)
     from ..partitioning import widen
-    corpus_paths = []
-    for leaf, synth in (("png_corpus", synth_png_corpus),
-                        ("gif_corpus", synth_gif_corpus),
-                        ("jpeg_corpus", synth_jpeg_corpus),
-                        ("bmp_corpus", synth_bmp_corpus),
-                        ("wav_corpus", synth_wav_corpus)):
-        corpus_paths.append(_materialized_index(
-            spark, sf_dir, leaf,
-            lambda p, s=synth: s(widen(_t(spark, sf_dir, "documents")))
-            .write.mode("overwrite").parquet(p),
-            src=(synth, widen)))
+    corpus_paths = [_media_corpus(spark, sf_dir, synth) for synth in (
+        synth_png_corpus, synth_gif_corpus, synth_jpeg_corpus,
+        synth_bmp_corpus, synth_wav_corpus)]
 
     def build_sniffed(p):
         # one pass over the five corpora: offset-disambiguate ids
@@ -11213,68 +10756,50 @@ def _media_sniffed_path(spark, sf_dir) -> str:
              synth_wav_corpus, widen))
 
 
-@query("media_decode_dispatch",
-       f"""WITH base AS (SELECT doc_id,
-                               octet_length(encode(text)) AS dlen,
-                               (text IS NULL) AS textless
-                        FROM documents),
-          png AS (SELECT doc_id AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'image/png' END AS kind,
-                         doc_id % 7 + 3 AS w,
-                         CASE WHEN textless THEN NULL
-                              ELSE least(dlen // (3 * (doc_id % 7 + 3)),
-                                         65535 // (3 * (doc_id % 7 + 3)
-                                                   + 1)) END AS h,
-                         NULL::BOOLEAN AS adok
-                  FROM base),
-          gif AS (SELECT doc_id + {1 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'image/gif' END AS kind,
-                         doc_id % 6 + 2 AS w,
-                         CASE WHEN textless THEN NULL
-                              ELSE least(dlen // (doc_id % 6 + 2),
-                                         {_GIF_SYNTH_MAX_PIXELS} // (doc_id % 6 + 2))
-                              END AS h,
-                         NULL::BOOLEAN AS adok
-                  FROM base),
-          jpg AS (SELECT doc_id + {2 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless OR dlen < 1 THEN 'unknown'
-                              ELSE 'image/jpeg' END AS kind,
-                         8 * least(dlen, 48) AS w,
-                         CASE WHEN textless OR dlen < 1 THEN NULL
-                              ELSE 8 END AS h,
-                         NULL::BOOLEAN AS adok
-                  FROM base),
-          bmp AS (SELECT doc_id + {3 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'image/bmp' END AS kind,
-                         doc_id % 5 + 4 AS w,
-                         CASE WHEN textless THEN NULL
-                              ELSE dlen // (3 * (doc_id % 5 + 4))
-                              END AS h,
-                         NULL::BOOLEAN AS adok
-                  FROM base),
-          wav AS (SELECT doc_id + {4 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'audio/wav' END AS kind,
-                         NULL::BIGINT AS w, NULL::BIGINT AS h,
-                         NOT textless AS adok
-                  FROM base),
-          uni AS (SELECT * FROM png UNION ALL SELECT * FROM gif
-                  UNION ALL SELECT * FROM jpg
-                  UNION ALL SELECT * FROM bmp
-                  UNION ALL SELECT * FROM wav),
-          shaped AS (SELECT media_id, kind, w, h,
-                            coalesce(adok, h >= 1, FALSE) AS dok
+#: The mixed-format firehose's branches in order: branch k's media_ids
+#: are offset by k * _DISPATCH_ID_STRIDE.
+_FIREHOSE = (("png", "image/png"), ("gif", "image/gif"),
+             ("jpeg", "image/jpeg"), ("bmp", "image/bmp"), ("wav", "audio/wav"))
+
+
+def _firehose_oracle(select: str, where: str = "",
+                     routed: bool = False) -> str:
+    """Oracle over the mixed-format firehose: each document as every
+    format of _FIREHOSE, or with ``routed`` as the one format (doc_id //
+    10) % 5 picks, under its own id. CTE ``shaped`` holds one row per
+    object: kind ('unknown' where the synthesis yields no bytes),
+    ``audio``, (w, h) from _MEDIA_GEOM, a WAV's being (rate, frames),
+    and ``dok``, whether it decodes. ``select`` reads shaped."""
+    arms = []
+    for k, (fmt, mime) in enumerate(_FIREHOSE):
+        w, h = _media_dims(fmt, w=None)
+        arms.append(
+            f"SELECT doc_id{'' if routed else f' + {k * _DISPATCH_ID_STRIDE}'}"
+            f" AS media_id, '{mime}' AS mime, {w} AS w, {h} AS h FROM base"
+            + (f" WHERE (doc_id // 10) % 5 = {k}" if routed else ""))
+    union = "\n                  UNION ALL ".join(arms)
+    return f"""WITH base AS (SELECT doc_id, octet_length(encode(text)) AS dlen
+                        FROM documents{where}),
+          uni AS ({union}),
+          shaped AS (SELECT media_id, w, h, mime = 'audio/wav' AS audio,
+                            CASE WHEN h IS NULL THEN 'unknown'
+                                 ELSE mime END AS kind,
+                            coalesce(CASE WHEN mime = 'audio/wav' THEN h >= 0
+                                          ELSE h >= 1 END, FALSE) AS dok
                      FROM uni)
-          SELECT media_id, kind,
-                 CAST(CASE WHEN dok THEN w END AS INT) AS width,
-                 CAST(CASE WHEN dok THEN h END AS INT) AS height,
-                 CAST(CASE WHEN dok THEN w * h END AS BIGINT)
+          {select}"""
+
+
+_DISPATCH_COLS = """SELECT media_id, kind,
+                 CAST(CASE WHEN dok AND NOT audio THEN w END AS INT) AS width,
+                 CAST(CASE WHEN dok AND NOT audio THEN h END AS INT) AS height,
+                 CAST(CASE WHEN dok AND NOT audio THEN w * h END AS BIGINT)
                    AS n_pixels,
                  dok AS decoded
-          FROM shaped""")
+          FROM shaped"""
+
+
+@query("media_decode_dispatch", _firehose_oracle(_DISPATCH_COLS))
 def media_decode_dispatch_q(spark, sf_dir):
     """Decoder DISPATCH — the classification-then-route pass a real
     media-ingest pipeline runs before any decode, over ALL FIVE of
@@ -11319,83 +10844,20 @@ def media_decode_dispatch_q(spark, sf_dir):
     return media_dispatch_stats(sniffed.select("media_id", "content"))
 
 
-@query("media_quality_gate_multiformat",
-       f"""WITH base AS (SELECT doc_id,
-                               octet_length(encode(text)) AS dlen,
-                               (text IS NULL) AS textless
-                        FROM documents),
-          png AS (SELECT doc_id AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'image/png' END AS kind,
-                         doc_id % 7 + 3 AS w,
-                         CASE WHEN textless THEN NULL
-                              ELSE least(dlen // (3 * (doc_id % 7 + 3)),
-                                         65535 // (3 * (doc_id % 7 + 3)
-                                                   + 1)) END AS h
-                  FROM base),
-          gif AS (SELECT doc_id + {_DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'image/gif' END AS kind,
-                         doc_id % 6 + 2 AS w,
-                         CASE WHEN textless THEN NULL
-                              ELSE least(dlen // (doc_id % 6 + 2),
-                                         {_GIF_SYNTH_MAX_PIXELS}
-                                         // (doc_id % 6 + 2))
-                              END AS h
-                  FROM base),
-          jpg AS (SELECT doc_id + {2 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless OR dlen < 1 THEN 'unknown'
-                              ELSE 'image/jpeg' END AS kind,
-                         8 * least(dlen, 48) AS w,
-                         CASE WHEN textless OR dlen < 1 THEN NULL
-                              ELSE 8 END AS h
-                  FROM base),
-          bmp AS (SELECT doc_id + {3 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'image/bmp' END AS kind,
-                         doc_id % 5 + 4 AS w,
-                         CASE WHEN textless THEN NULL
-                              ELSE dlen // (3 * (doc_id % 5 + 4))
-                              END AS h
-                  FROM base),
-          img AS (SELECT * FROM png UNION ALL SELECT * FROM gif
-                  UNION ALL SELECT * FROM jpg
-                  UNION ALL SELECT * FROM bmp),
-          imf AS (SELECT media_id, kind,
-                         coalesce(h >= 1, FALSE) AS dok, w, h
-                  FROM img),
-          imgout AS (SELECT media_id, kind,
-                            NOT dok AS undecodable,
-                            coalesce(dok AND w * h < 64, FALSE)
-                              AS too_small,
-                            coalesce(dok AND greatest(w, h)
-                                         > 16 * least(w, h), FALSE)
-                              AS extreme_aspect,
-                            FALSE AS too_short,
-                            coalesce(dok AND w * h >= 64
-                                     AND greatest(w, h)
-                                         <= 16 * least(w, h),
-                                     FALSE) AS keep
-                     FROM imf),
-          wav AS (SELECT doc_id + {4 * _DISPATCH_ID_STRIDE} AS media_id,
-                         CASE WHEN textless THEN 'unknown'
-                              ELSE 'audio/wav' END AS kind,
-                         NOT textless AS dok,
-                         (dlen + dlen % 2) // 2 AS frames,
-                         CASE doc_id % 3 WHEN 0 THEN 8000
-                              WHEN 1 THEN 16000
-                              ELSE 44100 END AS rate
-                  FROM base),
-          wavout AS (SELECT media_id, kind,
-                            NOT dok AS undecodable,
-                            FALSE AS too_small,
-                            FALSE AS extreme_aspect,
-                            coalesce(dok AND frames * 1000 < 10 * rate,
-                                     FALSE) AS too_short,
-                            coalesce(dok AND frames * 1000 >= 10 * rate,
-                                     FALSE) AS keep
-                     FROM wav)
-          SELECT * FROM imgout UNION ALL SELECT * FROM wavout""")
+@query("media_quality_gate_multiformat", _firehose_oracle("""SELECT
+                 media_id, kind, NOT dok AS undecodable,
+                 coalesce(dok AND NOT audio AND w * h < 64, FALSE)
+                   AS too_small,
+                 coalesce(dok AND NOT audio
+                          AND greatest(w, h) > 16 * least(w, h), FALSE)
+                   AS extreme_aspect,
+                 coalesce(dok AND audio AND h * 1000 < 10 * w, FALSE)
+                   AS too_short,
+                 coalesce(dok AND CASE WHEN audio THEN h * 1000 >= 10 * w
+                                       ELSE w * h >= 64 AND greatest(w, h)
+                                            <= 16 * least(w, h) END,
+                          FALSE) AS keep
+          FROM shaped"""))
 def media_quality_gate_multiformat_q(spark, sf_dir):
     """Curation gate over the WHOLE heterogeneous firehose — the
     multiformat widening the r14 verdict floated once dispatch routed
@@ -11524,52 +10986,8 @@ def _media_arrival_path(spark, sf_dir) -> str:
 
 
 @query("stream_media_dispatch",
-       f"""WITH base AS (SELECT doc_id,
-                               octet_length(encode(text)) AS dlen,
-                               (text IS NULL) AS tnull
-                        FROM documents WHERE doc_id % 10 = 7),
-          g AS (SELECT doc_id, dlen, tnull,
-                       (doc_id // 10) % 5 AS k FROM base),
-          dims AS (SELECT doc_id, k, tnull, dlen,
-                          CASE k WHEN 0 THEN doc_id % 7 + 3
-                                 WHEN 1 THEN doc_id % 6 + 2
-                                 WHEN 2 THEN 8 * least(dlen, 48)
-                                 WHEN 3 THEN doc_id % 5 + 4 END AS w,
-                          CASE WHEN tnull THEN NULL
-                               WHEN k = 0 THEN
-                                    least(dlen // (3 * (doc_id % 7 + 3)),
-                                          65535 // (3 * (doc_id % 7 + 3)
-                                                    + 1))
-                               WHEN k = 1 THEN
-                                    least(dlen // (doc_id % 6 + 2),
-                                          {_GIF_SYNTH_MAX_PIXELS}
-                                          // (doc_id % 6 + 2))
-                               WHEN k = 2 THEN
-                                    CASE WHEN dlen >= 1 THEN 8 END
-                               WHEN k = 3 THEN
-                                    dlen // (3 * (doc_id % 5 + 4))
-                               END AS h
-                   FROM g),
-          shaped AS (SELECT doc_id AS media_id, k, w, h,
-                            CASE WHEN tnull OR (k = 2 AND dlen < 1)
-                                      THEN 'unknown'
-                                 WHEN k = 0 THEN 'image/png'
-                                 WHEN k = 1 THEN 'image/gif'
-                                 WHEN k = 2 THEN 'image/jpeg'
-                                 WHEN k = 3 THEN 'image/bmp'
-                                 ELSE 'audio/wav' END AS kind,
-                            CASE WHEN k = 4 THEN NOT tnull
-                                 ELSE coalesce(h >= 1, FALSE) END AS dok
-                     FROM dims)
-          SELECT media_id, kind,
-                 CAST(CASE WHEN dok AND k <= 3 THEN w END AS INT)
-                   AS width,
-                 CAST(CASE WHEN dok AND k <= 3 THEN h END AS INT)
-                   AS height,
-                 CAST(CASE WHEN dok AND k <= 3 THEN w * h END AS BIGINT)
-                   AS n_pixels,
-                 dok AS decoded
-          FROM shaped""")
+       _firehose_oracle(_DISPATCH_COLS, " WHERE doc_id % 10 = 7",
+                        routed=True))
 def stream_media_dispatch_q(spark, sf_dir):
     """Streaming DISPATCH-ON-ARRIVAL — the incremental sibling of
     media_decode_dispatch and the 15th streaming query: a
