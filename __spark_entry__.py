@@ -27,6 +27,34 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED plan, results identical at sf0.001 (optimized plans
+    # diffed for all 276 keys). The batch pair joins score vector pairs
+    # with the bit-exact Arrow kernel (functions/kernels.pair_cosine,
+    # pair_dot): an ArrowEvalPython node replaces the SQL fold in
+    # ann_knn_join, ann_recall_eval, embedding_near_dup and semdedup.
+    # The registry's cosine orders put a NULL distance (a stored zero
+    # vector) last: filtered_knn, hybrid_search_rrf, ivfpq_topk,
+    # ivfpq_recall_eval, corpus_refresh_cycle, kmeans_assign and
+    # kmeans_lloyd.
+    "ann_knn_join", "ann_recall_eval", "embedding_near_dup", "semdedup",
+    "filtered_knn", "hybrid_search_rrf", "ivfpq_topk", "ivfpq_recall_eval",
+    "corpus_refresh_cycle", "kmeans_assign", "kmeans_lloyd",
+    # CHANGED fingerprint only, plan text identical: the plan gate adds
+    # a TRY line naming each TRY-mode arithmetic node (try_divide
+    # prints as `/`), which these cosine plans hold.
+    "ann_ivf", "ann_lsh", "cosine_distance", "embedding_drift",
+    "knn_topk", "match_score", "refresh_compact_cycle",
+    # CHANGED closure only, plan byte-identical: dedup.py (the pair
+    # kernel import) moves the minhash/shingle index leaves (INDEXES
+    # digests) and stream_minhash_probe's source digest; kernels.py and
+    # simjoin.py (one fold helper) move these PYSRC digests.
+    "containment_join", "dedup_cluster_examples", "dedup_components",
+    "dedup_keep_best", "dedup_pair_audit_sample", "jaccard_topk_per_doc",
+    "minhash_dedup", "minhash_refresh", "near_dup_cluster_stats",
+    "near_dup_cross_source", "ngram_jaccard", "ngram_jaccard_prefix",
+    "novelty_by_source", "shingle_df_histogram", "simhash_dedup",
+    "simhash_hamming_dedup", "stream_minhash_probe", "dup_ngram_fraction",
+    "embed_quantize", "quantization_error", "sim_join",
     # CHANGED plan, results identical on the fixtures (optimized plans
     # diffed for all 276 keys): a zero-norm vector's cosine distance is
     # NULL through try_divide instead of an ANSI DIVIDE_BY_ZERO, and

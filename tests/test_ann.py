@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from tests.conftest import SF_CORRECTNESS
+import pytest
+
+from tests.conftest import SF_CORRECTNESS, SF_SMOKE
 from tripgogo_vector_search_spark.operators import ann as ANN
 from tripgogo_vector_search_spark.operators.knn import knn_topk
 from tripgogo_vector_search_spark.plans.flagship import QUERY_VEC
@@ -100,3 +102,32 @@ def test_zero_norm_ranks_last_in_lsh_search(spark):
     idx = ANN.build_lsh_index(_zero_corpus(spark), planes=planes)
     _check_zero_norm(lambda q, k: ANN.lsh_search(idx, q, k=k,
                                                  planes=planes).collect())
+
+
+@pytest.mark.parametrize("key", ["filtered_knn", "kmeans_assign"])
+def test_zero_vector_ranks_last_in_registry_keys(spark, tmp_path, key):
+    """A stored zero vector (vec_id 0: label 5, so a filtered_knn
+    candidate, and kmeans_assign's first centroid) has a NULL cosine
+    distance, which both keys rank last, like their DuckDB oracles."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_harness import TABLE_NAMES, compare, duck_connection
+    from tripgogo_vector_search_spark.plans import registry
+
+    for t in TABLE_NAMES:
+        if t != "embeddings":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    emb = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    vecs = emb.column("embedding").to_pylist()
+    assert emb.column("vec_id")[0].as_py() == 0 and emb.column("label")[0].as_py() == 5
+    vecs[0] = [0.0] * len(vecs[0])
+    i = emb.schema.get_field_index("embedding")
+    pq.write_table(emb.set_column(i, emb.schema.field(i),
+                                  pa.array(vecs, emb.schema.field(i).type)),
+                   tmp_path / "embeddings.parquet")
+    df = registry.QUERIES[key](spark, str(tmp_path))
+    ok, msg = compare(df, duck_connection(str(tmp_path)), registry.ORACLES[key])
+    assert ok, f"{key}: {msg}"

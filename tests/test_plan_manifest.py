@@ -44,6 +44,7 @@ and operators/rank.py."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -64,6 +65,24 @@ def plans(spark):
     # InMemoryRelation and shift the fingerprint.
     spark.catalog.clearCache()
     return collect_plans(spark)
+
+
+def test_try_division_moves_the_fingerprint(spark):
+    """``try_divide(x, y)`` prints as ``x / y``; the TRY line tells the
+    two plans apart."""
+    from tools.plan_manifest import _normalize, normalized_plan
+
+    df = spark.range(3).selectExpr("CAST(id AS DOUBLE) AS x", "id + 1.0D AS y")
+    ansi, tried = (df.selectExpr(f"{e} AS r") for e in ("x / y", "try_divide(x, y)"))
+
+    def printed(d):
+        return _normalize(d._jdf.queryExecution().optimizedPlan().toString())
+
+    assert printed(ansi) == printed(tried)
+    assert normalized_plan(ansi) == printed(ansi)
+    assert normalized_plan(tried) == printed(tried) + "\nTRY Divide@0.0.1"
+    assert (hashlib.sha256(normalized_plan(ansi).encode()).digest()
+            != hashlib.sha256(normalized_plan(tried).encode()).digest())
 
 
 def test_no_unqueued_plan_drift(spark, plans):
@@ -169,8 +188,8 @@ def test_bucket_grid_follows_shuffle_width_not_host(spark, build):
 
 # Source-level markers that define a Python kernel. Distinct from
 # tools.plan_manifest._PLAN_PY_MARKERS, which match the PLAN text.
-_KERNEL_SRC_MARKERS = ("InPandas(", "pandas_udf", "mapInArrow", "@udtf",
-                      "udtf(")
+_KERNEL_SRC_MARKERS = ("InPandas(", "pandas_udf", "arrow_udf", "mapInArrow",
+                      "@udtf", "udtf(")
 
 
 def test_python_path_keys_closure_reaches_their_kernels(plans):

@@ -192,7 +192,9 @@ def test_dedup_plans_bound_shuffles_and_python(spark):
         # of new data.
         "ngram_jaccard": (16, 0),
         "minhash_dedup": (8, 4),        # + mins gby + broadcast back-join
-        "embedding_near_dup": (10, 0),  # bucket SMJ both sides + mins + join
+        # bucket SMJ both sides + mins + join; the pair kernel's one
+        # ArrowEvalPython node scores the in-bucket pairs
+        "embedding_near_dup": (10, 2),
     }
     for name, (max_ex, max_py) in ceilings.items():
         plan = plan_of(QUERIES[name](spark, SF_CORRECTNESS))
@@ -885,11 +887,13 @@ def test_ann_recall_eval_reads_only_probed_cells(spark):
     """Recall eval: the approx side reads the cid-partitioned index
     with partition filters (only probed cells), the exact side
     broadcasts the query block; the comparison join broadcasts the
-    tiny approx top-k frame."""
+    tiny approx top-k frame. Its only Python stages are the approx
+    join's two pair-kernel scores (probe choice and candidate
+    distance), each printed twice."""
     plan = plan_of(QUERIES["ann_recall_eval"](spark, SF_CORRECTNESS))
     assert "PartitionFilters" in plan
     assert "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
+    assert plan.count("EvalPython") == plan.count("ArrowEvalPython") == 4
 
 
 def test_kmeans_assign_broadcast_centroids_single_agg(spark):

@@ -155,9 +155,68 @@ _PLAN_PY_MARKERS = ("EvalPython", "InPandas", "pythonUDF", "PythonUDTF",
                     "LogicalRDD")
 
 
+def _paths(nodes: list[dict]) -> list[tuple[int, ...]]:
+    """The child-index path of every node of a pre-order ``toJSON``
+    tree (each node lists its ``num-children``)."""
+    out, pending = [], []  # nodes with children left: [path, next, count]
+    for o in nodes:
+        path = ()
+        if pending:
+            parent = pending[-1]
+            path = parent[0] + (parent[1],)
+            parent[1] += 1
+            if parent[1] == parent[2]:
+                pending.pop()
+        out.append(path)
+        if o["num-children"]:
+            pending.append([path, 0, o["num-children"]])
+    return out
+
+
+def _node(tree, path: tuple[int, ...]):
+    for i in path:
+        tree = tree.children().apply(i)
+    return tree
+
+
+def try_arithmetic(plan) -> str:
+    """One ``TRY`` line naming every TRY-mode arithmetic node of a JVM
+    plan, or "" when it has none. ``try_divide(x, y)`` and ``x / y``
+    both print as ``/``, and ``toJSON`` writes a null ``evalContext``,
+    so the eval mode is read from the node itself over py4j: only for
+    arithmetic nodes, found by their ``evalContext`` field in the
+    JSON. Each is named ``Class@plan-node.expression.expression-node``,
+    plan and expression nodes numbered in JSON pre-order."""
+    nodes = json.loads(plan.toJSON())
+    found = []
+    for k, (path, node) in enumerate(zip(_paths(nodes), nodes)):
+        if '"evalContext"' not in json.dumps(node):
+            continue
+        exprs = _node(plan, path).expressions()
+        for i in range(exprs.size()):
+            expr = exprs.apply(i)
+            tree = json.loads(expr.toJSON())
+            for m, (epath, o) in enumerate(zip(_paths(tree), tree)):
+                if ("evalContext" in o and _node(expr, epath)
+                        .evalContext().evalMode().toString() == "TRY"):
+                    found.append(f"{o['class'].rsplit('.', 1)[1]}@{k}.{i}.{m}")
+    return "TRY " + " ".join(found) if found else ""
+
+
+def normalized_plan(df) -> str:
+    """``df``'s normalized optimized plan and its :func:`try_arithmetic`
+    line."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    text = _normalize(plan.toString(), session_widths(df.sparkSession))
+    tries = try_arithmetic(plan)
+    return f"{text}\n{tries}" if tries else text
+
+
 def plan_text(spark, name: str, sf_dir: str = SF_SMOKE) -> str | None:
     """Normalized optimized-plan text for a batch key; None for
     ``stream_*`` keys (building their plan would run a live stream).
+    A plan holding TRY-mode arithmetic gets a :func:`try_arithmetic`
+    line, which the plan text alone cannot show.
 
     Keys that read a MATERIALIZED index get an extra ``INDEXES`` line
     naming the source-versioned leaves their construction touched
@@ -173,9 +232,7 @@ def plan_text(spark, name: str, sf_dir: str = SF_SMOKE) -> str | None:
     if name.startswith("stream_"):
         return None
     registry._TOUCHED_INDEXES.clear()
-    df = registry.QUERIES[name](spark, sf_dir)
-    text = _normalize(df._jdf.queryExecution().optimizedPlan().toString(),
-                      session_widths(spark))
+    text = normalized_plan(registry.QUERIES[name](spark, sf_dir))
     if registry._TOUCHED_INDEXES:
         text += "\nINDEXES " + " ".join(sorted(registry._TOUCHED_INDEXES))
     return text

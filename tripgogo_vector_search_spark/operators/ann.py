@@ -249,17 +249,20 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     files and the index are read with the :func:`open_ivf` handle's
     schemas, so building the plan starts no schema-inference job.
     """
+    # imported here: the kernel module loads pandas, which the online
+    # search path keeps out of the driver
+    from ..functions.kernels import pair_cosine
+
     h = open_ivf(spark, path)
     cents = spark.read.schema(h.centroid_schema).parquet(*h.centroid_files)
     qc = (queries.crossJoin(F.broadcast(cents))
-          .withColumn("cdist", cosine_distance(q_vec, "cvec")))
+          .withColumn("cdist", pair_cosine(q_vec, "cvec")))
     wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc_nulls_last(), "cid")
     probes = (qc.withColumn("prn", F.row_number().over(wq))
               .filter(F.col("prn") <= nprobe)
               .select(q_id, q_vec, "cid"))
     cand = spark.read.schema(h.schema).parquet(path).join(F.broadcast(probes), "cid")
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(vec_col, q_vec))
+    scored = cand.withColumn("distance_score", pair_cosine(vec_col, q_vec))
     wk = W.partitionBy(q_id).orderBy(F.col("distance_score").asc_nulls_last(),
                                      id_col)
     return (scored.withColumn("rn", F.row_number().over(wk))

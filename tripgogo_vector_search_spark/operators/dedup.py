@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.hashing import lsh_band_keys, minhash_signature, simhash32
-from ..functions.kernels import minhash_signature_udf, simhash_udf
+from ..functions.kernels import (minhash_signature_udf, pair_cosine, pair_dot,
+                                 simhash_udf)
 from ..functions.text import fingerprint, shingles, words
 from ..partitioning import shuffle_width, widen
 
@@ -582,8 +583,6 @@ def embedding_near_dup(df: DataFrame, vec_col: str, id_col: str,
     statistics instead — ``plans.registry.corpus_stats`` does exactly
     that with zero Spark jobs — and pass an explicit
     ``adaptive_prefix_bits(n, dim)`` value."""
-    from ..functions.vector import cosine_similarity
-
     if prefix_bits is None:
         n = df.count()
         head = df.select(vec_col).first()
@@ -609,7 +608,7 @@ def embedding_near_dup(df: DataFrame, vec_col: str, id_col: str,
     b = e.withColumnsRenamed({"id": "id_b", "v": "v_b"})
     pairs = (a.join(b, "bucket")
              .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("cos", cosine_similarity("v_a", "v_b"))
+             .withColumn("cos", pair_cosine("v_a", "v_b", similarity=True))
              .filter(F.col("cos") >= threshold))
     mins = (pairs.groupBy("id_b").agg(F.min("id_a").alias("min_src"))
             .withColumnsRenamed({"id_b": "dup_id"}))
@@ -1002,7 +1001,7 @@ def semdedup_keep(idx: DataFrame, cents: DataFrame, eps: float = 0.60,
     compare so survivor sets are engine-exact."""
     import math
 
-    from ..functions.vector import cosine_distance, dot, l2_norm
+    from ..functions.vector import cosine_distance, l2_norm
 
     if on_hot not in ("raise", "split"):
         raise ValueError(f"on_hot must be 'raise' or 'split', got {on_hot!r}")
@@ -1047,7 +1046,7 @@ def semdedup_keep(idx: DataFrame, cents: DataFrame, eps: float = 0.60,
                      F.col("cdist").alias("r_cd"),
                      F.col("nrm").alias("r_n")).repartition(width, *join_keys)
     pair_d = F.round(F.lit(1.0)
-                     - dot("l_emb", "r_emb")
+                     - pair_dot("l_emb", "r_emb")
                      / (F.col("l_n") * F.col("r_n")), 6)
     rm = (left.join(right, join_keys)
           .filter((F.col("l_id") != F.col("r_id"))

@@ -10,6 +10,10 @@ Spark physical plan: ``orderBy().limit(k)`` compiles to
 driver merges partition heads. O(n log k) per partition, no global sort,
 no shuffle of the full table. This is the plan that survives 100 TB: cost
 is one scan + k rows per partition over the wire.
+
+The distance is vector.py's SQL fold, not the Arrow pair kernel the batch
+joins use: one query pays the Python worker round trip per task, and that
+made an exact top-k over 6,000 rows slower (193 -> 265 ms median, 3 cores).
 """
 
 from __future__ import annotations

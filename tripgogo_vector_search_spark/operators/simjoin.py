@@ -176,8 +176,8 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
     ``list_reduce`` fold. Where the BLAS variant must round to 6 dp
     before ranking (matrix-multiply accumulation order differs by
     ~1 ulp), this kernel accumulates DIMENSION BY DIMENSION in declared
-    order (``acc += C[:, i] * Q[j, i]`` for i in 0..dim-1, likewise the
-    squared norms), which is term-for-term the IEEE evaluation order of
+    order (``functions/kernels.fold``, likewise the squared norms),
+    which is term-for-term the IEEE evaluation order of
     ``aggregate(zip_with(...))`` — numpy's elementwise ufuncs do not
     fuse multiply-add, and neither does Catalyst codegen, so every
     intermediate double matches. A zero-norm vector divides 0.0 by 0.0
@@ -191,17 +191,14 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
     import numpy as np
     import pandas as pd
 
+    from ..functions.kernels import fold
+
     qrows = queries.select(query_id, query_vec).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    # (dim, n): row j holds dimension j of every query
     Q = np.array([list(map(float, r[1])) for r in qrows],
-                 dtype=np.float64)
-    dim = Q.shape[1] if len(qrows) else 0
-    # query norms by the same sequential fold (sqrt of the running sum
-    # of squares, term order = element order)
-    qn2 = np.zeros(len(qrows), dtype=np.float64)
-    for i in range(dim):
-        qn2 = qn2 + Q[:, i] * Q[:, i]
-    qnorm = np.sqrt(qn2)
+                 dtype=np.float64, ndmin=2).T
+    qnorm = np.sqrt(fold(Q, Q))
 
     out_schema = ("query_id bigint, neighbor_id bigint, "
                   "distance_score double")
@@ -212,18 +209,11 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
                 continue
             ids = pdf[corpus_id].to_numpy(dtype=np.int64)
             C = np.array([list(map(float, v)) for v in pdf[corpus_vec]],
-                         dtype=np.float64)
-            cn2 = np.zeros(len(ids), dtype=np.float64)
-            for i in range(dim):
-                cn2 = cn2 + C[:, i] * C[:, i]
-            cnorm = np.sqrt(cn2)
-            # exact sequential fold across the pair matrix: one
-            # vectorized outer-product accumulation per dimension, in
-            # element order — bit-identical to the zip_with/aggregate
-            # fold per pair
-            acc = np.zeros((len(ids), len(qids)), dtype=np.float64)
-            for i in range(dim):
-                acc = acc + C[:, i, None] * Q[None, :, i]
+                         dtype=np.float64).T
+            cnorm = np.sqrt(fold(C, C))
+            # the fold over the (corpus, query) pair matrix: one
+            # vectorized outer-product accumulation per dimension
+            acc = fold(C[:, :, None], Q[:, None, :])
             with np.errstate(invalid="ignore", divide="ignore"):
                 dist = 1.0 - acc / np.outer(cnorm, qnorm)
             nq = len(qids)

@@ -5438,7 +5438,8 @@ def kmeans_assign(spark, sf_dir):
     d = V.cosine_distance("embedding", "cvec")
     crossed = (emb.crossJoin(F.broadcast(cents))
                .select("vec_id", "cid", d.alias("d")))
-    w = W.partitionBy("vec_id").orderBy(F.col("d").asc(), F.col("cid").asc())
+    w = W.partitionBy("vec_id").orderBy(F.col("d").asc_nulls_last(),
+                                        F.col("cid").asc())
     assigned = (crossed.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1))
     return (assigned.groupBy("cid")
@@ -5935,7 +5936,7 @@ def filtered_knn(spark, sf_dir):
            .filter(F.col("label").isin(2, 5)))
     d = cosine_distance("embedding", QUERY_VEC)
     return (emb.select("vec_id", "label", d.alias("dist"))
-            .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
+            .orderBy(F.col("dist").asc_nulls_last(), F.col("vec_id").asc())
             .limit(5)
             .select("vec_id", "label",
                     F.round("dist", 6).alias("distance_score")))
@@ -6039,7 +6040,7 @@ def hybrid_search_rrf(spark, sf_dir):
              .filter(F.col("dist").isNotNull()))
     vec = vec20.select(
         "doc_id", F.row_number().over(
-            W.orderBy(F.col("dist").asc(), F.col("doc_id")))
+            W.orderBy(F.col("dist").asc_nulls_last(), F.col("doc_id")))
         .alias("r_vec"))
     fused = (lex.join(vec, "doc_id", "full_outer")
              .select("doc_id",
@@ -6205,7 +6206,7 @@ def kmeans_lloyd(spark, sf_dir):
 
     def assign(cents):
         d = cosine_distance("embedding", "cvec")
-        w = W.partitionBy("vec_id").orderBy(F.col("dist").asc(),
+        w = W.partitionBy("vec_id").orderBy(F.col("dist").asc_nulls_last(),
                                             F.col("cid").asc())
         return (emb.crossJoin(F.broadcast(cents))
                 .select("vec_id", "embedding", "cid", d.alias("dist"))
@@ -6588,7 +6589,7 @@ def ivfpq_topk_q(spark, sf_dir):
     d = V.cosine_distance("embedding", QUERY_VEC)
     return (short.join(emb, "vec_id")
             .select("vec_id", d.alias("_d"), "approx_dist")
-            .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
+            .orderBy(F.col("_d").asc_nulls_last(), F.col("vec_id").asc())
             .limit(5)
             .select("vec_id", F.round("_d", 6).alias("distance_score"),
                     "approx_dist"))
@@ -8674,7 +8675,7 @@ def corpus_refresh_cycle_q(spark, sf_dir):
     refreshed = carried.unionByName(fresh)
     dist = cosine_distance("v", _hybrid_qvec())
     return (refreshed.select("doc_id", "state", dist.alias("dist"))
-            .orderBy(F.col("dist").asc(), F.col("doc_id").asc())
+            .orderBy(F.col("dist").asc_nulls_last(), F.col("doc_id").asc())
             .limit(10)
             .select("doc_id", "state",
                     F.round("dist", 6).alias("distance_score")))
@@ -10189,7 +10190,7 @@ def ivfpq_recall_eval_q(spark, sf_dir):
                             scope="ivfpq_recall_eval")
     cents = (spark.read.parquet(os.path.join(path, "_centroids"))
              .select(F.col("cid"), F.col("cvec")))
-    pw = W.partitionBy("qid").orderBy(F.col("pd").asc(),
+    pw = W.partitionBy("qid").orderBy(F.col("pd").asc_nulls_last(),
                                       F.col("cid").asc())
     probes = (queries.crossJoin(F.broadcast(cents))
               .select("qid", "cid",
