@@ -27,6 +27,46 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED plan, results identical (optimized plans diffed for all
+    # 276 keys): ann.ivf_knn_join_materialized picks its probes with
+    # vector.py's SQL fold (queries x cells) instead of the Arrow pair
+    # kernel, which is bit-exact to that fold; the candidate distance
+    # keeps the kernel. Only the probe's cdist projection changes.
+    "ann_knn_join", "ann_recall_eval",
+    # CHANGED index leaf only, plan text byte-identical: ann.py's import
+    # block (the single-query searches end in knn.knn_topk) moves the
+    # IVF, LSH and IVF-PQ index builders' source-closure digests.
+    "ann_index_occupancy", "ann_ivf", "ann_lsh", "ivfpq_recall_eval",
+    "ivfpq_topk", "pq_adc_topk", "pq_encode_error", "semdedup",
+    # CHANGED closure only, plan byte-identical: load_table reads
+    # `events` with a schema from one pyarrow footer probe
+    # (sources/tables._events_source, shared with stream_events), which
+    # moves every python-path key's PYSRC digest that reaches
+    # load_table and every events stream's source digest; the two GEMM
+    # joins share one body (operators/simjoin._gemm_join).
+    "sim_join", "sim_join_gemm", "knn_label_accuracy",
+    "approx_quantiles", "ccnet_ppl_buckets", "corpus_refresh_cycle",
+    "dedup_cluster_examples", "dedup_components", "dedup_keep_best",
+    "dup_ngram_fraction", "embed_quantize", "embed_text",
+    "embedding_near_dup", "group_zscore", "llm_generate",
+    "llm_generate_batch", "media_decode_dispatch", "media_quality_gate",
+    "media_quality_gate_multiformat", "median_agg", "median_impute",
+    "multimodal_bmp_rle_stats", "multimodal_bmp_stats",
+    "multimodal_features", "multimodal_gif_interlaced_stats",
+    "multimodal_gif_stats", "multimodal_jpeg_411_stats",
+    "multimodal_jpeg_420_stats", "multimodal_jpeg_422_stats",
+    "multimodal_jpeg_color_stats", "multimodal_jpeg_progressive_stats",
+    "multimodal_jpeg_stats", "multimodal_png_interlaced_stats",
+    "multimodal_png_stats", "multimodal_wav_stats",
+    "near_dup_cluster_stats", "near_dup_cross_source", "observed_ingest",
+    "percentile_cont_exact", "quality_gate", "quantization_error",
+    "quartile_agg", "result_fetch", "subword_tokenize", "udtf_ngrams",
+    "value_outlier_iqr", "stream_dedup", "stream_event_alert",
+    "stream_foreach_sink", "stream_hop_window", "stream_media_decode",
+    "stream_media_dispatch", "stream_minhash_probe",
+    "stream_paragraph_probe", "stream_session_window",
+    "stream_sessionize", "stream_static_join", "stream_stream_join",
+    "stream_window_agg",
     # CHANGED plan, results identical at sf0.001 (optimized plans
     # diffed for all 276 keys). The batch pair joins score vector pairs
     # with the bit-exact Arrow kernel (functions/kernels.pair_cosine,

@@ -11,51 +11,36 @@ from tripgogo_vector_search_spark.plans.flagship import QUERY_VEC
 from tripgogo_vector_search_spark.sources.tables import load_table
 
 
-def test_lsh_bucket_pruning_and_determinism(spark):
+def test_lsh_bucket_pruning_and_determinism(spark, tmp_path):
     emb = load_table(spark, SF_CORRECTNESS, "embeddings")
-    idx = ANN.build_lsh_index(emb)
+    path = str(tmp_path / "lsh")
+    ANN.materialize_lsh_index(emb, path)
+    idx = spark.read.parquet(path)
     total = emb.count()
     bucket = ANN.py_lsh_bucket(QUERY_VEC, ANN.lsh_planes())
     cand = idx.filter(idx.bucket == bucket).count()
     assert 0 < cand < total / 4  # 8 planes => ~total/256 expected
-    r1 = [r.vec_id for r in ANN.lsh_search(idx, QUERY_VEC, k=3).collect()]
-    r2 = [r.vec_id for r in ANN.lsh_search(idx, QUERY_VEC, k=3).collect()]
+    r1 = [r.vec_id for r in
+          ANN.lsh_search_materialized(spark, path, QUERY_VEC, k=3).collect()]
+    r2 = [r.vec_id for r in
+          ANN.lsh_search_materialized(spark, path, QUERY_VEC, k=3).collect()]
     assert r1 == r2 and len(r1) <= 3
 
 
-def test_ivf_partition_and_recall(spark):
+def test_ivf_partition_and_recall(spark, tmp_path):
     emb = load_table(spark, SF_CORRECTNESS, "embeddings")
-    idx = ANN.build_ivf_index(emb, n_cells=16)
+    path = str(tmp_path / "ivf")
+    ANN.materialize_ivf_index(emb, path, n_cells=16)
+    idx = spark.read.parquet(path)
     # every vector assigned exactly one cell
     assert idx.count() == emb.count()
     assert idx.select("cid").distinct().count() <= 16
     # recall@10 with wide probing: probe half the cells, expect >= 50%
     exact = {r.vec_id for r in knn_topk(emb, QUERY_VEC, k=10,
                                         tiebreak="vec_id").collect()}
-    approx = {r.vec_id for r in ANN.ivf_search(emb, QUERY_VEC, k=10,
-                                               n_cells=16, nprobe=8).collect()}
+    approx = {r.vec_id for r in ANN.ivf_search_materialized(
+        spark, path, QUERY_VEC, k=10, n_cells=16, nprobe=8).collect()}
     assert len(approx & exact) >= 5, (exact, approx)
-
-
-def test_ivf_kmeans_recall_beats_probe_budget(spark):
-    """KMeans-centroid IVF: probing half the cells recovers >= half of
-    the exact top-10 on the (near-uniform 64-d) synthetic corpus — the
-    production centroid path (seed-sampled centroids are the
-    deterministic-oracle path; search plan identical). Uniform synthetic
-    vectors are ANN's worst case; real embedding corpora cluster far
-    more sharply and the same index gets much higher recall per probe."""
-    emb = load_table(spark, SF_CORRECTNESS, "embeddings")
-    idx, cents = ANN.build_ivf_index_kmeans(emb, n_cells=16, seed=7)
-    assert idx.count() == emb.count()
-    exact = {r.vec_id for r in knn_topk(emb, QUERY_VEC, k=10,
-                                        tiebreak="vec_id").collect()}
-    got = ANN.ivf_search_kmeans(idx, cents, QUERY_VEC, k=10, nprobe=8).collect()
-    approx = {r.vec_id for r in got}
-    assert len(approx & exact) >= 5, (exact, approx)
-    # determinism: same seed, same result
-    idx2, cents2 = ANN.build_ivf_index_kmeans(emb, n_cells=16, seed=7)
-    got2 = ANN.ivf_search_kmeans(idx2, cents2, QUERY_VEC, k=10, nprobe=8).collect()
-    assert [r.vec_id for r in got] == [r.vec_id for r in got2]
 
 
 # A zero-norm vector has no cosine distance: every search gives it NULL
@@ -97,11 +82,12 @@ def test_zero_norm_ranks_last_in_ivf_search(spark, tmp_path):
         spark, path, q, k=k, n_cells=2, nprobe=2).collect())
 
 
-def test_zero_norm_ranks_last_in_lsh_search(spark):
+def test_zero_norm_ranks_last_in_lsh_search(spark, tmp_path):
+    path = str(tmp_path / "lsh")
     planes = [[0.0, 0.0, 0.0, 1.0]]  # every row and query hash to "b1"
-    idx = ANN.build_lsh_index(_zero_corpus(spark), planes=planes)
-    _check_zero_norm(lambda q, k: ANN.lsh_search(idx, q, k=k,
-                                                 planes=planes).collect())
+    ANN.materialize_lsh_index(_zero_corpus(spark), path, planes=planes)
+    _check_zero_norm(lambda q, k: ANN.lsh_search_materialized(
+        spark, path, q, k=k, planes=planes).collect())
 
 
 @pytest.mark.parametrize("key", ["filtered_knn", "kmeans_assign"])

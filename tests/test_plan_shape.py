@@ -887,13 +887,13 @@ def test_ann_recall_eval_reads_only_probed_cells(spark):
     """Recall eval: the approx side reads the cid-partitioned index
     with partition filters (only probed cells), the exact side
     broadcasts the query block; the comparison join broadcasts the
-    tiny approx top-k frame. Its only Python stages are the approx
-    join's two pair-kernel scores (probe choice and candidate
-    distance), each printed twice."""
+    tiny approx top-k frame. Its only Python stage is the approx
+    join's pair-kernel candidate distance, printed twice; the probe
+    choice scores queries x cells with the SQL fold."""
     plan = plan_of(QUERIES["ann_recall_eval"](spark, SF_CORRECTNESS))
     assert "PartitionFilters" in plan
     assert "BroadcastHashJoin" in plan
-    assert plan.count("EvalPython") == plan.count("ArrowEvalPython") == 4
+    assert plan.count("EvalPython") == plan.count("ArrowEvalPython") == 2
 
 
 def test_kmeans_assign_broadcast_centroids_single_agg(spark):

@@ -8,6 +8,8 @@
    changes the `_centroids` listing token, so the next search answers
    from the new index.
 3. The declared schemas equal what Spark infers from every fixture.
+   `events` takes its schema from one footer probe, in either `ts`
+   form, and its batch and streaming readers start no job.
 4. Checkpoint release and the RAG retry loop leave a trace where they
    should and none where they should not.
 """
@@ -225,10 +227,44 @@ def test_ivf_handle_memo_under_concurrent_opens(spark, ivf, tmp_path, monkeypatc
 
 @pytest.mark.parametrize("sf_dir", FIXTURES)
 def test_declared_schemas_match_fixture_footers(spark, sf_dir):
+    from tripgogo_vector_search_spark.sources.tables import _events_source
     for name, schema in TABLES.items():
-        if name == "events":  # ts ships as nanos or micros; detected per read
-            continue
+        if name == "events":  # ts ships as nanos or micros; probed per read
+            schema = _events_source(spark, sf_dir)[0]
         assert spark.read.parquet(f"{sf_dir}/{name}.parquet").schema == schema, name
+
+
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+@pytest.mark.parametrize("reader", ["batch", "stream"])
+def test_events_read_starts_no_job(spark, tmp_path, unit, reader):
+    """Either `ts` form of `events` is read with a declared schema from
+    one footer probe: building the batch or the streaming reader starts
+    no Spark job, and only the NANOS form sets the session-global
+    `nanosAsLong`."""
+    from tests.test_sources_ts import TS, _write_events
+    from tripgogo_vector_search_spark.streaming.ingest import stream_events
+
+    sf_dir = _write_events(str(tmp_path), unit)
+    read = {"batch": lambda: load_table(spark, sf_dir, "events"),
+            "stream": lambda: stream_events(spark, sf_dir)}[reader]
+    old = spark.conf.get(_NANOS, None)
+    spark.conf.unset(_NANOS)
+    try:
+        df, jobs = _build_jobs(spark, read)
+        nanos = spark.conf.get(_NANOS, None)
+    finally:
+        if old is None:
+            spark.conf.unset(_NANOS)
+        else:
+            spark.conf.set(_NANOS, old)
+    assert jobs == 0
+    assert nanos == ("true" if unit == "ns" else None)
+    assert df.schema["ts"].dataType.typeName() == "timestamp"
+    if reader == "batch":
+        assert [r.ts for r in df.orderBy("event_id").collect()] == TS
 
 
 def test_released_checkpoint_leaves_persistent_rdds(spark):

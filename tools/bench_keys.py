@@ -10,6 +10,11 @@ Prints one JSON line {key: floor_sec} so runs can be diffed, then one
 {"build": {key: floor_sec}} line: the builder call alone (the build
 layer, before any action) of the same reps. Plans land
 at plans/<round>/<key>_<tag>.txt when --plans <tag> is given.
+
+Unless SPARK_GRAFT_CPUS is set, the session gets vbench's executor core
+count (the usable cores minus one for the driver), so the Python-UDF
+keys do not oversubscribe a small host at the package's local[32]
+default.
 """
 
 from __future__ import annotations
@@ -39,6 +44,9 @@ def main() -> None:
     ap.add_argument("--no-time", action="store_true",
                     help="plans only, skip timing")
     args = ap.parse_args()
+
+    from vbench.run import default_cpus
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(default_cpus()))
 
     import bench as benchmod
     from tripgogo_vector_search_spark.plans.registry import QUERIES

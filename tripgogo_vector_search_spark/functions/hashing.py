@@ -77,10 +77,3 @@ def simhash32(tokens_col: ColumnOrName) -> Column:
     NB: prefer materializing the md5 array first (see
     ``simhash_from_hashes``) in hot paths."""
     return simhash_from_hashes(F.transform(_c(tokens_col), F.md5))
-
-
-def hamming_distance_bits(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Hamming distance between two equal-length bitstrings."""
-    pairs = F.zip_with(F.split(_c(a), ""), F.split(_c(b), ""),
-                       lambda x, y: F.when(x != y, 1).otherwise(0))
-    return F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)

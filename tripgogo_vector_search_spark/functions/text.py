@@ -70,12 +70,6 @@ def punct_ratio(col: ColumnOrName) -> Column:
     return F.when(F.length(c) > 0, non_word.cast("double") / F.length(c)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: ColumnOrName, lang: str = "en") -> Column:
-    w = words(col)
-    hits = F.size(F.filter(w, lambda t: F.lower(t).isin(*STOPWORDS[lang])))
-    return F.when(F.size(w) > 0, hits.cast("double") / F.size(w)).otherwise(F.lit(0.0))
-
-
 def quality_score(col: ColumnOrName) -> Column:
     """Heuristic document quality in [0,1]: rewards mid-length docs,
     penalizes punctuation soup and very short text. Deterministic

@@ -13,9 +13,13 @@ buckets instead of scanning the corpus.
   partition-pruned scan of ~corpus/2^bits rows.
 * **IVF (inverted file)** — corpus assigned to nearest of `n_cells`
   centroids; a query probes the `nprobe` nearest cells. Centroids here
-  are seed-sampled (first `n_cells` vectors) for full determinism; a
-  production build would run k-means (MLlib KMeans) and the search
-  plan is unchanged.
+  are seed-sampled (first `n_cells` vectors) for full determinism.
+  Trained centroids are ROADMAP new direction 3: they would feed this
+  same build, and the search plans would not change.
+
+Each operator has one implementation: one LSH and one IVF build, the
+searches over their materialized indexes, and the IVF batch join. The
+single-query searches end in :func:`knn.knn_topk`'s exact top-k.
 
 Hyperplanes are generated from a fixed closed-form (sin-based) sequence
 rounded to 6 dp, so the exact same literals are embeddable in oracle SQL.
@@ -35,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window as W, functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.vector import cosine_distance, dot, l2_norm
+from .knn import knn_topk
 
 DEFAULT_PLANES = 8
 
@@ -83,21 +88,6 @@ def build_lsh_index(corpus: DataFrame, vec_col: str = "embedding",
     return corpus.withColumn("bucket", lsh_bucket_expr(vec_col, planes))
 
 
-def lsh_search(index: DataFrame, query_vec: Sequence[float], k: int = 3,
-               vec_col: str = "embedding", id_col: str = "vec_id",
-               planes: list[list[float]] | None = None) -> DataFrame:
-    """Search the query's bucket only (single-probe). The bucket equality
-    filter is a plain predicate — pushed down to the partitioned index."""
-    planes = planes or lsh_planes()
-    qbucket = py_lsh_bucket(query_vec, planes)
-    cand = index.filter(F.col("bucket") == qbucket)
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
-            .limit(k)
-            .select(id_col, F.round("distance_score", 6).alias("distance_score")))
-
-
 def materialize_lsh_index(corpus: DataFrame, path: str,
                           vec_col: str = "embedding",
                           planes: list[list[float]] | None = None) -> None:
@@ -119,10 +109,7 @@ def lsh_search_materialized(spark, path: str, query_vec: Sequence[float],
     planes = planes or lsh_planes()
     qbucket = py_lsh_bucket(query_vec, planes)
     cand = spark.read.parquet(path).filter(F.col("bucket") == qbucket)
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
-            .limit(k)
+    return (knn_topk(cand, query_vec, k, vec_col, tiebreak=id_col)
             .select(id_col, F.round("distance_score", 6).alias("distance_score")))
 
 
@@ -219,10 +206,7 @@ def ivf_search_materialized(spark, path: str,
     order = sorted(h.centroids, key=lambda c: (_cos_dist(c[1], query_vec), c[0]))
     probes = [cid for cid, _ in order[:nprobe]]
     cand = spark.read.schema(h.schema).parquet(path).filter(F.col("cid").isin(probes))
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
-            .limit(k)
+    return (knn_topk(cand, query_vec, k, vec_col, tiebreak=id_col)
             # partition-column type inference reads cid back as int;
             # restore the builder's bigint so the result schema is stable
             .selectExpr(f"`{id_col}`", "CAST(cid AS BIGINT) AS cid",
@@ -248,6 +232,11 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     unlike the single-query `ivf_search_materialized`. The centroid
     files and the index are read with the :func:`open_ivf` handle's
     schemas, so building the plan starts no schema-inference job.
+
+    The probe scores only queries x n_cells pairs with vector.py's SQL
+    fold; the candidate pairs are scored by the Arrow pair kernel, the
+    plan's one Python stage. Both are bit-exact to the same fold, so
+    the probes are the same either way.
     """
     # imported here: the kernel module loads pandas, which the online
     # search path keeps out of the driver
@@ -256,7 +245,7 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     h = open_ivf(spark, path)
     cents = spark.read.schema(h.centroid_schema).parquet(*h.centroid_files)
     qc = (queries.crossJoin(F.broadcast(cents))
-          .withColumn("cdist", pair_cosine(q_vec, "cvec")))
+          .withColumn("cdist", cosine_distance(q_vec, "cvec")))
     wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc_nulls_last(), "cid")
     probes = (qc.withColumn("prn", F.row_number().over(wq))
               .filter(F.col("prn") <= nprobe)
@@ -275,7 +264,7 @@ def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
                     id_col: str = "vec_id", n_cells: int = 16) -> DataFrame:
     """Assign every vector to its nearest centroid (deterministic argmin:
     distance then centroid id). Centroids = the `n_cells` smallest-id
-    vectors — swap in k-means centroids for production quality."""
+    vectors; trained centroids are ROADMAP new direction 3."""
     cents = (corpus.filter(F.col(id_col) < n_cells)
              .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"),
                      l2_norm(vec_col).alias("cnorm")))
@@ -288,60 +277,3 @@ def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
     return (scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(id_col, vec_col, "cid"))
-
-
-def ivf_search(corpus: DataFrame, query_vec: Sequence[float], k: int = 3,
-               vec_col: str = "embedding", id_col: str = "vec_id",
-               n_cells: int = 16, nprobe: int = 2) -> DataFrame:
-    """Probe the `nprobe` centroids nearest the query; exact search within
-    those cells. At scale the index is written partitioned by `cid`, so
-    this reads nprobe/n_cells of the data."""
-    index = build_ivf_index(corpus, vec_col, id_col, n_cells)
-    cents = (corpus.filter(F.col(id_col) < n_cells)
-             .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")))
-    probes = (cents.withColumn("qdist", cosine_distance("cvec", query_vec))
-              .orderBy(F.col("qdist").asc_nulls_last(), "cid")
-              .limit(nprobe).select("cid"))
-    cand = index.join(F.broadcast(probes), "cid")
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
-            .limit(k)
-            .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))
-
-
-def build_ivf_index_kmeans(corpus: DataFrame, vec_col: str = "embedding",
-                           id_col: str = "vec_id", n_cells: int = 16,
-                           seed: int = 7):
-    """Production-quality IVF: MLlib KMeans centroids (fixed seed) instead
-    of seed-sampled vectors. Returns (index_df, centroids); the index is
-    written partitioned by `cid` exactly like the seed-sampled variant —
-    only centroid quality changes, the search plan is identical."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = corpus.withColumn(
-        "_fv", array_to_vector(F.col(vec_col).cast("array<double>")))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_fv",
-                   predictionCol="cid").fit(feat)
-    idx = model.transform(feat).select(id_col, vec_col, "cid")
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-    return idx, centroids
-
-
-def ivf_search_kmeans(index: DataFrame, centroids: list[list[float]],
-                      query_vec: Sequence[float], k: int = 3,
-                      vec_col: str = "embedding", id_col: str = "vec_id",
-                      nprobe: int = 2) -> DataFrame:
-    """Probe the `nprobe` nearest KMeans cells (driver-side argsort over
-    n_cells centroids — tiny), exact-search inside them. Reads
-    nprobe/n_cells of a cid-partitioned index."""
-    order = sorted(range(len(centroids)),
-                   key=lambda c: (_cos_dist(query_vec, centroids[c]), c))
-    probes = order[:nprobe]
-    cand = index.filter(F.col("cid").isin(probes))
-    scored = cand.withColumn(
-        "distance_score", cosine_distance(vec_col, query_vec))
-    return (scored.orderBy(F.col("distance_score").asc_nulls_last(), id_col)
-            .limit(k)
-            .select(id_col, "cid", F.round("distance_score", 6).alias("distance_score")))

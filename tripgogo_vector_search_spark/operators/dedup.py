@@ -168,13 +168,6 @@ def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             .select(F.col(id_col), simhash_udf(text_col).alias("simhash")))
 
 
-def simhash_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    s = simhash_signatures(df, text_col, id_col)
-    return (s.groupBy("simhash")
-            .agg(F.min(id_col).alias("canonical_id"),
-                 F.count(F.lit(1)).alias("dup_count")))
-
-
 def shingle_inverted_index(df: DataFrame, text_col: str, id_col: str,
                            shingle_n: int = 3,
                            hash_shingle_key: bool = True) -> DataFrame:

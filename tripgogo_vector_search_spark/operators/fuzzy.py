@@ -86,7 +86,8 @@ def fuzzy_block_candidates(df: DataFrame, id_col: str = "p_partkey",
     join key (block-only), exposing the quadratic-per-block growth the
     production key avoids; tests assert the ratio on a mixed-length
     corpus so a future edit can't silently revert to the block-only
-    key."""
+    key. No production path calls it: it exposes the join's candidate
+    frame to that pruning test."""
     if bucketed:
         a, b = _fuzzy_sides(df, id_col, name_col, max_dist)
         cond = _equi_cond(id_col)

@@ -562,7 +562,10 @@ def parse_bmp_rle(data: bytes | None) -> tuple | None:
     statistic that makes the bottom-up row FLIP oracle-visible
     (every mean is invariant under row reordering). Returns
     ``(width, height, n_pixels, mean_idx, row_weighted_idx, mean_r,
-    mean_g, mean_b)`` or ``None``."""
+    mean_g, mean_b)`` or ``None``.
+
+    No production path calls it: it stays as the spec oracle the numpy
+    RLE kernel is tested against."""
     bi = _bmp_rle_indices(data)
     if bi is None:
         return None

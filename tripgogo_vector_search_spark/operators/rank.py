@@ -156,8 +156,8 @@ def with_bucket_id(df: DataFrame, value_col: str, *, descending: bool = False,
 
     Returns ``(frame, counts)`` where ``counts`` is the bounded
     per-(group, bucket) row-count frame ``(*group, bucket_col, _cnt)``,
-    which callers feed straight to :func:`bucket_offsets` to derive
-    rank offsets. The row frame carries no helper columns beyond
+    from which a cumulative window over the counts derives rank
+    offsets. The row frame carries no helper columns beyond
     ``bucket_col``."""
     spark = df.sparkSession
     g = list(partition_cols)
@@ -244,25 +244,6 @@ def with_bucket_id(df: DataFrame, value_col: str, *, descending: bool = False,
              .agg(F.count(F.lit(1)).alias("_cnt")))
     counts = nonsplit.unionByName(split)
     return out, counts
-
-
-def bucket_offsets(counts: DataFrame, *, partition_cols: Sequence[str] = (),
-                   bucket_col: str = "_bkt",
-                   off_col: str = "_off", total_col: str = "_n") -> DataFrame:
-    """Per-(group, bucket) cumulative rank offset and group total from
-    the bounded ``(*group, bucket, _cnt)`` count frame that
-    :func:`with_bucket_id` already produced; the cumulative window runs
-    over those aggregate rows only — no pass over the input rows."""
-    g = list(partition_cols)
-    wc = (W.partitionBy(*g) if g else W.partitionBy()).orderBy(bucket_col)
-    return counts.select(
-        *g, bucket_col, F.col("_cnt"),
-        F.coalesce(F.sum("_cnt").over(
-            wc.rowsBetween(W.unboundedPreceding, -1)), F.lit(0))
-        .alias(off_col),
-        F.sum("_cnt").over(
-            wc.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-        .alias(total_col))
 
 
 def with_global_rank(df: DataFrame, value_col: str,

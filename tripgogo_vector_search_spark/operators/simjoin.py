@@ -1,22 +1,31 @@
 """Batch similarity join: every query row finds its top-k corpus
 neighbors (SURVEY.md §2.E `sim_join`).
 
-Strategy: broadcast the (small) query side, join against the corpus with
-a JVM-side cosine expression, then per-query top-k via a row_number
-window partitioned by query id. The corpus is never shuffled — only the
-k-row-per-query window output moves. At 100 TB the corpus scan dominates
-and parallelizes linearly; the window's partition count equals the query
-count, so thousands of queries spread evenly.
+Three joins share one contract (ascending cosine distance, NULL last,
+corpus-id tiebreak) and differ in how they score:
 
-For query sets too large to broadcast, switch to the ANN path
-(operators/ann.py): bucket both sides and join per bucket.
+* :func:`similarity_join` — broadcast the (small) query side, score
+  every pair with vector.py's JVM-side fold, then a per-query
+  row_number window. The corpus is never shuffled. It computes the
+  exact ground truth of the recall keys (ann_recall_eval,
+  ivfpq_recall_eval).
+* :func:`similarity_join_gemm` — each corpus Arrow batch scored against
+  the query block with one BLAS matrix multiply, distances rounded to
+  6 dp before ranking. vbench's batch join and knn_label_accuracy use
+  it.
+* :func:`similarity_join_gemm_exact` — the same batch scoring with the
+  bit-exact fold (``kernels.fold``). It serves ``sim_join``.
+
+The two GEMM joins share one body (:func:`_gemm_join`): query collect,
+partition-local top-k and the global rank window. For query sets too
+large to collect, switch to the ANN path (operators/ann.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..functions.vector import cosine_distance
+from ..functions.vector import dot, l2_norm
 
 
 def similarity_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
@@ -25,8 +34,6 @@ def similarity_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
                     exclude_self: bool = True) -> DataFrame:
     """Top-k corpus neighbors per query row by ascending cosine distance;
     deterministic corpus-id tiebreak."""
-    from ..functions.vector import dot, l2_norm
-
     # Precompute each side's norm once per row (not once per pair): the
     # per-pair work drops from three 64-dim folds to one.
     q = queries.select(F.col(query_id).alias("query_id"),
@@ -56,39 +63,60 @@ def similarity_join(corpus: DataFrame, queries: DataFrame, k: int = 3,
                     F.round("distance_score", 6).alias("distance_score")))
 
 
-def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
-                         corpus_vec: str = "embedding",
-                         corpus_id: str = "vec_id",
-                         query_vec: str = "embedding",
-                         query_id: str = "vec_id",
-                         exclude_self: bool = True) -> DataFrame:
-    """Same semantics as :func:`similarity_join`, different physical
-    strategy: the query block is shipped to every corpus partition and
-    each Arrow batch scores against it with one BLAS matrix multiply
-    (``C @ Q.T``), keeping only the partition-local top-k per query;
-    the global top-k reduces the tiny candidate set with a window.
+# The two scoring steps of the GEMM joins: ``scorer(Q)`` takes the
+# (n_queries, dim) query block and returns ``score(C)``, the
+# (n_corpus, n_queries) cosine distances of a corpus batch. A zero norm
+# gives 0/0, a deliberate NaN, not an error.
 
-    Per corpus row the expression path folds a 64-element loop per query
-    (interpreted, ``CodegenFallback``); the GEMM path amortizes it into
-    one vectorized multiply per batch — the right trade when |queries| is
-    large enough that the per-pair loop dominates. Candidate traffic is
-    |queries| x k per partition, independent of corpus size. Distances
-    use float64 BLAS accumulation, which can differ from the sequential
-    fold by ~1 ulp — so distances are rounded to 6 dp BEFORE the
-    partition-local top-k and the global rank window, not just on
-    output: the neighbor CHOICE (argmin) is then decided on the same
-    6-dp value an exact-fold oracle computes, and an ulp-level BLAS
-    near-tie cannot flip which neighbor wins (ties at 6 dp break by
-    neighbor_id on both sides). Oracles for GEMM-backed queries mirror
-    ``round(d, 6)`` in their ORDER BY.
-    """
+def _blas_scores(Q):
+    """One BLAS multiply, rounded to 6 dp BEFORE ranking so the argmin
+    is ulp-drift-proof (see :func:`similarity_join_gemm`)."""
+    import numpy as np
+
+    qnorm = np.sqrt((Q * Q).sum(axis=1))
+
+    def score(C):
+        cnorm = np.sqrt((C * C).sum(axis=1))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            return np.round(1.0 - (C @ Q.T) / np.outer(cnorm, qnorm), 6)
+    return score
+
+
+def _fold_scores(Q):
+    """The bit-exact fold, one vectorized outer-product accumulation
+    per dimension (see :func:`similarity_join_gemm_exact`)."""
+    import numpy as np
+
+    from ..functions.kernels import fold
+
+    Qt = Q.T  # (dim, n): row j holds dimension j of every query
+    qnorm = np.sqrt(fold(Qt, Qt))
+
+    def score(C):
+        Ct = C.T
+        cnorm = np.sqrt(fold(Ct, Ct))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            return 1.0 - fold(Ct[:, :, None], Qt[:, None, :]) / np.outer(cnorm, qnorm)
+    return score
+
+
+def _gemm_join(corpus: DataFrame, queries: DataFrame, k: int,
+               corpus_vec: str, corpus_id: str, query_vec: str,
+               query_id: str, exclude_self: bool, scorer) -> DataFrame:
+    """The GEMM joins' shared body. The query block is collected and
+    shipped to every corpus partition; ``scorer(Q)`` returns the step
+    that turns a batch's ``(n_corpus, dim)`` matrix into its distance
+    matrix against the block. Each Arrow batch keeps only its
+    partition-local top-k per query, so candidate traffic is |Q| x k
+    per partition, independent of corpus size; one rank window then
+    reduces the candidates."""
     import numpy as np
     import pandas as pd
 
     qrows = queries.select(query_id, query_vec).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    qnorm = np.sqrt((Q * Q).sum(axis=1))
+    score = scorer(np.array([list(map(float, r[1])) for r in qrows],
+                            dtype=np.float64, ndmin=2))
 
     out_schema = ("query_id bigint, neighbor_id bigint, "
                   "distance_score double")
@@ -98,14 +126,8 @@ def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
             if pdf.empty:
                 continue
             ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            C = np.array([list(map(float, v)) for v in pdf[corpus_vec]],
-                         dtype=np.float64)
-            cnorm = np.sqrt((C * C).sum(axis=1))
-            # round BEFORE ranking so the argmin is ulp-drift-proof;
-            # 0/0 (zero-norm vector) is a deliberate NaN, not an error
-            with np.errstate(invalid="ignore", divide="ignore"):
-                dist = np.round(1.0 - (C @ Q.T) / np.outer(cnorm, qnorm),
-                                6)
+            dist = score(np.array([list(map(float, v)) for v in pdf[corpus_vec]],
+                                  dtype=np.float64))
             nq = len(qids)
             kk = min(k, len(ids))
             # self-exclusion by dropping the row INDEX, never by value
@@ -160,6 +182,32 @@ def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
                     F.round("distance_score", 6).alias("distance_score")))
 
 
+def similarity_join_gemm(corpus: DataFrame, queries: DataFrame, k: int = 3,
+                         corpus_vec: str = "embedding",
+                         corpus_id: str = "vec_id",
+                         query_vec: str = "embedding",
+                         query_id: str = "vec_id",
+                         exclude_self: bool = True) -> DataFrame:
+    """Same semantics as :func:`similarity_join`, different physical
+    strategy (:func:`_gemm_join`): each Arrow batch scores against the
+    query block with one BLAS matrix multiply (``C @ Q.T``). Per corpus
+    row the expression path folds a 64-element loop per query
+    (interpreted, ``CodegenFallback``); the GEMM path amortizes it into
+    one vectorized multiply per batch — the right trade when |queries| is
+    large enough that the per-pair loop dominates. Distances
+    use float64 BLAS accumulation, which can differ from the sequential
+    fold by ~1 ulp — so distances are rounded to 6 dp BEFORE the
+    partition-local top-k and the global rank window, not just on
+    output: the neighbor CHOICE (argmin) is then decided on the same
+    6-dp value an exact-fold oracle computes, and an ulp-level BLAS
+    near-tie cannot flip which neighbor wins (ties at 6 dp break by
+    neighbor_id on both sides). Oracles for GEMM-backed queries mirror
+    ``round(d, 6)`` in their ORDER BY.
+    """
+    return _gemm_join(corpus, queries, k, corpus_vec, corpus_id, query_vec,
+                      query_id, exclude_self, _blas_scores)
+
+
 def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
                                k: int = 3,
                                corpus_vec: str = "embedding",
@@ -168,8 +216,7 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
                                query_id: str = "vec_id",
                                exclude_self: bool = True) -> DataFrame:
     """:func:`similarity_join` semantics with :func:`similarity_join_gemm`
-    economics (r16 optimization): one vectorized scoring pass per Arrow
-    batch + partition-local top-k, but the per-pair arithmetic is the
+    economics (:func:`_gemm_join`), but the per-pair arithmetic is the
     EXACT sequential fold of the expression path, so the UNROUNDED
     distance doubles — and therefore the neighbor ranking on near-ties
     — are bit-identical to ``similarity_join``'s and to the oracle's
@@ -184,73 +231,7 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
     (the dot against an all-zero vector is exactly 0.0) -> NaN ->
     NULL across Arrow, ranked nulls-last with the id tiebreak — the
     same contract as the expression path's try_divide. ~dim vectorized
-    passes per batch instead of a per-pair interpreted lambda fold;
-    partition-local top-k means candidate traffic is |Q| x k per
-    partition, independent of corpus size (measured 1.84 -> 0.67 s on
-    sim_join at sf0.1)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.kernels import fold
-
-    qrows = queries.select(query_id, query_vec).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    # (dim, n): row j holds dimension j of every query
-    Q = np.array([list(map(float, r[1])) for r in qrows],
-                 dtype=np.float64, ndmin=2).T
-    qnorm = np.sqrt(fold(Q, Q))
-
-    out_schema = ("query_id bigint, neighbor_id bigint, "
-                  "distance_score double")
-
-    def score_partition(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            C = np.array([list(map(float, v)) for v in pdf[corpus_vec]],
-                         dtype=np.float64).T
-            cnorm = np.sqrt(fold(C, C))
-            # the fold over the (corpus, query) pair matrix: one
-            # vectorized outer-product accumulation per dimension
-            acc = fold(C[:, :, None], Q[:, None, :])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                dist = 1.0 - acc / np.outer(cnorm, qnorm)
-            nq = len(qids)
-            kk = min(k, len(ids))
-            self_pos = ({int(v): i for i, v in enumerate(ids)}
-                        if exclude_self else {})
-            out_q = np.empty(nq * kk, dtype=np.int64)
-            out_n = np.empty(nq * kk, dtype=np.int64)
-            out_d = np.empty(nq * kk, dtype=np.float64)
-            pos = 0
-            for j in range(nq):
-                col = dist[:, j]
-                order = np.lexsort((ids, col))   # NaN last, id tiebreak
-                sp = self_pos.get(int(qids[j]))
-                if sp is not None:
-                    order = order[order != sp]
-                take = order[:kk]
-                t = len(take)
-                out_q[pos:pos + t] = qids[j]
-                out_n[pos:pos + t] = ids[take]
-                out_d[pos:pos + t] = col[take]
-                pos += t
-            yield pd.DataFrame({
-                "query_id": out_q[:pos],
-                "neighbor_id": out_n[:pos],
-                "distance_score": out_d[:pos],
-            })
-
-    partial = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score_partition, out_schema)
-    # NaN -> NULL across the pandas->Arrow boundary; nulls_last matches
-    # lexsort's NaN-last and the oracle's NULLS LAST (see
-    # similarity_join_gemm's note on the r5/r6 latent bug)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("distance_score").asc_nulls_last(),
-        F.col("neighbor_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("distance_score", 6).alias("distance_score")))
+    passes per batch instead of a per-pair interpreted lambda fold
+    (measured 1.84 -> 0.67 s on sim_join at sf0.1)."""
+    return _gemm_join(corpus, queries, k, corpus_vec, corpus_id, query_vec,
+                      query_id, exclude_self, _fold_scores)

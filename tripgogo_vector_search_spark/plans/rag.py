@@ -146,20 +146,11 @@ def generate_summary(rows: list[dict], query: str,
     return FALLBACK_MSG
 
 
-def rag_summarize(topk_df: DataFrame, query: str,
-                  transport: Callable[[dict], dict] = stub_transport,
-                  sleeper: Callable[[float], None] = time.sleep) -> str:
-    """End of the flagship pipeline: collect the (<=10-row) top-k and
-    summarize (streamlit_app.py:221-238)."""
-    rows = [r.asDict() for r in topk_df.collect()]
-    return generate_summary(rows, query, transport, sleeper)
-
-
 def batch_rag_summaries(pruned: DataFrame, group_col: str = "source",
                         row_cols: tuple = ("doc_id", "snippet"),
                         transport: Callable[[dict], dict] = stub_transport,
                         sleeper: Callable[[float], None] = None) -> DataFrame:
-    """BATCH RAG — the scale path of the single `rag_summarize` call:
+    """BATCH RAG — the scale path of the single `generate_summary` call:
     one summary PER GROUP, generated inside the executors via
     ``applyInPandas`` (the module docstring's promised shape: 'for
     batch RAG over millions of rows, run the same generate_summary per

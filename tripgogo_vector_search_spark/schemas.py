@@ -9,7 +9,7 @@ what Spark infers from the fixture files. The fixtures hold dates as
 parquet `timestamp[us]` without a time zone, which Spark reads as
 TIMESTAMP_NTZ. `EVENTS` describes `load_table`'s output instead: its
 `ts` ships in two physical forms, both normalized to the session
-TIMESTAMP type there.
+TIMESTAMP type there; its other columns are also the read schema.
 """
 
 from __future__ import annotations

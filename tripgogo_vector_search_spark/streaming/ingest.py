@@ -24,15 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 _COUNTER = itertools.count()
 
-EVENTS_RAW_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.LongType()),  # TIMESTAMP(NANOS) fixture: read as long
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
-
 DOCS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("text", T.StringType()),
@@ -43,29 +34,17 @@ DOCS_SCHEMA = T.StructType([
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-backed events stream; adapts to either physical `ts` type the
-    fixture has shipped with (TIMESTAMP(NANOS) -> read as long + floor to
-    micros; TIMESTAMP(MICROS) -> read as NTZ + cast). The footer is probed
-    once on the driver — streams need the schema declared up front."""
-    import os
+    """File-backed events stream, read with the batch reader's schema and
+    `ts` normalization (`sources.tables._events_source`): streams need
+    the schema declared up front, and the footer probe decides it."""
+    from ..sources.tables import _events_source
 
-    import pyarrow.parquet as pq
-
-    ts_type = pq.read_schema(
-        os.path.join(sf_dir, "events.parquet")).field("ts").type
+    schema, ts = _events_source(spark, sf_dir)
     # file-stream sources require a directory; select the one table file
     # via pathGlobFilter
-    if getattr(ts_type, "unit", None) == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (spark.readStream.format("parquet").schema(EVENTS_RAW_SCHEMA)
-               .option("pathGlobFilter", "events.parquet").load(sf_dir))
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    schema = T.StructType([
-        f if f.name != "ts" else T.StructField("ts", T.TimestampNTZType())
-        for f in EVENTS_RAW_SCHEMA.fields])
-    raw = (spark.readStream.format("parquet").schema(schema)
-           .option("pathGlobFilter", "events.parquet").load(sf_dir))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return (spark.readStream.format("parquet").schema(schema)
+            .option("pathGlobFilter", "events.parquet").load(sf_dir)
+            .withColumn("ts", ts))
 
 
 def windowed_event_agg(events: DataFrame, window: str = "1 hour",
