@@ -27,6 +27,24 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED plan, results identical: ann.ivf_search_materialized
+    # scores the probed cells in the driver and returns a VALUES
+    # LocalRelation (optimized plans diffed for all 276 keys; only
+    # ann_ivf's plan text moved).
+    "ann_ivf",
+    # CHANGED closure only, plan text byte-identical: the bit-exact
+    # fold and its list-to-matrix layout moved from functions/kernels.py
+    # to functions/fold.py, and ann.py gained the driver search, which
+    # moves the source-closure digests (PYSRC lines, stream sources and
+    # index-leaf digests) of every key that reaches either module.
+    "ann_index_occupancy", "ann_knn_join", "ann_lsh", "ann_recall_eval",
+    "dedup_cluster_examples", "dedup_components", "dedup_keep_best",
+    "dedup_pair_audit_sample", "dup_ngram_fraction", "embed_quantize",
+    "embedding_near_dup", "ivfpq_recall_eval", "ivfpq_topk",
+    "minhash_dedup", "minhash_refresh", "near_dup_cluster_stats",
+    "near_dup_cross_source", "pq_adc_topk", "pq_encode_error",
+    "quantization_error", "semdedup", "sim_join", "simhash_dedup",
+    "simhash_hamming_dedup", "stream_minhash_probe",
     # CHANGED plan, results identical (optimized plans diffed for all
     # 276 keys): ann.ivf_knn_join_materialized picks its probes with
     # vector.py's SQL fold (queries x cells) instead of the Arrow pair

@@ -1,7 +1,11 @@
-"""ANN property tests: determinism, candidate pruning, recall vs exact KNN."""
+"""ANN property tests: determinism, candidate pruning, recall vs exact KNN,
+and the IVF search served in the driver against its Spark plan."""
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 import pytest
 
 from tests.conftest import SF_CORRECTNESS, SF_SMOKE
@@ -75,11 +79,17 @@ def test_zero_norm_ranks_last_in_knn_topk(spark):
                      .select("vec_id", "distance_score").collect())
 
 
-def test_zero_norm_ranks_last_in_ivf_search(spark, tmp_path):
+def test_zero_norm_ranks_last_in_ivf_search(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "ivf")
     ANN.materialize_ivf_index(_zero_corpus(spark), path, n_cells=2)
-    _check_zero_norm(lambda q, k: ANN.ivf_search_materialized(
-        spark, path, q, k=k, n_cells=2, nprobe=2).collect())
+
+    def search(q, k):
+        served, planned = _both_paths(monkeypatch, lambda: ANN.ivf_search_materialized(
+            spark, path, q, k=k, n_cells=2, nprobe=2))
+        assert served == planned
+        return served
+
+    _check_zero_norm(search)
 
 
 def test_zero_norm_ranks_last_in_lsh_search(spark, tmp_path):
@@ -117,3 +127,111 @@ def test_zero_vector_ranks_last_in_registry_keys(spark, tmp_path, key):
     df = registry.QUERIES[key](spark, str(tmp_path))
     ok, msg = compare(df, duck_connection(str(tmp_path)), registry.ORACLES[key])
     assert ok, f"{key}: {msg}"
+
+
+# The IVF search is served in the driver while its probed files fit the
+# byte budget; with the budget at 0 it runs as the Spark plan. Both must
+# return the same rows and schema.
+
+
+def _served_in_driver(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _both_paths(monkeypatch, search):
+    """The rows of ``search()`` served in the driver and as the Spark
+    plan, after checking which path each took and that their schemas
+    are equal."""
+    served = search()
+    with monkeypatch.context() as m:
+        m.setattr(ANN, "_DRIVER_SCAN_BYTES", 0)
+        planned = search()
+    assert _served_in_driver(served) and not _served_in_driver(planned)
+    assert served.schema == planned.schema
+    return served.collect(), planned.collect()
+
+
+def _materialize(spark, rows, path, n_cells,
+                 schema="vec_id bigint, embedding array<double>"):
+    ANN.materialize_ivf_index(spark.createDataFrame(rows, schema), path,
+                              n_cells=n_cells)
+
+
+@pytest.fixture(scope="module")
+def clustered_ivf(spark, tmp_path_factory):
+    """(vectors, index path): 2,000 x 64 float vectors in 8 clusters,
+    indexed in 16 cells."""
+    rng = np.random.default_rng(7)
+    centers = rng.standard_normal((8, 64))
+    vecs = (centers[rng.integers(8, size=2000)]
+            + 0.3 * rng.standard_normal((2000, 64))).astype(np.float32)
+    path = str(tmp_path_factory.mktemp("clustered") / "ivf")
+    _materialize(spark, [(i, v.tolist()) for i, v in enumerate(vecs)], path, 16,
+                 "vec_id bigint, embedding array<float>")
+    return vecs, path
+
+
+def test_ivf_driver_search_equals_spark_plan(spark, clustered_ivf, monkeypatch):
+    vecs, path = clustered_ivf
+    rng = np.random.default_rng(8)
+    for i in rng.choice(len(vecs), 40, replace=False):
+        q = (vecs[i] + 0.1 * rng.standard_normal(vecs.shape[1])).tolist()
+        served, planned = _both_paths(monkeypatch, lambda: ANN.ivf_search_materialized(
+            spark, path, q, k=10, n_cells=16, nprobe=2))
+        assert served == planned and len(served) == 10
+
+
+def test_ivf_search_ranks_undefined_distances_last(spark, tmp_path, monkeypatch):
+    """A NULL embedding, a NULL element and a length other than the
+    query's have no SQL fold, so no distance: both paths give NULL and
+    rank them last, by id. A k past the candidate count returns every
+    candidate."""
+    bad = [(5, None), (6, [1.0, None, 0.0, 0.0]), (7, [1.0, 0.0, 0.0]),
+           (8, [1.0, 0.0, 0.0, 0.0, 0.0])]
+    path = str(tmp_path / "ivf")
+    _materialize(spark, _ROWS + bad, path, 2)
+    served, planned = _both_paths(monkeypatch, lambda: ANN.ivf_search_materialized(
+        spark, path, _Q, k=len(_ROWS) + len(bad) + 3, n_cells=2, nprobe=2))
+    assert served == planned
+    assert [r.vec_id for r in served] == _NONZERO_ORDER + [_ZERO_ID, 5, 6, 7, 8]
+    assert [r.distance_score for r in served[-5:]] == [None] * 5
+
+
+def test_ivf_search_with_an_empty_probed_cell(spark, tmp_path, monkeypatch):
+    """Centroid 1 points the way centroid 0 does, so every tie for the
+    nearest cell goes to cell 0 and cell 1 stays empty; the query
+    probes both. Rows 0 and 1 have equal distances and rank by id."""
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [2.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]),
+            (3, [0.9, 0.1, 0.0]), (4, [0.1, 0.9, 0.0]), (5, [1.0, 0.5, 0.0])]
+    path = str(tmp_path / "ivf")
+    _materialize(spark, rows, path, 3)
+    assert not os.path.exists(os.path.join(path, "cid=1"))
+    served, planned = _both_paths(monkeypatch, lambda: ANN.ivf_search_materialized(
+        spark, path, [1.0, 0.2, 0.0], k=10, n_cells=3, nprobe=2))
+    assert served == planned
+    assert [(r.vec_id, r.cid) for r in served] == [(3, 0), (0, 0), (1, 0), (5, 0)]
+
+
+def test_ivf_search_breaks_distance_ties_by_id(spark, tmp_path, monkeypatch):
+    """Vectors a power-of-two scale apart have bit-equal cosine
+    distances to any query; both paths rank them by id, and keep an
+    int id column's type."""
+    base = [0.3, -0.2, 0.5, 0.1]
+    rows = ([(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
+             (5, [0.0, 0.0, 1.0, 0.0])]
+            + [(i, [s * x for x in base])
+               for i, s in [(9, 1.0), (4, 2.0), (7, 0.5), (12, 4.0)]])
+    path = str(tmp_path / "ivf")
+    _materialize(spark, rows, path, 2, "vec_id int, embedding array<double>")
+    served, planned = _both_paths(monkeypatch, lambda: ANN.ivf_search_materialized(
+        spark, path, [0.3, -0.1, 0.5, 0.2], k=3, n_cells=2, nprobe=2))
+    assert served == planned
+    assert [r.vec_id for r in served] == [4, 7, 9]
+    assert len({r.distance_score for r in served}) == 1
+
+
+def test_ivf_search_needs_a_filesystem_pyarrow_resolves():
+    """A scheme pyarrow has no filesystem for sends the search to the
+    Spark plan."""
+    assert ANN._probed_cells("s3a://bucket/ivf", [0, 1]) is None

@@ -144,10 +144,18 @@ def test_ann_lsh_search_is_partition_pruned(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_ann_ivf_search_is_partition_pruned(spark):
-    """IVF probes are chosen driver-side from the centroid set; the cid
-    IN-filter must prune the cid-partitioned index statically."""
+def test_ann_ivf_search_is_partition_pruned(spark, monkeypatch):
+    """IVF probes are chosen driver-side from the centroid set. The
+    request is served in the driver, a LocalTableScan with no Spark job;
+    past the probed-byte budget (here forced to 0) it runs as the Spark
+    plan, whose cid IN-filter must prune the cid-partitioned index
+    statically."""
     import re
+
+    from tripgogo_vector_search_spark.operators import ann as ANN
+    served = plan_of(QUERIES["ann_ivf"](spark, SF_CORRECTNESS))
+    assert "LocalTableScan" in served and "FileScan" not in served
+    monkeypatch.setattr(ANN, "_DRIVER_SCAN_BYTES", 0)
     plan = plan_of(QUERIES["ann_ivf"](spark, SF_CORRECTNESS))
     assert re.search(r"PartitionFilters: \[cid#\d+ IN \(\d+,\d+\)\]", plan)
     assert "TakeOrderedAndProject" in plan

@@ -1,12 +1,14 @@
 """No Spark job before the action on the online search path.
 
-1. Building the exact request (``load_table`` -> ``knn_topk``) and an
-   IVF request against an opened index starts no Spark job: tables are
-   read with their declared schemas, and ``ann.open_ivf`` keeps the
-   centroids and schemas of an index in a bounded memo.
+1. Building the exact request (``load_table`` -> ``knn_topk``) starts
+   no Spark job: tables are read with their declared schemas. An IVF
+   request against an opened index starts none at all, from build to
+   ``collect``: ``ann.open_ivf`` keeps the centroids and schemas of an
+   index in a bounded memo, and the probed cells are scored in the
+   driver.
 2. The memo never serves a stale index: a rewrite at the same path
    changes the `_centroids` listing token, so the next search answers
-   from the new index.
+   from the new index; the probed cells are listed on every request.
 3. The declared schemas equal what Spark infers from every fixture.
    `events` takes its schema from one footer probe, in either `ts`
    form, and its batch and streaming readers start no job.
@@ -40,7 +42,7 @@ N_CELLS = 4
 
 
 def _build_jobs(spark, build):
-    """(DataFrame, number of Spark jobs ``build`` started)."""
+    """(what ``build`` returns, number of Spark jobs it started)."""
     sc = spark.sparkContext
     group = f"build-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "build phase")
@@ -95,13 +97,20 @@ def ivf(spark, tmp_path_factory):
 
 
 def test_ivf_search_starts_no_job_before_action(spark, ivf):
+    """Nor during the plan or the action: the whole request is served
+    in the driver."""
     vecs, path = ivf
     ANN.open_ivf(spark, path)  # a memo hit: materializing opened it
     q = [float(x) for x in _corpus(2, n=1)[0]]
-    df, jobs = _build_jobs(
-        spark, lambda: ANN.ivf_search_materialized(spark, path, q, k=5, nprobe=2))
+
+    def request():
+        df = ANN.ivf_search_materialized(spark, path, q, k=5, nprobe=2)
+        df._jdf.queryExecution().executedPlan()
+        return df.collect()
+
+    rows, jobs = _build_jobs(spark, request)
     assert jobs == 0
-    got = [(r.vec_id, r.distance_score, r.cid) for r in df.collect()]
+    got = [(r.vec_id, r.distance_score, r.cid) for r in rows]
     assert got == _probed_topk(vecs, q, 5, 2)
 
 

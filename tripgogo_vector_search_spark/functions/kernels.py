@@ -16,7 +16,7 @@ single space, empty for docs shorter than ``n`` words.
 Vector pairs: :func:`pair_cosine` and :func:`pair_dot` score two list
 columns row by row. Their spec is the SQL fold of ``functions/vector.py``
 (``aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D, (x, y) -> x + y)``,
-three folds and ``try_divide`` for a cosine): :func:`fold` adds
+three folds and ``try_divide`` for a cosine): ``fold.fold`` adds
 ``a[j] * b[j]`` dimension by dimension in element order, the same IEEE
 operations on the same doubles, so every result is bit-identical. The
 SQL fold is ``CodegenFallback`` (~21 us of executor CPU per 64-dim fold);
@@ -24,8 +24,11 @@ the kernel does ~dim numpy passes per block of rows.
 
 Scale: scalar pandas/arrow UDFs => per-partition Arrow batches,
 embarrassingly parallel, no shuffle, no driver involvement. This module
-imports pandas, which costs the driver ~37 MB of RSS, so modules on the
-online request path import it inside the function that needs it.
+imports pandas. A PySpark 4.1 session already has pandas loaded (a
+4-vCPU host read 111-113 MB of driver RSS after ``get_spark``), and
+importing this module after that added about 1 MB; the online request
+path still imports it only inside the batch join that uses it, and
+scores in the driver with ``functions/fold.py``, which loads no pandas.
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
+from .fold import fold, matrix
 from .vector import ColumnOrName, _c
 
 _HEX_HIGH = set("89abcdef")
@@ -261,41 +265,6 @@ def dup_ngram_fraction_udf(text_col: ColumnOrName, n: int) -> Column:
     return _frac(_c(text_col))
 
 
-def fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """``sum_j a[j] * b[j]`` added in element order from 0.0 — the SQL
-    fold's evaluation order, term for term (numpy does not fuse the
-    multiply-add). ``a``/``b`` are ``(dim, ...)`` and broadcast."""
-    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
-    with np.errstate(over="ignore", invalid="ignore"):
-        for x, y in zip(a, b):
-            acc += x * y
-    return acc
-
-
-def _matrix(lists: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """A list column as an ``(n, dim)`` float64 matrix, zero-padded past
-    each row's length; and each row's length, -1 for a NULL list or one
-    holding a NULL element. A zero pad adds 0.0 to the fold, which
-    leaves every double unchanged."""
-    n = len(lists)
-    lens = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
-    ends = np.cumsum(lens)
-    flat = lists.flatten()
-    vals = flat.cast(pa.float64())
-    vals = (pc.fill_null(vals, 0.0) if flat.null_count else vals).to_numpy()
-    if n and (lens == dim).all():
-        m = vals.reshape(n, dim)
-    else:
-        m = np.zeros((n, dim))
-        m[np.repeat(np.arange(n), lens),
-          np.arange(len(vals)) - np.repeat(ends - lens, lens)] = vals
-    bad = lists.is_null().to_numpy(zero_copy_only=False)
-    if flat.null_count:
-        nulls = np.flatnonzero(flat.is_null().to_numpy(zero_copy_only=False))
-        bad = bad | np.isin(np.arange(n), np.searchsorted(ends, nulls, side="right"))
-    return m, np.where(bad, -1, lens)
-
-
 # rows per fold block: a (dim, block) double slice stays in cache. On a
 # 4-vCPU host a 10,000 x 64 float x double batch took 16 ms with the
 # whole batch transposed at once, 6 ms in 1,024-row blocks
@@ -309,7 +278,7 @@ def _pair_folds(a: pa.Array, b: pa.Array, norms: bool):
     list with NULL, which makes the SQL sum NULL)."""
     dim = max(pc.max(pc.list_value_length(a)).as_py() or 0,
               pc.max(pc.list_value_length(b)).as_py() or 0)
-    (ma, la), (mb, lb) = _matrix(a, dim), _matrix(b, dim)
+    (ma, la), (mb, lb) = matrix(a, dim), matrix(b, dim)
     out = np.empty((3 if norms else 1, len(a)))
     for s in range(0, len(a), _BLOCK):
         rows = slice(s, s + _BLOCK)

@@ -10,10 +10,12 @@ AS ARRAY<DOUBLE>)`` with the norm folded in Python; computed Columns, bound
 once as ``x_0`` of ``transform(array(<col>), x_0 -> …)[0]``. Lambdas take
 ``x_<depth>``/``y_<depth>``; sums are sequential left-to-right double folds.
 
-This fold is the spec of the Arrow pair kernel (``kernels.pair_cosine`` /
-``pair_dot``), which the batch pair joins use for column x column scores.
-Single-query scans (``knn_topk``, the IVF/LSH searches, store searches)
-and ``ann.build_ivf_index`` keep the SQL fold: a request pays the Python
+This fold is the spec of ``functions/fold.py``, its numpy form, which the
+Arrow pair kernel (``kernels.pair_cosine`` / ``pair_dot``) runs for the
+batch pair joins' column x column scores, and the IVF search runs in the
+driver over its probed cells. Single-query Spark scans (``knn_topk``, the
+LSH search, the IVF search's Spark plan, store searches) and
+``ann.build_ivf_index`` keep the SQL fold: a request pays the Python
 worker round trip once per task, which outweighs the per-row saving (3
 cores, medians: exact top-k over 6,000 rows 193 -> 265 ms, an IVF search
 124 -> 310 ms), and the index build would start Python workers during

@@ -19,7 +19,13 @@ buckets instead of scanning the corpus.
 
 Each operator has one implementation: one LSH and one IVF build, the
 searches over their materialized indexes, and the IVF batch join. The
-single-query searches end in :func:`knn.knn_topk`'s exact top-k.
+LSH search ends in :func:`knn.knn_topk`'s exact top-k. The IVF search
+is served in the driver with no Spark job: it reads the probed cells'
+files with pyarrow and scores them with ``functions/fold.py``, the
+fold the batch join's pair kernel runs. It runs as knn_topk's Spark
+plan only when pyarrow cannot resolve the index's filesystem or the
+probed files exceed ``_DRIVER_SCAN_BYTES``, which bounds the driver's
+memory at any index size.
 
 Hyperplanes are generated from a fixed closed-form (sin-based) sequence
 rounded to 6 dp, so the exact same literals are embeddable in oracle SQL.
@@ -35,10 +41,16 @@ from collections import OrderedDict
 from collections.abc import Sequence
 from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.vector import cosine_distance, dot, l2_norm
+from ..functions.fold import fold, matrix
+from ..functions.vector import _double, cosine_distance, dot, l2_norm
 from .knn import knn_topk
 
 DEFAULT_PLANES = 8
@@ -136,6 +148,7 @@ def materialize_ivf_index(corpus: DataFrame, path: str,
 class IvfHandle(NamedTuple):
     """A materialized IVF index as its readers see it before their
     action: read once per index version by :func:`open_ivf`."""
+    root: str                                 # the qualified index path
     token: str                                # `_centroids` listing
     centroids: list[tuple[int, list[float]]]  # (cid, cvec)
     schema: StructType                        # the index, cid inferred int
@@ -182,7 +195,7 @@ def open_ivf(spark, path: str) -> IvfHandle:
     files = tuple(f for f in paths.split("\n")
                   if not os.path.basename(f).startswith(("_", ".")))
     cents = spark.read.parquet(*files)
-    h = IvfHandle(token, [(r.cid, list(r.cvec)) for r in cents.collect()],
+    h = IvfHandle(key, token, [(r.cid, list(r.cvec)) for r in cents.collect()],
                   spark.read.parquet(path).schema, cents.schema, files)
     with _IVF_LOCK:
         _IVF_HANDLES[key] = h
@@ -192,25 +205,119 @@ def open_ivf(spark, path: str) -> IvfHandle:
     return h
 
 
+# The most parquet bytes of probed cells that one search reads into the
+# driver; a larger probe runs as the Spark plan, so the driver's memory
+# stays bounded whatever the size of the index.
+_DRIVER_SCAN_BYTES = 64 << 20
+
+
 def ivf_search_materialized(spark, path: str,
                             query_vec: Sequence[float], k: int = 3,
                             vec_col: str = "embedding", id_col: str = "vec_id",
                             n_cells: int = 16, nprobe: int = 2) -> DataFrame:
     """Probe selection runs driver-side over the centroids of the
     :func:`open_ivf` handle (same float-op order as the SQL expression,
-    so ordering ties break identically), then the cid `isin` filter
-    prunes the partitioned index statically — no job touches the
-    unprobed cells. The index is read with the handle's schema, so no
-    Spark job starts before the action once the handle is open."""
+    so ordering ties break identically). The probed ``cid=N`` cells are
+    then listed with ``pyarrow.fs`` on every request, so an index
+    rewritten at the same path is read fresh.
+
+    The request is served in the driver, with no Spark job: the probed
+    files' id and vector columns are read with ``pyarrow.parquet``,
+    scored with the bit-exact fold of ``functions/fold.py`` and ranked
+    as :func:`knn.knn_topk` ranks (distance ascending, NaN after +inf,
+    NULL last, then id). The top k become one typed ``VALUES`` text
+    under Spark's own ``round(distance_score, 6)``, a LocalRelation
+    that ``collect`` answers without a job. The request runs as the
+    Spark plan instead — a cid ``isin`` filter that prunes the
+    partitioned index statically, read with the handle's schema, so no
+    job starts before the action — when pyarrow cannot resolve the
+    index's filesystem or the probed files add up to more than
+    ``_DRIVER_SCAN_BYTES``. Both paths return the same rows and schema.
+    """
     h = open_ivf(spark, path)
     order = sorted(h.centroids, key=lambda c: (_cos_dist(c[1], query_vec), c[0]))
     probes = [cid for cid, _ in order[:nprobe]]
+    cells = _probed_cells(h.root, probes)
+    if cells is not None:
+        return _driver_topk(spark, cells, query_vec, k, vec_col, id_col,
+                            h.schema[id_col].dataType.simpleString())
     cand = spark.read.schema(h.schema).parquet(path).filter(F.col("cid").isin(probes))
     return (knn_topk(cand, query_vec, k, vec_col, tiebreak=id_col)
             # partition-column type inference reads cid back as int;
             # restore the builder's bigint so the result schema is stable
             .selectExpr(f"`{id_col}`", "CAST(cid AS BIGINT) AS cid",
                         "round(distance_score, 6) AS distance_score"))
+
+
+def _probed_cells(root: str, probes: list[int]):
+    """``(filesystem, [(cid, file path)])`` of the probed cells' data
+    files, or None when pyarrow cannot resolve the filesystem of
+    ``root`` or the files add up to more than ``_DRIVER_SCAN_BYTES``. A
+    probed cell that holds no vector has no directory and no file."""
+    try:
+        fs, base = pafs.FileSystem.from_uri(root)
+    except (pa.ArrowException, OSError):
+        return None
+    files = [(cid, f) for cid in probes
+             for f in fs.get_file_info(pafs.FileSelector(
+                 f"{base}/cid={cid}", allow_not_found=True))
+             if f.is_file and not f.base_name.startswith(("_", "."))]
+    if sum(f.size for _, f in files) > _DRIVER_SCAN_BYTES:
+        return None
+    return fs, [(cid, f.path) for cid, f in files]
+
+
+def _driver_topk(spark, cells, query_vec: Sequence[float], k: int,
+                 vec_col: str, id_col: str, id_type: str) -> DataFrame:
+    """The exact top-k of the probed cells' files as a LocalRelation,
+    scored in the driver bit for bit as vector.py's ``cosine_distance``
+    scores them: NULL for a NULL vector or element, a length other than
+    the query's, or a zero norm product."""
+    top = _score_files(*cells, query_vec, k, vec_col, id_col)
+    rows = "".join(f"({_literal(i)}, {c}, {_literal(d)}), " for i, c, d in top)
+    # the trailing NULL row, cut by the LIMIT, makes every column
+    # nullable, as the parquet read's columns are
+    return spark.sql(
+        f"SELECT CAST(i AS {id_type}) AS `{id_col}`, CAST(c AS BIGINT) AS cid, "
+        f"round(CAST(d AS DOUBLE), 6) AS distance_score "
+        f"FROM VALUES {rows}(NULL, NULL, NULL) AS t(i, c, d) LIMIT {len(top)}")
+
+
+def _score_files(fs, files, query_vec, k, vec_col, id_col) -> list[tuple]:
+    """``(id, cid, distance)`` of the top k rows of ``files``, ordered as
+    :func:`knn.knn_topk` orders them."""
+    parts = [pq.ParquetFile(f, filesystem=fs).read(columns=[id_col, vec_col])
+             for _, f in files]
+    if not parts:
+        return []
+    tbl = pa.concat_tables(parts)
+    ids, vecs = (tbl.column(c).combine_chunks() for c in (id_col, vec_col))
+    cids = np.repeat([c for c, _ in files], [t.num_rows for t in parts])
+    q = np.array([float(x) for x in query_vec])
+    width = max(len(q), pc.max(pc.list_value_length(vecs)).as_py() or 0)
+    m, lens = matrix(vecs, width)
+    x = m[:, :len(q)].T.copy()
+    with np.errstate(divide="ignore", invalid="ignore"):
+        den = np.sqrt(fold(x, x)) * np.sqrt(fold(q, q))
+        dist = 1.0 - fold(x, q[:, None]) / den
+    null = (lens != len(q)) | (den == 0)
+    id_rank = pc.rank(ids, null_placement="at_start").to_numpy()
+    top = np.lexsort((id_rank, np.where(null, 0.0, dist), null))[:k]
+    return [(i, c, None if n else d) for i, c, d, n in
+            zip(ids.take(top).to_pylist(), cids[top].tolist(),
+                dist[top].tolist(), null[top].tolist())]
+
+
+def _literal(v) -> str:
+    """A driver value as SQL text that casts back to its column's type:
+    a string as its UTF-8 bytes, a double exactly, else its text."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return f"X'{v.encode().hex()}'"
+    if isinstance(v, float):
+        return _double(v)
+    return f"'{v}'"
 
 
 def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
@@ -238,8 +345,10 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     plan's one Python stage. Both are bit-exact to the same fold, so
     the probes are the same either way.
     """
-    # imported here: the kernel module loads pandas, which the online
-    # search path keeps out of the driver
+    # imported here: the kernel module loads pandas. A Spark session has
+    # already loaded it, and importing the module after that added about
+    # 1 MB of driver RSS on a 4-vCPU host; the online modules still load
+    # no pandas on import
     from ..functions.kernels import pair_cosine
 
     h = open_ivf(spark, path)

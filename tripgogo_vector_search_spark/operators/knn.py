@@ -14,6 +14,10 @@ is one scan + k rows per partition over the wire.
 The distance is vector.py's SQL fold, not the Arrow pair kernel the batch
 joins use: one query pays the Python worker round trip per task, and that
 made an exact top-k over 6,000 rows slower (193 -> 265 ms median, 3 cores).
+The exact request, the LSH search and the IVF search's Spark plan run
+this top-k. The IVF search is otherwise served in the driver
+(``ann.ivf_search_materialized``): it scores its probed cells with
+``functions/fold.py``, the same fold in numpy, and starts no Spark job.
 """
 
 from __future__ import annotations

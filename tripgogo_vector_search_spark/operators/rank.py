@@ -143,26 +143,16 @@ def _clamped_width_bucket(t, lo, hi, B: int):
 _GRID_SHIFT = 747
 
 
-def with_bucket_id(df: DataFrame, value_col: str, *, descending: bool = False,
-                   partition_cols: Sequence[str] = (),
-                   num_buckets: int | None = None,
-                   bucket_col: str = "_bkt",
-                   fine_cells: int = 1024) -> tuple[DataFrame, DataFrame]:
-    """``df`` plus a deterministic bucket id that is monotone in
-    ``value_col`` (reversed when ``descending``) within each group of
-    ``partition_cols``: a fixed two-level signed-log grid plus a capped
-    row-side min/max-snapped split (module docstring). Equal values
-    always share a bucket.
-
-    Returns ``(frame, counts)`` where ``counts`` is the bounded
-    per-(group, bucket) row-count frame ``(*group, bucket_col, _cnt)``,
-    from which a cumulative window over the counts derives rank
-    offsets. The row frame carries no helper columns beyond
-    ``bucket_col``."""
-    spark = df.sparkSession
-    g = list(partition_cols)
-    B = num_buckets or shuffle_width(spark)  # host-independent grid literal
-    K = fine_cells
+def _grid(df: DataFrame, value_col: str, descending: bool, g: list[str],
+          B: int, K: int):
+    """The two-level signed-log grid that :func:`with_bucket_id` and
+    :func:`with_global_rank` both run: ``(t, d, s2, plan)`` — the
+    grid's value key ``t``; the rows ``d`` with their e-fold cell
+    ``_c1`` and fine cell ``_c2``; the per-(group, fine cell) stats
+    ``s2`` (``_cnt``, ``_m``, ``_x``, the group's fair-share ``_cap``
+    and the e-fold cell's ``_cnt1``); and the bucket ``plan``: the
+    fine cells of over-cap e-fold cells, ``_split`` marking those
+    that need the row-side min/max snap."""
     t = _log_key(value_col, descending)
     # both grid levels are pure per-row expressions — no data pass, so
     # no outlier can influence any other row's cell. frac(t) is NOT
@@ -199,6 +189,30 @@ def with_bucket_id(df: DataFrame, value_col: str, *, descending: bool = False,
             .withColumn("_split", (F.col("_cnt") > F.col("_cap"))
                         & (F.col("_m") < F.col("_x")))
             .select(*g, "_c1", "_c2", "_split", "_m", "_x"))
+    return t, d, s2, plan
+
+
+def with_bucket_id(df: DataFrame, value_col: str, *, descending: bool = False,
+                   partition_cols: Sequence[str] = (),
+                   num_buckets: int | None = None,
+                   bucket_col: str = "_bkt",
+                   fine_cells: int = 1024) -> tuple[DataFrame, DataFrame]:
+    """``df`` plus a deterministic bucket id that is monotone in
+    ``value_col`` (reversed when ``descending``) within each group of
+    ``partition_cols``: a fixed two-level signed-log grid plus a capped
+    row-side min/max-snapped split (module docstring). Equal values
+    always share a bucket.
+
+    Returns ``(frame, counts)`` where ``counts`` is the bounded
+    per-(group, bucket) row-count frame ``(*group, bucket_col, _cnt)``,
+    from which a cumulative window over the counts derives rank
+    offsets. The row frame carries no helper columns beyond
+    ``bucket_col``."""
+    spark = df.sparkSession
+    g = list(partition_cols)
+    B = num_buckets or shuffle_width(spark)  # host-independent grid literal
+    K = fine_cells
+    t, d, s2, plan = _grid(df, value_col, descending, g, B, K)
     r = d.join(F.broadcast(plan), [*g, "_c1", "_c2"], "left")
     # a LEFT-join miss <=> the row's e-fold cell is under the cap
     # (every occupied fine cell of a fat e-fold cell has a plan row —
@@ -277,25 +291,8 @@ def with_global_rank(df: DataFrame, value_col: str,
     g = list(partition_cols)
     B = num_buckets or shuffle_width(spark)  # host-independent grid literal
     K = fine_cells
-    t = _log_key(value_col, descending)
-    d = (df.withColumn("_c1", (F.floor(t) + _GRID_SHIFT).cast("int"))
-         .withColumn("_c2", F.least(F.floor((t - F.floor(t)) * K),
-                                    F.lit(K - 1)).cast("int")))
-    s = (d.groupBy(*g, "_c1", "_c2")
-         .agg(F.count(F.lit(1)).alias("_cnt"),
-              F.min(t).alias("_m"), F.max(t).alias("_x")))
-    wg = ((W.partitionBy(*g) if g else W.partitionBy())
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-    w1 = (W.partitionBy(*g, "_c1")
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-    cap = F.greatest(F.ceil(F.sum("_cnt").over(wg) / B), F.lit(B))
-    s2 = (s.withColumn("_cap", cap)
-          .withColumn("_cnt1", F.sum("_cnt").over(w1)))
+    t, d, s2, plan = _grid(df, value_col, descending, g, B, K)
     fat = F.col("_cnt1") > F.col("_cap")
-    plan = (s2.filter(fat)
-            .withColumn("_split", (F.col("_cnt") > F.col("_cap"))
-                        & (F.col("_m") < F.col("_x")))
-            .select(*g, "_c1", "_c2", "_split", "_m", "_x"))
     # CELL-level base bucket rows and offsets, from the stats frame
     # ALONE (no probe in this branch's lineage): thin e-fold cells
     # merge into the e-fold bucket, fat cells keep their fine slot; a

@@ -14,7 +14,7 @@ corpus-id tiebreak) and differ in how they score:
   6 dp before ranking. vbench's batch join and knn_label_accuracy use
   it.
 * :func:`similarity_join_gemm_exact` — the same batch scoring with the
-  bit-exact fold (``kernels.fold``). It serves ``sim_join``.
+  bit-exact fold (``fold.fold``). It serves ``sim_join``.
 
 The two GEMM joins share one body (:func:`_gemm_join`): query collect,
 partition-local top-k and the global rank window. For query sets too
@@ -87,7 +87,7 @@ def _fold_scores(Q):
     per dimension (see :func:`similarity_join_gemm_exact`)."""
     import numpy as np
 
-    from ..functions.kernels import fold
+    from ..functions.fold import fold
 
     Qt = Q.T  # (dim, n): row j holds dimension j of every query
     qnorm = np.sqrt(fold(Qt, Qt))
@@ -223,7 +223,7 @@ def similarity_join_gemm_exact(corpus: DataFrame, queries: DataFrame,
     ``list_reduce`` fold. Where the BLAS variant must round to 6 dp
     before ranking (matrix-multiply accumulation order differs by
     ~1 ulp), this kernel accumulates DIMENSION BY DIMENSION in declared
-    order (``functions/kernels.fold``, likewise the squared norms),
+    order (``functions/fold.fold``, likewise the squared norms),
     which is term-for-term the IEEE evaluation order of
     ``aggregate(zip_with(...))`` — numpy's elementwise ufuncs do not
     fuse multiply-add, and neither does Catalyst codegen, so every
