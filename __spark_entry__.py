@@ -27,6 +27,17 @@ SF0001 = "/root/testdata/sf0.001"
 # Everything else (already driver-verified, unchanged) follows in
 # registration order.
 _CHECK_FIRST = [
+    # CHANGED plan, results identical (optimized plans diffed for all
+    # 276 keys; rows compared at sf0.01): the registry keeps one IVF
+    # index per corpus, (vec_id, codes, embedding) plus cid, read
+    # through ann.open_ivf. Its relation gains `codes`, pruned by a
+    # Project: ann_knn_join, ann_recall_eval. Batch probes come from
+    # ann.nearest_cells_batch (cdist/prn column names):
+    # ivfpq_recall_eval. INDEXES line only (leaf ivfpq_index ->
+    # ann_ivf_index): ann_ivf, ivfpq_topk, pq_adc_topk,
+    # pq_encode_error, semdedup.
+    "ann_knn_join", "ann_recall_eval", "ivfpq_recall_eval", "ann_ivf",
+    "ivfpq_topk", "pq_adc_topk", "pq_encode_error", "semdedup",
     # CHANGED plan, results identical: ann.ivf_search_materialized
     # scores the probed cells in the driver and returns a VALUES
     # LocalRelation (optimized plans diffed for all 276 keys; only

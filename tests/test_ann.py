@@ -235,3 +235,46 @@ def test_ivf_search_needs_a_filesystem_pyarrow_resolves():
     """A scheme pyarrow has no filesystem for sends the search to the
     Spark plan."""
     assert ANN._probed_cells("s3a://bucket/ivf", [0, 1]) is None
+
+
+def test_ivf_index_is_the_corpus_plus_cid(spark, tmp_path):
+    """The index keeps every column of the frame it is built from, in
+    order, with `cid` last; the `_centroids` sidecar is the (cid, cvec)
+    of the ids below n_cells, as before."""
+    rows = [(i, f"t{i}", [float(i % 3), 1.0, float(i)], i * 10)
+            for i in range(12)]
+    corpus = spark.createDataFrame(
+        rows, "vec_id bigint, tag string, embedding array<double>, label int")
+    path = str(tmp_path / "ivf")
+    ANN.materialize_ivf_index(corpus, path, n_cells=4)
+    h = ANN.open_ivf(spark, path)
+    assert h.schema.names == corpus.columns + ["cid"]
+    got = {r.vec_id: (r.tag, list(r.embedding), r.label)
+           for r in h.read(spark).collect()}
+    assert got == {i: (t, v, lab) for i, t, v, lab in rows}
+    cents = h.read_centroids(spark)
+    assert cents.schema.simpleString() == "struct<cid:bigint,cvec:array<double>>"
+    assert sorted((r.cid, list(r.cvec)) for r in cents.collect()) \
+        == [(i, v) for i, _, v, _ in rows[:4]]
+    assert sorted(h.centroids) == [(i, v) for i, _, v, _ in rows[:4]]
+
+
+def test_probe_rules_rank_a_zero_centroid_last(spark, tmp_path):
+    """Centroid 0 is the zero vector and the query points away from
+    centroids 1 and 2: their cosine distances exceed 1, yet the zero
+    centroid has none and ranks last. The single-query and batch probe
+    rules pick the same cells at every nprobe."""
+    rows = [(0, [0.0, 0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.9, 0.1, 0.0, 0.0]), (3, [-1.0, 0.2, 0.0, 0.0]),
+            (4, [0.5, 0.5, 0.0, 0.0]), (5, [-0.5, 0.1, 0.3, 0.0])]
+    q = [-1.0, 0.0, 0.0, 0.0]
+    path = str(tmp_path / "ivf")
+    _materialize(spark, rows, path, 4)
+    h = ANN.open_ivf(spark, path)
+    order = ANN.nearest_cells(h, q, 4)
+    assert order == [3, 2, 1, 0]
+    queries = spark.createDataFrame([(7, q)], "qid bigint, qvec array<double>")
+    for nprobe in range(1, 5):
+        batch = ANN.nearest_cells_batch(h, queries, nprobe).collect()
+        assert {r.qid for r in batch} == {7}
+        assert sorted(r.cid for r in batch) == sorted(order[:nprobe])

@@ -1659,10 +1659,11 @@ def test_index_compact_readback_is_plain_pruned_scan(spark):
 
 def test_pq_audits_consume_sidecars_not_retraining(spark):
     """VERDICT r11 caveat (b), pinned CLOSED: pq_encode_error and
-    pq_adc_topk read the materialized ivfpq sidecars — neither plan
-    contains the Lloyd-training subtree (no Window argmin over the
-    (vec_id, m) slicing key, no embeddings-table aggregate), and
-    pq_adc_topk's index scan reads (vec_id, codes) ONLY."""
+    pq_adc_topk read the materialized IVF index and its `_codebooks`
+    sidecar — neither plan contains the Lloyd-training subtree (no
+    Window argmin over the (vec_id, m) slicing key, no
+    embeddings-table aggregate), and pq_adc_topk's index scan reads
+    (vec_id, codes) ONLY."""
     import re
     enc = plan_of(QUERIES["pq_encode_error"](spark, SF_CORRECTNESS))
     adc = plan_of(QUERIES["pq_adc_topk"](spark, SF_CORRECTNESS))
@@ -1687,19 +1688,19 @@ def test_ccnet_buckets_reads_scores_sidecar(spark):
 
 
 def test_semdedup_reads_index_layout(spark):
-    """semdedup consumes the cid-partitioned ivfpq index (cluster
-    assignment is an index-build cost): no Window argmin, no
+    """semdedup consumes the corpus's one cid-partitioned IVF index
+    (cluster assignment is an index-build cost): no Window argmin, no
     embeddings-table scan — only the index and its centroid
     sidecar."""
     plan = plan_of(QUERIES["semdedup"](spark, SF_CORRECTNESS))
     assert "Window" not in plan and "row_number" not in plan
-    assert "ivfpq_index" in plan
+    assert "ann_ivf_index" in plan
     assert "embeddings.parquet" not in plan
 
 
 def test_ivfpq_recall_eval_adc_scan_projects_codes_not_vectors(spark):
     """The eval must exercise the DEPLOYED compressed pipeline: the
-    candidate scan over the materialized ivfpq index reads (vec_id,
+    candidate scan over the materialized IVF index reads (vec_id,
     codes, cid) only — pulling the embedding column there would be
     benchmarking a different (uncompressed) index. The raw embeddings
     table appears exactly where the pipeline uses it: brute-force
@@ -1708,11 +1709,11 @@ def test_ivfpq_recall_eval_adc_scan_projects_codes_not_vectors(spark):
     idx_stanzas = []
     for s in plan.split("Scan parquet"):
         loc = [ln for ln in s.splitlines() if "Location" in ln]
-        if loc and "ivfpq_index" in loc[0] \
+        if loc and "ann_ivf_index" in loc[0] \
                 and "_centroids" not in loc[0] \
                 and "_codebooks" not in loc[0]:
             idx_stanzas.append(s)
-    assert idx_stanzas, "no ivfpq index scan in the plan"
+    assert idx_stanzas, "no IVF index scan in the plan"
     for s in idx_stanzas:
         rs = [ln for ln in s.splitlines() if "ReadSchema" in ln]
         assert rs and "embedding" not in rs[0], rs

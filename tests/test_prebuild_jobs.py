@@ -14,6 +14,8 @@
    form, and its batch and streaming readers start no job.
 4. Checkpoint release and the RAG retry loop leave a trace where they
    should and none where they should not.
+5. The registry keys that read the corpus's IVF index start, on a warm
+   second build, only the jobs an allowlist gives a reason for.
 """
 
 from __future__ import annotations
@@ -163,6 +165,33 @@ def test_ivf_knn_join_builds_without_schema_jobs(spark, ivf):
     assert jobs == 0
     got = sorted((r.distance_score, r.vec_id, r.cid) for r in df.collect())
     assert [(v, d, c) for d, v, c in got] == _probed_topk(vecs, q, 5, 2)
+
+
+# Warm pre-action jobs of the registry keys that read an IVF index: the
+# index is on disk and its handle memoized, so each job left is one the
+# key's plan needs, {key: (count, why)}.
+_INDEX_KEY_JOBS = {
+    "ann_ivf": (0, "none: probes and cells are read in the driver"),
+    "ann_recall_eval": (1, "the eval-sample checkpoint"),
+    "ivfpq_topk": (1, "the codebook collect for the driver LUT"),
+    "pq_adc_topk": (1, "the codebook collect for the driver LUT"),
+    "pq_encode_error": (0, "none: index and codebooks read with their schemas"),
+    "semdedup": (4, "the centroid count and the occupancy-guard histogram, "
+                    "a shuffle-stage and a result job each"),
+    "ivfpq_recall_eval": (1, "the eval-sample checkpoint"),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_INDEX_KEY_JOBS))
+def test_index_key_build_jobs(spark, key):
+    """Building a registry key a second time starts only the jobs its
+    allowlist entry gives a reason for: no schema inference, no
+    centroid read of its own."""
+    from tripgogo_vector_search_spark.plans.registry import QUERIES
+    QUERIES[key](spark, SF)  # builds the index and opens its handle
+    _, jobs = _build_jobs(spark, lambda: QUERIES[key](spark, SF))
+    count, why = _INDEX_KEY_JOBS[key]
+    assert jobs == count, f"{key}: {jobs} jobs, allowed {count} ({why})"
 
 
 def test_rewritten_index_is_never_served_stale(spark, ivf, tmp_path):

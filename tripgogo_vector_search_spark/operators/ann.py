@@ -12,20 +12,21 @@ buckets instead of scanning the corpus.
   corpus bucketed/partitioned by `bucket` and a query becomes a
   partition-pruned scan of ~corpus/2^bits rows.
 * **IVF (inverted file)** — corpus assigned to nearest of `n_cells`
-  centroids; a query probes the `nprobe` nearest cells. Centroids here
-  are seed-sampled (first `n_cells` vectors) for full determinism.
-  Trained centroids are ROADMAP new direction 3: they would feed this
-  same build, and the search plans would not change.
+  centroids; a query probes the `nprobe` nearest cells. The index is
+  the corpus plus `cid` (a corpus with PQ codes is one index for IVF
+  and IVF-PQ). Centroids are :func:`first_id_centroids`, the one
+  function trained centroids (ROADMAP new direction 3) replace.
 
 Each operator has one implementation: one LSH and one IVF build, the
-searches over their materialized indexes, and the IVF batch join. The
+searches over their materialized indexes, and the IVF batch join. IVF
+readers open the index with :func:`open_ivf` and probe with
+:func:`nearest_cells` (one query) or :func:`nearest_cells_batch`. The
 LSH search ends in :func:`knn.knn_topk`'s exact top-k. The IVF search
 is served in the driver with no Spark job: it reads the probed cells'
-files with pyarrow and scores them with ``functions/fold.py``, the
-fold the batch join's pair kernel runs. It runs as knn_topk's Spark
-plan only when pyarrow cannot resolve the index's filesystem or the
-probed files exceed ``_DRIVER_SCAN_BYTES``, which bounds the driver's
-memory at any index size.
+files with pyarrow and scores them with ``functions/fold.py``. It runs
+as knn_topk's Spark plan only when pyarrow cannot resolve the index's
+filesystem or the probed files exceed ``_DRIVER_SCAN_BYTES``, which
+bounds the driver's memory at any index size.
 
 Hyperplanes are generated from a fixed closed-form (sin-based) sequence
 rounded to 6 dp, so the exact same literals are embeddable in oracle SQL.
@@ -128,8 +129,9 @@ def lsh_search_materialized(spark, path: str, query_vec: Sequence[float],
 def materialize_ivf_index(corpus: DataFrame, path: str,
                           vec_col: str = "embedding", id_col: str = "vec_id",
                           n_cells: int = 16) -> None:
-    """Write the IVF cell assignment to parquet **partitioned by cid**,
-    plus the (tiny) centroid table under `_centroids` inside the index
+    """Write the IVF index (:func:`build_ivf_index`: the corpus plus
+    its cell) to parquet **partitioned by cid**, plus the (tiny)
+    :func:`first_id_centroids` table under `_centroids` inside the index
     dir — underscore-prefixed, so index scans skip it. At query time
     `nprobe` cells are chosen driver-side from the centroids, so the
     candidate read is a statically partition-pruned scan of
@@ -138,9 +140,7 @@ def materialize_ivf_index(corpus: DataFrame, path: str,
     first search or join starts no Spark job before the action."""
     (build_ivf_index(corpus, vec_col, id_col, n_cells)
      .write.mode("overwrite").partitionBy("cid").parquet(path))
-    (corpus.filter(F.col(id_col) < n_cells)
-     .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-     .coalesce(1)
+    (first_id_centroids(corpus, vec_col, id_col, n_cells).coalesce(1)
      .write.mode("overwrite").parquet(os.path.join(path, "_centroids")))
     open_ivf(corpus.sparkSession, path)
 
@@ -154,6 +154,14 @@ class IvfHandle(NamedTuple):
     schema: StructType                        # the index, cid inferred int
     centroid_schema: StructType
     centroid_files: tuple[str, ...]
+
+    def read(self, spark) -> DataFrame:
+        """The index, read with its schema: no inference job."""
+        return spark.read.schema(self.schema).parquet(self.root)
+
+    def read_centroids(self, spark) -> DataFrame:
+        """The `_centroids` files, read with their schema."""
+        return spark.read.schema(self.centroid_schema).parquet(*self.centroid_files)
 
 
 _IVF_MEMO_SIZE = 8
@@ -205,6 +213,28 @@ def open_ivf(spark, path: str) -> IvfHandle:
     return h
 
 
+def nearest_cells(h: IvfHandle, query_vec: Sequence[float],
+                  nprobe: int) -> list[int]:
+    """The ``nprobe`` cells nearest ``query_vec``, ranked in the driver as
+    :func:`nearest_cells_batch` ranks: cosine distance (a zero norm
+    last), then cid."""
+    order = sorted(h.centroids, key=lambda c: (_cos_dist(c[1], query_vec), c[0]))
+    return [cid for cid, _ in order[:nprobe]]
+
+
+def nearest_cells_batch(h: IvfHandle, queries: DataFrame, nprobe: int,
+                        q_id: str = "qid", q_vec: str = "qvec") -> DataFrame:
+    """``(q_id, q_vec, cid)`` of each query's ``nprobe`` nearest cells:
+    the broadcast centroids ranked per query by cosine distance (NULL
+    last), then cid."""
+    qc = (queries.crossJoin(F.broadcast(h.read_centroids(queries.sparkSession)))
+          .withColumn("cdist", cosine_distance(q_vec, "cvec")))
+    wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc_nulls_last(), "cid")
+    return (qc.withColumn("prn", F.row_number().over(wq))
+            .filter(F.col("prn") <= nprobe)
+            .select(q_id, q_vec, "cid"))
+
+
 # The most parquet bytes of probed cells that one search reads into the
 # driver; a larger probe runs as the Spark plan, so the driver's memory
 # stays bounded whatever the size of the index.
@@ -215,10 +245,8 @@ def ivf_search_materialized(spark, path: str,
                             query_vec: Sequence[float], k: int = 3,
                             vec_col: str = "embedding", id_col: str = "vec_id",
                             n_cells: int = 16, nprobe: int = 2) -> DataFrame:
-    """Probe selection runs driver-side over the centroids of the
-    :func:`open_ivf` handle (same float-op order as the SQL expression,
-    so ordering ties break identically). The probed ``cid=N`` cells are
-    then listed with ``pyarrow.fs`` on every request, so an index
+    """Probes come from :func:`nearest_cells`. The probed ``cid=N``
+    cells are then listed with ``pyarrow.fs`` on every request, so an index
     rewritten at the same path is read fresh.
 
     The request is served in the driver, with no Spark job: the probed
@@ -235,13 +263,12 @@ def ivf_search_materialized(spark, path: str,
     ``_DRIVER_SCAN_BYTES``. Both paths return the same rows and schema.
     """
     h = open_ivf(spark, path)
-    order = sorted(h.centroids, key=lambda c: (_cos_dist(c[1], query_vec), c[0]))
-    probes = [cid for cid, _ in order[:nprobe]]
+    probes = nearest_cells(h, query_vec, nprobe)
     cells = _probed_cells(h.root, probes)
     if cells is not None:
         return _driver_topk(spark, cells, query_vec, k, vec_col, id_col,
                             h.schema[id_col].dataType.simpleString())
-    cand = spark.read.schema(h.schema).parquet(path).filter(F.col("cid").isin(probes))
+    cand = h.read(spark).filter(F.col("cid").isin(probes))
     return (knn_topk(cand, query_vec, k, vec_col, tiebreak=id_col)
             # partition-column type inference reads cid back as int;
             # restore the builder's bigint so the result schema is stable
@@ -336,14 +363,11 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     cid — with the index partitioned by cid, only probed cells are read.
     Final per-query top-k is one window over candidate rows. No
     driver-side collect: probe selection is part of the distributed plan,
-    unlike the single-query `ivf_search_materialized`. The centroid
-    files and the index are read with the :func:`open_ivf` handle's
-    schemas, so building the plan starts no schema-inference job.
-
-    The probe scores only queries x n_cells pairs with vector.py's SQL
-    fold; the candidate pairs are scored by the Arrow pair kernel, the
-    plan's one Python stage. Both are bit-exact to the same fold, so
-    the probes are the same either way.
+    unlike the single-query `ivf_search_materialized`. Index and
+    centroids are read with the :func:`open_ivf` handle's schemas, so
+    building the plan starts no job. The probes are scored with
+    vector.py's SQL fold, the candidate pairs by the bit-exact Arrow
+    pair kernel, the plan's one Python stage.
     """
     # imported here: the kernel module loads pandas. A Spark session has
     # already loaded it, and importing the module after that added about
@@ -352,14 +376,8 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
     from ..functions.kernels import pair_cosine
 
     h = open_ivf(spark, path)
-    cents = spark.read.schema(h.centroid_schema).parquet(*h.centroid_files)
-    qc = (queries.crossJoin(F.broadcast(cents))
-          .withColumn("cdist", cosine_distance(q_vec, "cvec")))
-    wq = W.partitionBy(q_id).orderBy(F.col("cdist").asc_nulls_last(), "cid")
-    probes = (qc.withColumn("prn", F.row_number().over(wq))
-              .filter(F.col("prn") <= nprobe)
-              .select(q_id, q_vec, "cid"))
-    cand = spark.read.schema(h.schema).parquet(path).join(F.broadcast(probes), "cid")
+    probes = nearest_cells_batch(h, queries, nprobe, q_id, q_vec)
+    cand = h.read(spark).join(F.broadcast(probes), "cid")
     scored = cand.withColumn("distance_score", pair_cosine(vec_col, q_vec))
     wk = W.partitionBy(q_id).orderBy(F.col("distance_score").asc_nulls_last(),
                                      id_col)
@@ -369,14 +387,22 @@ def ivf_knn_join_materialized(spark, path: str, queries: DataFrame,
                     F.round("distance_score", 6).alias("distance_score")))
 
 
+def first_id_centroids(corpus: DataFrame, vec_col: str = "embedding",
+                       id_col: str = "vec_id", n_cells: int = 16) -> DataFrame:
+    """The IVF centroids ``(cid, cvec)``: the vectors whose id is below
+    ``n_cells``. The assignment and the `_centroids` sidecar both read
+    these rows."""
+    return (corpus.filter(F.col(id_col) < n_cells)
+            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")))
+
+
 def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
                     id_col: str = "vec_id", n_cells: int = 16) -> DataFrame:
-    """Assign every vector to its nearest centroid (deterministic argmin:
-    distance then centroid id). Centroids = the `n_cells` smallest-id
-    vectors; trained centroids are ROADMAP new direction 3."""
-    cents = (corpus.filter(F.col(id_col) < n_cells)
-             .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"),
-                     l2_norm(vec_col).alias("cnorm")))
+    """The corpus, every column kept, plus ``cid``: its nearest centroid
+    of :func:`first_id_centroids` (argmin of distance, a zero norm last,
+    then centroid id). Trained centroids replace that function alone."""
+    cents = (first_id_centroids(corpus, vec_col, id_col, n_cells)
+             .withColumn("cnorm", l2_norm("cvec")))
     scored = (corpus.withColumn("vnorm", l2_norm(vec_col))
               .crossJoin(F.broadcast(cents))
               .withColumn("cdist",
@@ -385,4 +411,4 @@ def build_ivf_index(corpus: DataFrame, vec_col: str = "embedding",
     w = W.partitionBy(id_col).orderBy(F.col("cdist").asc_nulls_last(), "cid")
     return (scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select(id_col, vec_col, "cid"))
+            .select(*corpus.columns, "cid"))

@@ -799,6 +799,7 @@ def stream_embed_q(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 from ..operators import ann as ANN  # noqa: E402
+from ..schemas import EMBEDDINGS  # noqa: E402
 
 _PLANES = ANN.lsh_planes()
 _QBUCKET = ANN.py_lsh_bucket(QUERY_VEC, _PLANES)
@@ -900,6 +901,35 @@ def _simhash_sigs_path(spark, sf_dir) -> str:
         src=(DD.simhash_signatures,))
 
 
+def _lsh_index_path(spark, sf_dir) -> str:
+    """The corpus's materialized LSH index (the embeddings plus
+    `bucket`, partitioned by bucket), shared by ann_lsh and
+    ann_index_occupancy."""
+    return _materialized_index(
+        spark, sf_dir, "ann_lsh_index",
+        lambda p: ANN.materialize_lsh_index(
+            _t(spark, sf_dir, "embeddings"), p, planes=_PLANES),
+        src=(ANN.materialize_lsh_index,))
+
+
+# The LSH index as its writer lays it out, as DDL: the embeddings table
+# plus the bucket partition column, a string ('b' + sign bits).
+_LSH_INDEX_SCHEMA = ", ".join(
+    [f"`{f.name}` {f.dataType.simpleString()}" for f in EMBEDDINGS.fields]
+    + ["bucket string"])
+
+
+def _ivf_index_path(spark, sf_dir) -> str:
+    """The corpus's one IVF index (_build_ivfpq), built once per corpus
+    and code revision: every IVF and IVF-PQ key reads it through
+    ann.open_ivf, so Lloyd and the IVF assignment each run once."""
+    return _materialized_index(
+        spark, sf_dir, "ann_ivf_index",
+        lambda p: _build_ivfpq(spark, sf_dir, p),
+        src=(_build_ivfpq, _pq_codebooks, _pq_assign,
+             ANN.materialize_ivf_index))
+
+
 @query("ann_lsh",
        f"""SELECT vec_id, round({sql_cosine_distance('embedding', _QV)}, 6)
                     AS distance_score
@@ -913,11 +943,7 @@ def ann_lsh_q(spark, sf_dir):
     search is a partition-pruned scan of the query's sign-bit bucket —
     ~corpus/2^8 rows read, the rest never touched (PartitionFilters,
     pinned in tests/test_plan_shape.py)."""
-    path = _materialized_index(
-        spark, sf_dir, "ann_lsh_index",
-        lambda p: ANN.materialize_lsh_index(
-            _t(spark, sf_dir, "embeddings"), p, planes=_PLANES),
-        src=(ANN.materialize_lsh_index,))
+    path = _lsh_index_path(spark, sf_dir)
     return ANN.lsh_search_materialized(spark, path, QUERY_VEC, k=3,
                                        planes=_PLANES)
 
@@ -948,11 +974,7 @@ def ann_ivf_q(spark, sf_dir):
     once per corpus (write partitioned by cid), probes chosen driver-side
     from the 16 centroids, exact search inside the 2 probed cells — a
     statically partition-pruned read of nprobe/n_cells of the data."""
-    path = _materialized_index(
-        spark, sf_dir, "ann_ivf_index",
-        lambda p: ANN.materialize_ivf_index(
-            _t(spark, sf_dir, "embeddings"), p, n_cells=16),
-        src=(ANN.materialize_ivf_index,))
+    path = _ivf_index_path(spark, sf_dir)
     return ANN.ivf_search_materialized(spark, path, QUERY_VEC,
                                        k=3, n_cells=16, nprobe=2)
 
@@ -2957,11 +2979,7 @@ def ann_knn_join_q(spark, sf_dir):
     reading only probed cells, one per-query top-k window. The scale
     path past exact sim_join when the query side is large; shares the
     ann_ivf index build."""
-    path = _materialized_index(
-        spark, sf_dir, "ann_ivf_index",
-        lambda p: ANN.materialize_ivf_index(
-            _t(spark, sf_dir, "embeddings"), p, n_cells=16),
-        src=(ANN.materialize_ivf_index,))
+    path = _ivf_index_path(spark, sf_dir)
     queries = (_t(spark, sf_dir, "embeddings")
                .filter(F.col("vec_id") % 100 == 7)
                .select(F.col("vec_id").alias("qid"),
@@ -5309,11 +5327,7 @@ def ann_recall_eval(spark, sf_dir):
     corpus scan, no full sort), so the brute-force ground-truth side
     costs |sample| x |corpus| = O(corpus) at ANY scale; the old
     `vec_id % 100` rate sample made it quadratic in the corpus."""
-    path = _materialized_index(
-        spark, sf_dir, "ann_ivf_index",
-        lambda p: ANN.materialize_ivf_index(
-            _t(spark, sf_dir, "embeddings"), p, n_cells=16),
-        src=(ANN.materialize_ivf_index,))
+    path = _ivf_index_path(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     # r17 (guide §5): the 8-row eval sample is a TakeOrderedAndProject
     # over a FULL corpus scan, and every consuming arm (probe
@@ -5367,43 +5381,24 @@ def ann_recall_eval(spark, sf_dir):
            FROM a LEFT JOIN rm ON a.vec_id = rm.vec_id""")
 def semdedup_q(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    near-dedup scoped by k-means cells — cluster the embeddings (the
-    deterministic 16-seed IVF assignment, ann.py:build_ivf_index),
-    compare pairs ONLY within a cell, and from each duplicate pair
-    (cosine distance <= 0.60 — the paper's aggressive-eps
-    regime; the fixture's hash embeddings have no sub-0.5 pairs, so a
-    tight eps would gate nothing) keep the member FARTHEST from its
-    centroid — the paper's keep rule (§3: 'keep the example with the
-    lowest cosine similarity to the cluster centroid'), applied as a
-    pairwise tournament with (centroid_dist DESC, vec_id ASC)
-    dominance so the survivor set is deterministic and engine-exact
-    (distances pre-rounded to 6dp before any compare). Differs from
-    embedding_near_dup, which buckets by sign-prefix LSH and keeps
-    min-id. Scale: clustering comes FREE from the materialized ivfpq
-    index (same (vec_id, embedding, cid) layout, cid-partitioned on
-    disk — cluster assignment is an index-build cost, not a per-dedup
-    cost, exactly the SemDeDup deployment where the k-means pass is
-    shared infrastructure), so each cell's pair scan is one
-    co-located partition and the quadratic term is bounded per cell
-    (the paper runs 50k clusters over LAION for exactly this reason).
-    Since r13 that bound is ENFORCED, not assumed: dedup.py's
-    cell_occupancy_guard RAISES at plan-build time when any cell
-    exceeds 8x the balanced size (VERDICT r12 list #2 — a degenerate
-    embedding mode collapsing the corpus into one cell would
-    otherwise go quadratic on a single task; the histogram read is
-    bounded by n_cells and touches only the partition column's
-    row-group metadata). Vector norms are computed once per ROW and
-    reused across all that row's pairs — the pair predicate is ONE
-    dot fold, and 1 - dot/(na*nb) with hoisted norms is bit-identical
-    to the inline recomputation (same folds over the same doubles),
-    so the oracle compare stays exact. No all-pairs anywhere.
-    Implementation: operators/dedup.py:semdedup_keep."""
-    import os
-    path = _ivfpq_path(spark, sf_dir)
-    idx = spark.read.parquet(path).select("vec_id", "embedding", "cid")
-    cents = (spark.read.parquet(os.path.join(path, "_centroids"))
-             .select("cid", "cvec"))
-    return DD.semdedup_keep(idx, cents, eps=0.60)
+    near-dedup scoped by k-means cells — compare pairs ONLY within a
+    cell, and from each duplicate pair (cosine distance <= 0.60, the
+    paper's aggressive-eps regime: the fixture's hash embeddings have
+    no sub-0.5 pairs) keep the member FARTHEST from its centroid (§3),
+    as a (centroid_dist DESC, vec_id ASC) tournament on 6-dp distances,
+    so the survivor set is deterministic and engine-exact. Differs
+    from embedding_near_dup, which buckets by sign-prefix LSH and
+    keeps min-id. Scale: the cells are the corpus's one IVF index
+    (read through its ann.open_ivf handle), so cluster assignment is
+    an index-build cost and each cell's pair scan is one co-located
+    partition; dedup.py's cell_occupancy_guard raises before the pair
+    join when a cell exceeds 8x the balanced size, from a histogram of
+    the partition column alone. Norms are computed once per row, so
+    the pair predicate is one dot fold, bit-identical to the inline
+    form. Implementation: operators/dedup.py:semdedup_keep."""
+    h = ANN.open_ivf(spark, _ivf_index_path(spark, sf_dir))
+    idx = h.read(spark).select("vec_id", "embedding", "cid")
+    return DD.semdedup_keep(idx, h.read_centroids(spark), eps=0.60)
 
 
 @query("kmeans_assign",
@@ -6352,8 +6347,8 @@ def pq_encode_error_q(spark, sf_dir):
     codebooks = deterministic seeds + one DECIMAL-exact Lloyd round),
     with the per-vector reconstruction MSE the encoder leaves behind —
     the quality number a PQ deployment is sized by. Since r12 the
-    codes and codebooks come FROM the materialized ivfpq sidecar (the
-    VERDICT r11 caveat: no inline retraining — training ran once, at
+    codes and codebooks come FROM the corpus's IVF index and its
+    `_codebooks` sidecar (no inline retraining: training ran once, at
     index build): the error audit is posexplode(codes) + a bounded
     m*k broadcast join + the same sequential l2 fold, so the 4-term
     error sum still folds over the m-sorted array (fixed order on
@@ -6363,10 +6358,9 @@ def pq_encode_error_q(spark, sf_dir):
     Reference parity: the compression tier under COSINE_DISTANCE
     search (streamlit_app.py:64-67) at corpus scales the raw-vector
     scan cannot serve."""
-    import os
-    path = _ivfpq_path(spark, sf_dir)
-    cb = spark.read.parquet(os.path.join(path, "_codebooks"))
-    ex = (spark.read.parquet(path)
+    path = _ivf_index_path(spark, sf_dir)
+    cb = _codebooks(spark, path)
+    ex = (ANN.open_ivf(spark, path).read(spark)
           .select("vec_id", "embedding",
                   F.posexplode("codes").alias("m", "cid"))
           .select("vec_id", "m", "cid",
@@ -6416,34 +6410,16 @@ def pq_adc_topk_q(spark, sf_dir):
     each subspace codebook ONCE (m*k lookup rows), then every stored
     vector's distance estimate is 4 table lookups over its CODES, never
     its floats. The exact distance of each hit rides along, so the
-    approximation error is visible in the result itself. Since r12 the
-    codes/codebooks come FROM the materialized ivfpq sidecar (VERDICT
-    r11: no inline retraining) and the LUT is computed driver-side
-    from the bounded m*k `_codebooks` frame with the engines' own
-    sequential fold (_py_l2_sq, the ivfpq_topk contract) — the scan
-    projects (vec_id, codes) ONLY: 4 bytes per vector instead of 64
-    doubles, which is the entire point of ADC at 100 TB. The estimate
-    is 4 literal-LUT lookups summed in m order (fixed order, engine-
-    exact); the cut is TakeOrderedAndProject; the 10-row result joins
-    back to raw embeddings for the exact column."""
-    import os
-    path = _ivfpq_path(spark, sf_dir)
-    cbs = spark.read.parquet(os.path.join(path, "_codebooks")).collect()
-    qsubs = _pq_query_subs()
-    flat = [0.0] * (_PQ_M * _PQ_K)
-    for r in cbs:
-        flat[r["m"] * _PQ_K + r["cid"]] = _py_l2_sq(qsubs[r["m"]],
-                                                    r["cvec"])
-    flat_col = F.array(*[F.lit(v) for v in flat])
-    codes = spark.read.parquet(path).select("vec_id", "codes")
-    est = None
-    for m in range(_PQ_M):
-        term = F.element_at(flat_col,
-                            (F.lit(m * _PQ_K)
-                             + F.element_at("codes", m + 1) + 1)
-                            .cast("int"))
-        est = term if est is None else est + term
-    top = (codes.select("vec_id", F.round(est, 6).alias("approx_dist"))
+    approximation error is visible in the result itself. Codes and
+    codebooks come FROM the corpus's IVF index (no inline retraining)
+    and the estimate is _adc_estimate's; the scan projects (vec_id,
+    codes) ONLY: 4 bytes per vector instead of 64 doubles, the point
+    of ADC at 100 TB. The cut is TakeOrderedAndProject; the 10-row
+    result joins back to raw embeddings for the exact column."""
+    path = _ivf_index_path(spark, sf_dir)
+    est = _adc_estimate(spark, path)
+    codes = ANN.open_ivf(spark, path).read(spark).select("vec_id", "codes")
+    top = (codes.select("vec_id", est.alias("approx_dist"))
            .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
            .limit(10))
     emb = _t(spark, sf_dir, "embeddings")
@@ -6463,42 +6439,43 @@ def _py_l2_sq(a, b) -> float:
     return acc
 
 
+def _codebooks(spark, path) -> DataFrame:
+    """The index's `_codebooks` (m*k rows), read with the schema
+    _build_ivfpq writes: no inference job."""
+    return (spark.read.schema("m int, cid bigint, cvec array<double>")
+            .parquet(f"{path}/_codebooks"))
+
+
+def _adc_estimate(spark, path) -> Column:
+    """The one ADC estimate of a row's ``codes`` to QUERY_VEC, 6 dp: a
+    driver lookup table (LUT) of squared L2s from each query slice to
+    every codebook entry (_py_l2_sq, the engines' fold), then 4 LUT
+    lookups summed in m order."""
+    qsubs = _pq_query_subs()
+    flat = [0.0] * (_PQ_M * _PQ_K)
+    for r in _codebooks(spark, path).collect():
+        flat[r["m"] * _PQ_K + r["cid"]] = _py_l2_sq(qsubs[r["m"]],
+                                                    r["cvec"])
+    lut = F.array(*[F.lit(v) for v in flat])
+    terms = [F.element_at(lut, (F.lit(m * _PQ_K)
+                                + F.element_at("codes", m + 1) + 1)
+                          .cast("int")) for m in range(_PQ_M)]
+    return F.round(sum(terms[1:], terms[0]), 6)
+
+
 def _build_ivfpq(spark, sf_dir, path):
-    """Materialize the composed IVF+PQ index: rows (vec_id, codes,
-    embedding) partitioned by IVF cell, with the bounded sidecars
-    `_centroids` (16 rows) and `_codebooks` (m*k rows) underscore-
-    prefixed so index scans skip them (the ann_ivf layout)."""
-    import os
-    emb = _t(spark, sf_dir, "embeddings")
-    ivf = ANN.build_ivf_index(emb, "embedding", "vec_id", 16)
+    """The corpus's one IVF index: ann.materialize_ivf_index over
+    (vec_id, codes, embedding), plus the `_codebooks` sidecar."""
     x, c1 = _pq_codebooks(spark, sf_dir)
     codes = (_pq_assign(x, c1).groupBy("vec_id")
              .agg(F.array_sort(F.collect_list(F.struct("m", "cid")))
                   .alias("a"))
              .select("vec_id",
                      F.transform("a", lambda s: s["cid"]).alias("codes")))
-    (ivf.join(codes, "vec_id")
-     .select("vec_id", "codes", "embedding", "cid")
-     .write.mode("overwrite").partitionBy("cid").parquet(path))
-    (emb.filter(F.col("vec_id") < 16)
-     .select(F.col("vec_id").alias("cid"),
-             F.col("embedding").alias("cvec"))
-     .coalesce(1)
-     .write.mode("overwrite").parquet(os.path.join(path, "_centroids")))
-    (c1.coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "_codebooks")))
-
-
-def _ivfpq_path(spark, sf_dir) -> str:
-    """The materialized IVF+PQ index — build-once per corpus + code
-    revision — shared by ivfpq_topk and (since r12, the VERDICT r11
-    'codebooks retrained inline' fix) the pq_encode_error /
-    pq_adc_topk audits: Lloyd runs exactly once, at index build."""
-    return _materialized_index(
-        spark, sf_dir, "ivfpq_index",
-        lambda p: _build_ivfpq(spark, sf_dir, p),
-        src=(_build_ivfpq, _pq_codebooks, _pq_assign,
-             ANN.build_ivf_index))
+    corpus = (_t(spark, sf_dir, "embeddings").join(codes, "vec_id")
+              .select("vec_id", "codes", "embedding"))
+    ANN.materialize_ivf_index(corpus, path, n_cells=16)
+    c1.coalesce(1).write.mode("overwrite").parquet(f"{path}/_codebooks")
 
 
 @query("ivfpq_topk",
@@ -6540,49 +6517,21 @@ def ivfpq_topk_q(spark, sf_dir):
     """The composed index a 100 TB vector search actually deploys
     (FAISS's IVF+PQ layout, Jegou et al. 2011 §V): IVF cell pruning x
     PQ code scan x exact re-rank. Probe selection runs driver-side
-    over the 16-row `_centroids` sidecar (bounded collect, the ann_ivf
-    contract) -> the cid filter statically prunes the partitioned
+    over the index handle's 16 centroids (ann.nearest_cells, the
+    ann_ivf rule) -> the cid filter statically prunes the partitioned
     index to 4 of 16 cells -> inside probed cells the ADC estimate is
     4 literal-array lookups over each row's CODES (the scan projects
     vec_id+codes — at 100 TB that is cells/4 of the corpus at 4 bytes
     per vector, not 64 doubles) -> the 30-row ADC shortlist joins back
     to raw embeddings for the exact cosine top-5, approx_dist riding
-    along so the estimator error is visible. LUT values are computed
-    driver-side from the `_codebooks` sidecar with the same sequential
-    fold the engines use — engine-exact end to end."""
-    path = _ivfpq_path(spark, sf_dir)
-    import os
-    cents = spark.read.parquet(os.path.join(path, "_centroids")).collect()
-
-    def cos_dist(a, b):
-        import math
-        na = math.sqrt(sum(float(x) * float(x) for x in a)) or 1.0
-        nb = math.sqrt(sum(float(x) * float(x) for x in b)) or 1.0
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + float(x) * float(y)
-        return 1.0 - s / (na * nb)
-
-    probes = [r.cid for r in sorted(
-        cents, key=lambda r: (cos_dist(r.cvec, QUERY_VEC), r.cid))[:4]]
-    cbs = spark.read.parquet(os.path.join(path, "_codebooks")).collect()
-    qsubs = _pq_query_subs()
-    flat = [0.0] * (_PQ_M * _PQ_K)
-    for r in cbs:
-        flat[r["m"] * _PQ_K + r["cid"]] = _py_l2_sq(qsubs[r["m"]],
-                                                    r["cvec"])
-    flat_col = F.array(*[F.lit(v) for v in flat])
-    cand = (spark.read.parquet(path)
-            .filter(F.col("cid").isin(probes)))
-    est = None
-    for m in range(_PQ_M):
-        term = F.element_at(flat_col,
-                            (F.lit(m * _PQ_K)
-                             + F.element_at("codes", m + 1) + 1)
-                            .cast("int"))
-        est = term if est is None else est + term
-    short = (cand.select("vec_id",
-                         F.round(est, 6).alias("approx_dist"))
+    along so the estimator error is visible (_adc_estimate's,
+    engine-exact)."""
+    path = _ivf_index_path(spark, sf_dir)
+    h = ANN.open_ivf(spark, path)
+    est = _adc_estimate(spark, path)
+    cand = (h.read(spark)
+            .filter(F.col("cid").isin(ANN.nearest_cells(h, QUERY_VEC, 4))))
+    short = (cand.select("vec_id", est.alias("approx_dist"))
              .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
              .limit(30))
     emb = _t(spark, sf_dir, "embeddings")
@@ -8153,12 +8102,8 @@ def ann_index_occupancy(spark, sf_dir):
     You read this BEFORE trusting ann_lsh's latency at scale. Served
     from the materialized bucket-partitioned index (no re-hashing);
     two cascaded aggregates, integers until one division."""
-    path = _materialized_index(
-        spark, sf_dir, "ann_lsh_index",
-        lambda p: ANN.materialize_lsh_index(
-            _t(spark, sf_dir, "embeddings"), p, planes=_PLANES),
-        src=(ANN.materialize_lsh_index,))
-    idx = spark.read.parquet(path)
+    idx = spark.read.schema(_LSH_INDEX_SCHEMA).parquet(
+        _lsh_index_path(spark, sf_dir))
     occ = (idx.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
     return occ.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
@@ -10165,22 +10110,18 @@ def ivfpq_recall_eval_q(spark, sf_dir):
     before a compressed index ships, run on the sampled query set
     (_eval_query_sample: a FIXED-SIZE deterministic md5-ordered draw
     of 8 — VERDICT r13 list #1 — so the brute-force ground-truth side
-    is O(corpus), not corpus², and the bounded sample is what
-    licenses the broadcast of per-query probe/LUT/top-k frames
-    below). The full
-    deployed pipeline is evaluated, not just the estimator: per-query
-    IVF probe pruning (4 of 16 cells) -> ADC shortlist of 10 by the
-    4-lookup code-distance sum (the scan projects vec_id+codes from
-    the materialized sidecar — no vector bytes) -> exact cosine
+    is O(corpus), not corpus², and the bounded sample licenses the
+    broadcast of per-query probe/LUT/top-k frames below). The full
+    deployed pipeline is evaluated: per-query probes (4 of 16 cells,
+    ann.nearest_cells_batch) -> ADC shortlist of 10 (the scan projects
+    vec_id+codes from the IVF index, no vector bytes) -> exact cosine
     re-rank to top-3 -> per-(qid, vec_id) join against brute-force
-    top-3. Engine-exact: LUT distances are the same sequential l2
-    folds as the index build (computed IN Spark here — the query set
-    is a frame, not one driver-side literal like pq_adc_topk's), the
-    4-term ADC sums fold over the m-sorted struct array (fixed order
-    both engines), and every top-k is (rounded dist ASC, vec_id ASC)
-    deterministic. All windows partition by qid — the slicing key."""
-    import os
-    path = _ivfpq_path(spark, sf_dir)
+    top-3. Engine-exact: the LUT is computed IN Spark with the
+    sequential l2 fold (the query set is a frame), the 4-term ADC sums
+    fold over the m-sorted struct array, and every top-k is (rounded
+    dist ASC, vec_id ASC). All windows partition by qid."""
+    path = _ivf_index_path(spark, sf_dir)
+    h = ANN.open_ivf(spark, path)
     emb = _t(spark, sf_dir, "embeddings")
     # r17 (guide §5): the 8-row eval sample's TakeOrderedAndProject
     # corpus scan was re-embedded by FIVE consuming arms (probe
@@ -10188,17 +10129,8 @@ def ivfpq_recall_eval_q(spark, sf_dir):
     # materialize it once per run. 8 rows; results unchanged.
     queries = CK.checkpoint(_eval_query_sample(emb),
                             scope="ivfpq_recall_eval")
-    cents = (spark.read.parquet(os.path.join(path, "_centroids"))
-             .select(F.col("cid"), F.col("cvec")))
-    pw = W.partitionBy("qid").orderBy(F.col("pd").asc_nulls_last(),
-                                      F.col("cid").asc())
-    probes = (queries.crossJoin(F.broadcast(cents))
-              .select("qid", "cid",
-                      V.cosine_distance("qvec", "cvec")
-                      .alias("pd"))
-              .withColumn("rn", F.row_number().over(pw))
-              .filter(F.col("rn") <= 4).select("qid", "cid"))
-    cb = spark.read.parquet(os.path.join(path, "_codebooks"))
+    probes = ANN.nearest_cells_batch(h, queries, 4).select("qid", "cid")
+    cb = _codebooks(spark, path)
     qsub = (queries.select(
         "qid",
         F.explode(F.array(*[F.lit(m) for m in range(_PQ_M)])).alias("m"),
@@ -10209,7 +10141,7 @@ def ivfpq_recall_eval_q(spark, sf_dir):
     lut = (qsub.join(F.broadcast(cb), "m")
            .select("qid", "m", F.col("cid").alias("code"),
                    V.l2_sq("qs", "cvec").alias("ld")))
-    idx = spark.read.parquet(path).select("vec_id", "codes", "cid")
+    idx = h.read(spark).select("vec_id", "codes", "cid")
     ex = (idx.join(F.broadcast(probes), "cid")
           .select("qid", "vec_id",
                   F.posexplode("codes").alias("m", "code")))
